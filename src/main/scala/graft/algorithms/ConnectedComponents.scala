@@ -26,10 +26,12 @@ case class ConnectedComponentsResult(components: DataFrame, iterations: Int)
   * Expected O(log n) iterations. Each round's frames are LAZILY
   * checkpointed with declared hash-partitioning AND sort order (the Spark
   * analogue of the reference's hash-partitioned pre-sorted parquet spill,
-  * `hash_partitioned.rs:146-361`) — lineage truncates immediately, the
-  * single termination count materializes everything in one job, the
-  * per-round joins plan without edge-side exchanges or sorts, and
-  * superseded checkpoint blocks are released explicitly.
+  * `hash_partitioned.rs:146-361`) — lineage truncates immediately, each
+  * checkpoint's plan is static and schedules nothing when built, the
+  * round's single termination count (`checkpointing.roundCounts`) runs
+  * the whole round as ONE job, the per-round joins plan without edge-side
+  * exchanges or sorts, and superseded checkpoint blocks are released
+  * explicitly.
   */
 class ConnectedComponents(graph: GraphFrame) {
   private var useLabelsAsComponents = true
@@ -156,8 +158,9 @@ class ConnectedComponents(graph: GraphFrame) {
     def ckptBySrc(df: DataFrame, eager: Boolean): DataFrame =
       org.apache.spark.sql.graft.checkpointing.localCheckpointHashPartitioned(
         df, Seq(SRC), numParts, eager)
-    // LAZY: the termination count below materializes the checkpoint — an
-    // eager checkpoint would schedule the same work as a separate job first.
+    // LAZY: the first termination count below materializes the checkpoint
+    // in its one job — an eager checkpoint would schedule the same work as
+    // separate adaptive jobs first.
     var edges = ckptBySrc(
       GraphFrame.symmetrizeEdges(graph.edges.select(SRC, DST), doDistinct = false)
         .repartition(numParts, col(SRC)),
@@ -166,7 +169,8 @@ class ConnectedComponents(graph: GraphFrame) {
     val rng = new scala.util.Random(seed)
     var forwardReps = Vector.empty[DataFrame]
     var affineParams = Vector.empty[(Long, Long)]
-    var graphSize = graft.util.PhaseTiming.phase("wcc:first-count")(edges.count())
+    var graphSize = graft.util.PhaseTiming.phase("wcc:first-count")(
+      org.apache.spark.sql.graft.checkpointing.roundCounts(edges).head)
     var iteration = 0
 
     // Mid-loop hybrid cutover: contraction shrinks the edge set roughly
@@ -191,9 +195,10 @@ class ConnectedComponents(graph: GraphFrame) {
 
         // LAZY localCheckpoints: the logical plan is truncated immediately
         // (reps appears twice in the relabel join — without truncation the
-        // plan tree doubles every iteration), but nothing executes until the
-        // single termination count() below, which materializes both frames in
-        // ONE job instead of three eager jobs per iteration.
+        // plan tree doubles every iteration), and each checkpoint is built
+        // from a static plan, so nothing executes until the single
+        // termination count below, which runs both frames and all their
+        // shuffles as stages of ONE non-adaptive job.
         // reps inherits edges' src-partitioning through the groupBy (the
         // grouping key is aliased to `v`), so its checkpoint declares the
         // same layout and the src-relabel join plans with no exchange at all.
@@ -204,7 +209,7 @@ class ConnectedComponents(graph: GraphFrame) {
 
         val previous = edges
         edges = ckptBySrc(relabelEdges(edges, reps, numParts), eager = false)
-        graphSize = edges.count()
+        graphSize = org.apache.spark.sql.graft.checkpointing.roundCounts(edges).head
         // Real release: checkpoint blocks belong to the RDD, which plain
         // Dataset.unpersist never reaches (it is a CacheManager no-op here).
         org.apache.spark.sql.graft.checkpointing.release(previous)
@@ -212,8 +217,8 @@ class ConnectedComponents(graph: GraphFrame) {
     }
 
     // Back pass: a chain of left joins over the CACHED forward reps. All
-    // frames stay lazy; the single materialization at the end runs the whole
-    // unwind as one job. Unpersists are deferred until after that action —
+    // frames stay lazy; the eager result checkpoint at the end runs the
+    // whole unwind. Unpersists are deferred until after that action —
     // releasing an input earlier would force recomputation of the (already
     // unpersisted) forward edge frames.
     val n = forwardReps.length

@@ -58,22 +58,14 @@ class Hits(graph: GraphFrame) {
     // carry-through), so an un-truncated chain doubles the plan per
     // half-step — at iterations(2) the all-ones init (and the vertex
     // distinct under it) appeared 16 times in ONE plan, each copy
-    // re-shuffling (r19 optimization round; the old every-3rd-round
-    // cadence never fired for iters <= 3). A lazy no-stats checkpoint
+    // re-shuffling (r19 optimization round). A lazy no-stats checkpoint
     // per half-step makes both references share one RDD — plan linear
-    // in iterations, everything still materializes in the caller's
-    // single job.
-    // Storage note: each half-step's checkpoint caches a V-sized
-    // MEMORY_AND_DISK block set that superseded iterations never need
-    // again, but the RETURNED frame is lazy — an explicit release here
-    // would evict blocks the caller's materialization still has to read
-    // (an eager variant with per-round release was rejected in r19: it
-    // adds a full extra materialization per round). Superseded blocks
-    // are reclaimed by the ContextCleaner once the loop's local frame
-    // references go out of scope — a deliberate, documented reliance;
-    // bounded at 2·iters V-sized block sets for the capped iteration
-    // counts this algorithm contracts (iters is a fixed small constant,
-    // not a fixpoint).
+    // in iterations. Each iteration ends in ONE counting job that runs
+    // both half-steps' static plans; after it the superseded frames are
+    // released, so at most two V-sized block sets are live. Without that
+    // action the unmaterialized checkpoints would chain across all
+    // iterations into one job whose task graph grows with the iteration
+    // count (a stack overflow at 45 iterations).
     def ckpt(df: DataFrame): DataFrame =
       org.apache.spark.sql.graft.checkpointing
         .localCheckpointNoStats(df, eager = false)
@@ -95,9 +87,12 @@ class Hits(graph: GraphFrame) {
           col(GraphFrame.DST) === col("__d_id"))
         .groupBy(col(GraphFrame.SRC).as(ID))
         .agg(try_sum(col("__d_auth")).as("__new_hub"), count(lit(1)).as("__nh_cnt"))
+      val previous = state
       state = ckpt(withAuth.select(col(ID), col("auth"))
         .join(hub.withColumnRenamed(ID, "__h_id"), col(ID) === col("__h_id"), "left")
         .select(col(ID), col("auth"), guarded("__new_hub", "__nh_cnt", "hub").as("hub")))
+      org.apache.spark.sql.graft.checkpointing.roundCounts(state)
+      Seq(previous, withAuth).foreach(org.apache.spark.sql.graft.checkpointing.release)
       i += 1
     }
     if (!normalize) state

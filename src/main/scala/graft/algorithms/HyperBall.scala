@@ -92,24 +92,24 @@ class HyperBall(graph: GraphFrame) {
     * references its input state twice (the union branch and the join
     * side), so an un-truncated chain DOUBLES the plan per round —
     * radius 3 evaluated the initial state 8 times and scanned the edge
-    * parquet 12 times in ONE plan (measured, r19 optimization round;
-    * the old every-3rd-round cadence never fired for r <= 3). A lazy
-    * checkpoint per round makes both references share one RDD — the
-    * plan is linear in r and each round computes exactly once, inside
-    * the caller's single materializing job (no extra eager pass).
-    * Superseded rounds' cached blocks are reclaimed by the
-    * ContextCleaner once the loop's frame references go out of scope
-    * (deliberate — an explicit release would evict blocks the caller's
-    * lazy result still reads; bounded at r V·2^p-sized sets for the
-    * small fixed radii this sketch contracts).
+    * parquet 12 times in ONE plan (measured, r19 optimization round). A
+    * lazy checkpoint per round makes both references share one RDD —
+    * the plan is linear in r and each round computes exactly once, in
+    * the ONE counting job that ends the round; the superseded round is
+    * released after it, so at most two V·2^p-sized block sets are live
+    * (see Hits for why the chain must not run unmaterialized across
+    * rounds).
     */
   def registers(): DataFrame = {
     val edges = graph.edges.select(GraphFrame.SRC, GraphFrame.DST)
     var state = initState()
     var i = 0
     while (i < r) {
+      val previous = state
       state = org.apache.spark.sql.graft.checkpointing
         .localCheckpointNoStats(mergeRound(state, edges), eager = false)
+      org.apache.spark.sql.graft.checkpointing.roundCounts(state)
+      org.apache.spark.sql.graft.checkpointing.release(previous)
       i += 1
     }
     state

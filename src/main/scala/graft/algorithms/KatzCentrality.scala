@@ -61,14 +61,11 @@ class KatzCentrality(graph: GraphFrame) {
     // state twice (message join + vertex carry), so an un-truncated
     // chain doubles the plan per round — the Hits/HyperBall disease, at
     // iterations(3) 8 copies of the vertex-distinct init in one plan
-    // (r19 optimization round; the old every-3rd-round cadence never
-    // fired for iters <= 3). Both references now share one RDD per
-    // round; everything still materializes in the caller's single job.
-    // Superseded rounds' cached blocks are reclaimed by the
-    // ContextCleaner once the loop's frame references go out of scope
-    // (deliberate — an explicit release would evict blocks the caller's
-    // lazy result still reads; bounded at iters V-sized sets for the
-    // fixed small iteration counts this algorithm contracts).
+    // (r19 optimization round). Both references now share one RDD per
+    // round. Each round ends in ONE counting job that runs its static
+    // plan; after it the superseded state is released, so at most two
+    // V-sized block sets are live (see Hits for why the chain must not
+    // run unmaterialized across rounds).
     def ckpt(df: DataFrame): DataFrame =
       org.apache.spark.sql.graft.checkpointing
         .localCheckpointNoStats(df, eager = false)
@@ -81,11 +78,14 @@ class KatzCentrality(graph: GraphFrame) {
         .groupBy(col(GraphFrame.DST).as("__kz_id"))
         .agg(try_sum(col("__kz_v")).as("__kz_sum"),
           count(lit(1)).as("__kz_cnt"))
+      val previous = state
       state = ckpt(state.select(col(ID))
         .join(msgs, col(ID) === col("__kz_id"), "left")
         .select(col(ID), guarded("__kz_sum", "__kz_cnt").as("__kz_g"))
         .select(col(ID),
           (lit(1000000L) + expr(s"__kz_g div $aDen")).as("katz")))
+      org.apache.spark.sql.graft.checkpointing.roundCounts(state)
+      org.apache.spark.sql.graft.checkpointing.release(previous)
       i += 1
     }
     state

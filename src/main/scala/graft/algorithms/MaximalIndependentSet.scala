@@ -27,11 +27,14 @@ case class MISResult(vertices: DataFrame, iterations: Int)
   *     cluster layouts, and safe under task retry/recompute — which is what
   *     lets every per-round frame be LAZILY checkpointed (no eager "freeze
   *     the randomness" materializations).
-  *   - One driver action per round: the three loop-carried frames are
-  *     materialized by a single combined count (the same discipline as
-  *     [[ConnectedComponents]]), not ~9 eager checkpoints+counts — at
-  *     ~1.5 s of fixed driver latency per action, this is the difference
-  *     between O(rounds) and O(9·rounds) of scheduling overhead.
+  *   - One Spark job per round: every per-round checkpoint is lazy, built
+  *     from a static plan that schedules nothing, and the three
+  *     loop-carried frames plus the member delta are materialized by a
+  *     single combined count (`checkpointing.roundCounts`, the same
+  *     discipline as [[ConnectedComponents]]) whose one non-adaptive job
+  *     runs every shuffle of the round as a stage — not ~9 eager
+  *     checkpoints+counts, each an adaptive plan running its shuffle
+  *     stages as jobs of their own.
   */
 class MaximalIndependentSet(graph: GraphFrame) {
   private var seed = 42L
@@ -359,13 +362,10 @@ class MaximalIndependentSet(graph: GraphFrame) {
 
       // ---- the round's ONE materializing action: the three loop-carried
       // checkpoints AND the round's member delta (and, transitively, every
-      // intermediate above) execute in this single job.
-      val counts = edges.select(count(lit(1)).as("e"))
-        .crossJoin(verticesLeft.select(count(lit(1)).as("v")))
-        .crossJoin(newMembers.select(count(lit(1)).as("m")))
-        .collect()(0)
-      val eLeft = counts.getLong(0)
-      val vLeft = counts.getLong(1)
+      // intermediate above) execute as stages of this single non-adaptive
+      // job; no checkpoint above ran anything when it was built.
+      val Seq(eLeft, vLeft, _) = org.apache.spark.sql.graft.checkpointing
+        .roundCounts(edges, verticesLeft, newMembers)
 
       // Everything superseded or intermediate is materialized by now and
       // nothing downstream references it: free the blocks for real.

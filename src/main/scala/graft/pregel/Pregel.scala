@@ -2,7 +2,6 @@ package graft.pregel
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.graph.GraphFrame
 
@@ -32,10 +31,16 @@ object MessageDirection extends Enumeration {
   *   - The reference spills hash-partitioned pre-sorted parquet per iteration
   *     so DataFusion's sort-merge joins skip shuffle+sort
   *     (`hash_partitioned.rs:77-361`). Here the loop-invariant edge
-  *     projection is cached once, hash-partitioned by `src`, and the state
-  *     frame is `localCheckpoint`ed each interval — `LogicalRDD` preserves
-  *     `outputPartitioning`, so the per-iteration state⋈messages join on `id`
-  *     reuses the partitioning without a shuffle.
+  *     projection is checkpointed once, hash-partitioned by `src` and
+  *     sorted within partitions, both DECLARED on its `LogicalRDD`, so the
+  *     per-iteration state⋈edges sort-merge join plans with no edge-side
+  *     exchange or sort (with [[withCoPartitionedState]] the state
+  *     checkpoint declares its `id` partitioning too).
+  *   - Every checkpoint in the loop is LAZY: built from a static plan, it
+  *     schedules nothing, and the round's one count runs it, so each round
+  *     is exactly ONE Spark job (the activity count in voting mode, a plain
+  *     count of the new checkpoint in fixed-iteration mode), after which
+  *     the previous state is released.
   *   - Messages of the same target direction are packed into ONE projection
   *     (a column per message name) instead of the reference's
   *     per-message-struct `union_by_name` workaround (`pregel.rs:441-464`);
@@ -62,7 +67,6 @@ class Pregel(graph: GraphFrame) extends Serializable {
   private var reliableDir: Option[String] = None
   private var coPartitionState = false
   private var edgesPrePartitioned = false
-  private var edgeStorageLevel = StorageLevel.MEMORY_AND_DISK
 
   def maxIterations(n: Int): this.type = { maxIter = Some(n); this }
 
@@ -147,8 +151,6 @@ class Pregel(graph: GraphFrame) extends Serializable {
     reliableDir = Some(dir); this
   }
 
-  def withEdgeStorageLevel(level: StorageLevel): this.type = { edgeStorageLevel = level; this }
-
   def run(includeDebugColumns: Boolean = false): PregelResult = {
     require(msgs.nonEmpty, "No messages defined for Pregel algorithm")
     require(aggExprs.nonEmpty || msgs.size <= 1,
@@ -206,14 +208,20 @@ class Pregel(graph: GraphFrame) extends Serializable {
     participation.foreach(p => state = state.withColumn(p.name, p.init))
 
     // ---- loop-invariant edges: project with edge prefixes, co-partition by
-    // the join key once, cache. At cluster scale this is the big table — it
-    // is shuffled exactly once for the whole run.
+    // the join key once, sort within partitions, checkpoint. At cluster
+    // scale this is the big table — it is shuffled and sorted exactly once
+    // for the whole run. The checkpoint DECLARES both, so the per-round
+    // state⋈edges sort-merge join plans with no edge-side exchange or sort,
+    // and its leaf carries no size estimate, so a round's static plan never
+    // re-broadcasts the edges (a job of its own every round). Lazy: the
+    // first round's action materializes it.
+    val edgeSrc = s"${EDGE_P}_${GraphFrame.SRC}"
     val edgesProjected = graph.edges
       .select(edgeCols.map(n => col(n).as(s"${EDGE_P}_$n")): _*)
-    val edges = (if (edgesPrePartitioned) edgesProjected
-      else edgesProjected
-        .repartition(shufflePartitions, col(s"${EDGE_P}_${GraphFrame.SRC}")))
-      .persist(edgeStorageLevel)
+    val edges = org.apache.spark.sql.graft.checkpointing.localCheckpointHashPartitioned(
+      if (edgesPrePartitioned) edgesProjected
+      else edgesProjected.repartition(shufflePartitions, col(edgeSrc)),
+      Seq(edgeSrc), shufflePartitions, eager = false)
 
     // ---- update projection: vertex columns, voting, participation, id.
     var updateCols = vertexCols.map(vc => vc.update.as(vc.name))
@@ -223,8 +231,9 @@ class Pregel(graph: GraphFrame) extends Serializable {
 
     // After the first update only id + declared columns remain, so original
     // vertex property columns are visible to messages in iteration 1 only —
-    // reference semantics (`pregel.rs:266-270`, `440-499`).
-    state = ckpt(state, eager = true)
+    // reference semantics (`pregel.rs:266-270`, `440-499`). Lazy like every
+    // round's checkpoint: the first round's action materializes it.
+    state = ckpt(state, eager = false)
     var previous: DataFrame = state
 
     val dstTargeted = msgs.filter(m => m.direction != MessageDirection.DstToSrc)
@@ -320,23 +329,25 @@ class Pregel(graph: GraphFrame) extends Serializable {
       var newState = withMessages.select(updateCols: _*)
       var toRelease: DataFrame = null
       if (iteration % ckptInterval == 0) {
-        // Voting mode: LAZY checkpoint — the activity count below
-        // materializes it in the same job DAG, halving driver round-trips.
-        // Fixed-iteration mode: EAGER, so the previous state can be
-        // released immediately (a lazy checkpoint still reads the parent's
-        // blocks when it finally materializes).
-        newState = ckpt(newState, eager = votingCol.isEmpty)
+        // LAZY checkpoint: its static plan runs as stages of the round's
+        // one action below, which materializes it before the previous
+        // state is released.
+        newState = ckpt(newState, eager = false)
         toRelease = previous
         previous = newState
       }
       state = newState
 
-      votingCol.foreach { ac =>
-        val active = state.filter(col(ac)).count()
-        if (active == 0) converged = true
+      // The round's ONE job: the active count in voting mode; in
+      // fixed-iteration mode a plain count that only materializes the
+      // checkpoint (rounds between checkpoints run nothing).
+      if (votingCol.isDefined || (toRelease ne null)) {
+        val counted = votingCol.fold(state)(ac => state.filter(col(ac)))
+        val active = org.apache.spark.sql.graft.checkpointing.roundCounts(counted).head
+        if (votingCol.isDefined && active == 0) converged = true
       }
-      // By here the new checkpoint is materialized either way. Release is
-      // the REAL one: localCheckpoint blocks belong to the RDD and plain
+      // By here the new checkpoint is materialized. Release is the REAL
+      // one: localCheckpoint blocks belong to the RDD and plain
       // Dataset.unpersist never reaches them (CacheManager no-op).
       if ((toRelease ne null) && (toRelease ne state))
         org.apache.spark.sql.graft.checkpointing.release(toRelease)
@@ -351,7 +362,7 @@ class Pregel(graph: GraphFrame) extends Serializable {
         org.apache.spark.sql.graft.checkpointing.release(previous)
         r
       }
-    edges.unpersist()
+    org.apache.spark.sql.graft.checkpointing.release(edges)
     if (!includeDebugColumns)
       result = result.select((vertexCols.map(vc => col(vc.name)) :+ col(ID)): _*)
     PregelResult(result, iteration)

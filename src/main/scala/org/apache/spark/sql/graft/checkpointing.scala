@@ -1,22 +1,39 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.rdd.{RDD, UnionRDD}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, SortOrder}
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecutionRDD}
+import org.apache.spark.sql.execution.reuse.ReuseExchangeAndSubquery
 import org.apache.spark.sql.functions.col
 
-/** Checkpointing that DECLARES the physical partitioning AND sort order.
+/** Lineage-truncating local checkpoints for iterative loops, plus the one
+  * action that ends a loop round.
   *
-  * `Dataset.localCheckpoint` under AQE produces a `LogicalRDD` whose output
-  * partitioning is unknown (AQE's final partitioning isn't visible at plan
-  * capture time), so iterative algorithms that carefully co-partition their
-  * loop state still pay a full exchange on every post-checkpoint
-  * groupBy/join. This helper truncates lineage the same way but constructs
-  * the `LogicalRDD` with an explicit `HashPartitioning` over the given key
-  * columns — downstream operators clustered on those keys then plan with NO
-  * exchange.
+  * EAGER vs LAZY. An eager checkpoint (`eager = true`) runs its frame
+  * under adaptive execution right away and returns a frame over the stored
+  * blocks. A LAZY checkpoint (`eager = false`) truncates the logical plan
+  * immediately but schedules NOTHING: its RDD is built from the frame's
+  * static (non-adaptive) physical plan, so building it runs no job, and
+  * every shuffle its plan needs becomes a stage of whatever action first
+  * reads it. An adaptive plan cannot be lazy this way: turning it into an
+  * RDD (`QueryExecution.toRdd`) runs each of its shuffle stages as a job
+  * of its own, at the moment the checkpoint is built. A lazy checkpoint's
+  * plan is therefore fixed when it is built — no runtime re-planning, no
+  * runtime broadcast, no partition coalescing — and a loop round that
+  * checkpoints lazily and ends in [[roundCounts]] runs as ONE job.
+  *
+  * DECLARED LAYOUT. `Dataset.localCheckpoint` under AQE produces a
+  * `LogicalRDD` whose output partitioning is unknown, so iterative
+  * algorithms that carefully co-partition their loop state still pay a
+  * full exchange on every post-checkpoint groupBy/join.
+  * [[localCheckpointHashPartitioned]] truncates lineage the same way but
+  * constructs the `LogicalRDD` with an explicit `HashPartitioning` over the
+  * given key columns — downstream operators clustered on those keys then
+  * plan with NO exchange.
   *
   * Additionally (mirroring the reference's hash-partitioned AND pre-sorted
   * spill files, `/root/reference/src/memory/hash_partitioned.rs:146-361`,
@@ -31,40 +48,95 @@ import org.apache.spark.sql.functions.col
   * into `numParts` partitions (e.g. via `repartition(numParts, keys*)`
   * directly upstream); declaring a partitioning the data doesn't have
   * yields wrong results. Spark preserves user-specified repartitions under
-  * AQE, so `repartition(...)` immediately upstream satisfies the contract.
-  * The partition COUNT half of the contract is asserted here (a mismatch
-  * would silently mis-route rows in exchange-elided joins); the hash
-  * function half is not mechanically checkable without a full scan and
-  * remains the caller's obligation.
+  * AQE and plans them verbatim in a static plan, so `repartition(...)`
+  * immediately upstream satisfies the contract. The partition COUNT half
+  * of the contract is asserted here (a mismatch would silently mis-route
+  * rows in exchange-elided joins); the hash function half is not
+  * mechanically checkable without a full scan and remains the caller's
+  * obligation.
   *
   * Lives in the `org.apache.spark.sql` tree for `private[sql]` access to
-  * `LogicalRDD` construction and `Dataset.ofRows` (same pattern as
-  * [[compat]]).
+  * `LogicalRDD` construction, `Dataset.ofRows` and the physical planner
+  * (same pattern as [[compat]]).
   */
 object checkpointing {
+
+  private def execution(df: DataFrame): QueryExecution =
+    df.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]].queryExecution
+
+  /** The frame's physical plan prepared WITHOUT adaptive execution
+    * (exchange reuse kept), executed into an RDD. Building it runs no job
+    * unless the plan holds a broadcast exchange or a subquery: Spark starts
+    * those as soon as the plan executes. Loop state never triggers one —
+    * its stats-free checkpoint leaves are never auto-broadcast — but a
+    * small input joined in (an explicit `broadcast` hint, a small table)
+    * still runs its own job here. The session's
+    * `spark.sql.adaptive.enabled` is left alone: other threads and
+    * streams share it.
+    */
+  private def staticRows(qe: QueryExecution): RDD[InternalRow] = {
+    val plan = ReuseExchangeAndSubquery(
+      QueryExecution.prepareExecutedPlan(qe.sparkSession, qe.sparkPlan.clone()))
+    // Same wrapper as QueryExecution.toRdd: tasks see the session's SQL
+    // confs even when no SQL execution is active around the job.
+    new SQLExecutionRDD(plan.execute(), qe.sparkSession.sessionState.conf)
+  }
+
+  /** The rows a checkpoint stores: adaptive and run now when `eager`, from
+    * the static plan and run by the next action otherwise (see the object
+    * doc), copied because operators reuse their row buffers.
+    */
+  private def checkpointRows(qe: QueryExecution, eager: Boolean): RDD[InternalRow] =
+    (if (eager) qe.toRdd else staticRows(qe)).map(_.copy())
+
+  /** A frame over `rdd` that carries no inherited statistics (see
+    * [[localCheckpointNoStats]]).
+    */
+  private def ofRdd(qe: QueryExecution, rdd: RDD[InternalRow],
+      partitioning: Partitioning, ordering: Seq[SortOrder]): DataFrame = {
+    val spark = qe.sparkSession
+    ClassicDataset.ofRows(spark,
+      LogicalRDD(qe.analyzed.output, rdd, partitioning, ordering, isStreaming = false)(spark))
+  }
+
+  /** The loop round's ONE action: the row count of each frame, all
+    * computed in a single non-adaptive job. Every lazy checkpoint the
+    * frames read is materialized by this job, its shuffles running as
+    * stages of it; under adaptive execution the same count would first run
+    * each shuffle stage as a job of its own. Counting stops at the rows:
+    * no aggregate, no extra exchange.
+    */
+  def roundCounts(frames: DataFrame*): Seq[Long] = {
+    val rdds = frames.map(df => staticRows(execution(df)))
+    val sc = rdds.head.sparkContext
+    val perPartition = sc.runJob(new UnionRDD(sc, rdds),
+      (rows: Iterator[InternalRow]) => org.apache.spark.util.Utils.getIteratorSize(rows))
+    // UnionRDD lays its parents' partitions out in order.
+    val bounds = rdds.scanLeft(0)(_ + _.getNumPartitions)
+    bounds.zip(bounds.tail).map { case (from, until) => perPartition.slice(from, until).sum }
+  }
 
   def localCheckpointHashPartitioned(
       df: DataFrame, keys: Seq[String], numParts: Int, eager: Boolean,
       sortWithinPartitions: Boolean = true): DataFrame = {
     val sorted =
       if (sortWithinPartitions) df.sortWithinPartitions(keys.map(col): _*) else df
-    val ds = sorted.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]]
-    val spark = ds.sparkSession
-    val qe = ds.queryExecution
-    // Same materialization shape as Dataset.checkpoint: execute + row copy.
-    var rdd = qe.toRdd.map(_.copy())
+    val qe = execution(sorted)
+    var rdd = checkpointRows(qe, eager)
     if (rdd.getNumPartitions == 0) {
-      // AQE propagates provably-empty relations to a zero-partition scan.
-      // An empty frame is trivially hash-partitioned, but the declared
-      // partition COUNT must still be physically true for exchange-elided
-      // co-partitioned joins — so rebuild it as numParts empty partitions.
-      rdd = spark.sparkContext.parallelize(
-        Seq.empty[org.apache.spark.sql.catalyst.InternalRow], numParts)
+      // A provably-empty frame can plan to a zero-partition scan (AQE's
+      // empty-relation propagation, or the optimizer's on an empty local
+      // input). An empty frame is trivially hash-partitioned, but the
+      // declared partition COUNT must still be physically true for
+      // exchange-elided co-partitioned joins — so rebuild it as numParts
+      // empty partitions.
+      rdd = qe.sparkSession.sparkContext.parallelize(Seq.empty[InternalRow], numParts)
     } else {
       // Partitioning-contract guard: a declared partitioning over the wrong
       // partition count elides exchanges the plan actually needs and
-      // silently mis-routes rows. toRdd has already finalized AQE's plan,
-      // so the count observed here is physical.
+      // silently mis-routes rows. The count observed here is physical in
+      // both modes: toRdd has finalized the adaptive plan of an eager
+      // checkpoint, and a lazy checkpoint's static plan is final as built.
       require(rdd.getNumPartitions == numParts,
         s"declared-partitioning contract violated: input has ${rdd.getNumPartitions} " +
           s"partitions but HashPartitioning($keys, $numParts) was declared — " +
@@ -78,9 +150,7 @@ object checkpointing {
         throw new IllegalArgumentException(s"key column '$k' not in ${output.map(_.name)}")))
     val ordering: Seq[SortOrder] =
       if (sortWithinPartitions) keyAttrs.map(a => SortOrder(a, Ascending)) else Nil
-    val logical = LogicalRDD(
-      output, rdd, HashPartitioning(keyAttrs, numParts), ordering, isStreaming = false)(spark)
-    ClassicDataset.ofRows(spark, logical)
+    ofRdd(qe, rdd, HashPartitioning(keyAttrs, numParts), ordering)
   }
 
   /** Lineage-truncating local checkpoint that RESETS the leaf's estimated
@@ -107,15 +177,10 @@ object checkpointing {
     * explicitly with `broadcast()`.
     */
   def localCheckpointNoStats(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val ds = df.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]]
-    val spark = ds.sparkSession
-    val qe = ds.queryExecution
-    val rdd = qe.toRdd.map(_.copy()).localCheckpoint()
+    val qe = execution(df)
+    val rdd = checkpointRows(qe, eager).localCheckpoint()
     if (eager) rdd.count()
-    val logical = LogicalRDD(qe.analyzed.output, rdd,
-      org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(0),
-      Nil, isStreaming = false)(spark)
-    ClassicDataset.ofRows(spark, logical)
+    ofRdd(qe, rdd, UnknownPartitioning(0), Nil)
   }
 
   /** [[localCheckpointNoStats]]'s eager form, RETURNING the row count the
@@ -126,15 +191,10 @@ object checkpointing {
     * count job over the materialized RDD.
     */
   def localCheckpointCounted(df: DataFrame): (DataFrame, Long) = {
-    val ds = df.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]]
-    val spark = ds.sparkSession
-    val qe = ds.queryExecution
-    val rdd = qe.toRdd.map(_.copy()).localCheckpoint()
+    val qe = execution(df)
+    val rdd = checkpointRows(qe, eager = true).localCheckpoint()
     val n = rdd.count()
-    val logical = LogicalRDD(qe.analyzed.output, rdd,
-      org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning(0),
-      Nil, isStreaming = false)(spark)
-    (ClassicDataset.ofRows(spark, logical), n)
+    (ofRdd(qe, rdd, UnknownPartitioning(0), Nil), n)
   }
 
   /** Rebuild an already-checkpointed frame's `LogicalRDD` WITHOUT its
