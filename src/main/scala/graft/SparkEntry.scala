@@ -2900,7 +2900,7 @@ object SparkEntry {
     // Bucketed sink -> source round trip: degrees computed from the
     // RELOADED graph, whose scan carries the bucket layout (no exchange).
     "b01_bucketed_degrees" -> ((s, d) => {
-      val n = s.conf.get("spark.sql.shuffle.partitions", "32").toInt
+      val n = org.apache.spark.sql.graft.checkpointing.shufflePartitions(s)
       graft.sources.BucketedTables.saveGraph(
         GraphFrame.fromEdges(partSuppEdges(s, d)), "b01_graph", n)
       graft.sources.BucketedTables.loadGraph(s, "b01_graph").outDegrees

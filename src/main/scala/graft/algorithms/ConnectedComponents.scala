@@ -152,9 +152,10 @@ class ConnectedComponents(graph: GraphFrame) {
     // keep the edge frame hash-partitioned on `src` across iterations, with
     // the partitioning DECLARED on the checkpointed frame — a plain
     // localCheckpoint under AQE reports unknown partitioning and forfeits
-    // the elision (see graft.tools.PlanProbe).
-    val numParts = graph.edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
+    // the elision (PlanSpec: "declared partitioning+ordering checkpoint: SMJ
+    // with no exchange, no sort").
+    val numParts = org.apache.spark.sql.graft.checkpointing
+      .shufflePartitions(graph.edges.sparkSession)
     def ckptBySrc(df: DataFrame, eager: Boolean): DataFrame =
       org.apache.spark.sql.graft.checkpointing.localCheckpointHashPartitioned(
         df, Seq(SRC), numParts, eager)

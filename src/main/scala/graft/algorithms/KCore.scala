@@ -17,27 +17,21 @@ import graft.pregel.{MessageDirection, Pregel, PregelResult}
   * broadcasts every iteration: the aggregate rebuilds each neighbour list
   * from scratch, so participation pruning would corrupt the lists; early
   * stopping relies on voting ("my core changed") alone.
+  *
+  * Without pruning every round's state holds every vertex. Its stats-free
+  * checkpoint leaves are never broadcast, so what keeps a round from
+  * re-shuffling that state on both joins is the layout Pregel declares on
+  * it (hash-partitioned and sorted by `id`, like the symmetrized edges by
+  * `src`): a round shuffles only the neighbour cores it sends.
   */
 class KCore(graph: GraphFrame) {
   private var maxIter = 0 // 0 = run to convergence
-  private var ckptInterval = 1
   private var smallThresholdOpt: Option[Long] = None
   // Builder setter wins; otherwise the session default (spark.graft.smallGraphThreshold).
   private def smallThreshold: Long = smallThresholdOpt.getOrElse(
     graft.GraftConf.smallGraphThreshold(graph.vertices.sparkSession))
 
   def maxIterations(n: Int): this.type = { maxIter = n; this }
-  def checkpointInterval(n: Int): this.type = { ckptInterval = n; this }
-
-  /** Keep the Pregel state co-partitioned on `id` with the partitioning
-    * declared on each checkpoint (see [[graft.pregel.Pregel.withCoPartitionedState]]).
-    * Unlike pruned algorithms (PageRank), k-core has NO participation
-    * pruning — every vertex rebuilds its neighbour list every round, the
-    * state is never broadcastable, and the state side of both per-round
-    * joins otherwise re-shuffles; declaring the layout elides that.
-    */
-  def withCoPartitionedState(): this.type = { coPartition = true; this }
-  private var coPartition = false
 
   /** Edge-count threshold below which coreness is computed on the driver
     * with Matula–Beck peeling (exact coreness — identical to the converged
@@ -179,8 +173,8 @@ class KCore(graph: GraphFrame) {
     val SRC = GraphFrame.SRC
     val DST = GraphFrame.DST
     val release = org.apache.spark.sql.graft.checkpointing.release _
-    val numParts = graph.edges.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
+    val numParts = org.apache.spark.sql.graft.checkpointing
+      .shufflePartitions(graph.edges.sparkSession)
     // ONE materialization of the symmetrized simple edge set, shared by the
     // hybrid threshold check, the degree seed AND the Pregel loop — the
     // symmetrize+distinct shuffle previously ran once per consumer. The
@@ -270,8 +264,6 @@ class KCore(graph: GraphFrame) {
       .withVertexVoting("active", col("kcore") =!= newCore)
       .skipDestState()
       .withPrePartitionedEdges()
-      .checkpointInterval(ckptInterval)
-    if (coPartition) builder.withCoPartitionedState()
     if (maxIter > 0) builder.maxIterations(maxIter)
     val result = builder.run()
     release(sym)

@@ -28,14 +28,12 @@ import graft.pregel.{MessageDirection, Pregel, PregelResult}
   */
 class LabelPropagation(graph: GraphFrame) {
   private var maxIter = 5
-  private var ckptInterval = 1
   private var smallThresholdOpt: Option[Long] = None
   // Builder setter wins; otherwise the session default (spark.graft.smallGraphThreshold).
   private def smallThreshold: Long = smallThresholdOpt.getOrElse(
     graft.GraftConf.smallGraphThreshold(graph.vertices.sparkSession))
 
   def maxIterations(n: Int): this.type = { require(n >= 1); maxIter = n; this }
-  def checkpointInterval(n: Int): this.type = { ckptInterval = n; this }
 
   /** Edge-count threshold below which labels are computed on the driver
     * (identical output — the update is deterministic). 0 disables.
@@ -159,7 +157,6 @@ class LabelPropagation(graph: GraphFrame) {
       .addMessage(Pregel.src("label"), MessageDirection.SrcToDst)
       .addAggregateExpr(graft.functions.LabelModeAgg.label_mode(Pregel.defaultMsg))
       .maxIterations(maxIter)
-      .checkpointInterval(ckptInterval)
       .skipDestState()
       .run()
   }

@@ -201,7 +201,7 @@ class MaximalIndependentSet(graph: GraphFrame) {
     val release = org.apache.spark.sql.graft.checkpointing.release _
     val spark = graph.vertices.sparkSession
     import spark.implicits._
-    val numParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
+    val numParts = org.apache.spark.sql.graft.checkpointing.shufflePartitions(spark)
     def ckpt(df: DataFrame, keys: Seq[String]): DataFrame =
       org.apache.spark.sql.graft.checkpointing
         .localCheckpointHashPartitioned(df, keys, numParts, eager = false)

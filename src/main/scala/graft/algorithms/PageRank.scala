@@ -35,13 +35,11 @@ class PageRank(graph: GraphFrame) {
   private var resetProb = 0.15
   private var tol = 0.01
   private var maxIter = 0 // 0 = run to convergence
-  private var ckptInterval = 1
   private var pprSource: Option[Long] = None
 
   def resetProbability(p: Double): this.type = { resetProb = p; this }
   def tolerance(t: Double): this.type = { tol = t; this }
   def maxIterations(n: Int): this.type = { maxIter = n; this }
-  def checkpointInterval(n: Int): this.type = { ckptInterval = n; this }
 
   /** Personalized PageRank (beyond the reference): the teleport mass lands
     * only on `sourceId`, so ranks measure proximity to the source. Same
@@ -207,7 +205,6 @@ class PageRank(graph: GraphFrame) {
       .withParticipationColumn("participates", initPart,
         abs(newDelta) > lit(tol))
       .skipDestState()
-      .checkpointInterval(ckptInterval)
     weightColOpt.foreach(w => builder = builder.addEdgeColumn(w))
 
     val result =

@@ -23,7 +23,6 @@ class ShortestPaths(graph: GraphFrame) {
   private var landmarks: Seq[Long] = Seq.empty
   private var toLandmarksFlag = false
   private var maxIter = Int.MaxValue
-  private var ckptInterval = 1
   private var smallThresholdOpt: Option[Long] = None
   // Builder setter wins; otherwise the session default (spark.graft.smallGraphThreshold).
   private def smallThreshold: Long = smallThresholdOpt.getOrElse(
@@ -32,7 +31,6 @@ class ShortestPaths(graph: GraphFrame) {
   def setLandmarks(lms: Seq[Long]): this.type = { landmarks = lms; this }
   def toLandmarks(): this.type = { toLandmarksFlag = true; this }
   def maxIterations(n: Int): this.type = { maxIter = n; this }
-  def checkpointInterval(n: Int): this.type = { ckptInterval = n; this }
 
   /** Edge-count threshold below which distances are computed on the driver
     * with a plain array-based BFS per landmark (exact — BFS depth == Pregel
@@ -227,7 +225,6 @@ class ShortestPaths(graph: GraphFrame) {
       .withParticipationColumn("participating", initParticipating, updateParticipating)
       .withVertexVoting("active", updateParticipating)
       .maxIterations(maxIter)
-      .checkpointInterval(ckptInterval)
       .skipDestState()
 
     landmarks.foreach { lm =>

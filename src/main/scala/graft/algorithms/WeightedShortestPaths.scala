@@ -36,7 +36,6 @@ class WeightedShortestPaths(graph: GraphFrame, weightCol: String) {
   private var landmarks: Seq[Long] = Seq.empty
   private var toLandmarksFlag = false
   private var maxIter = Int.MaxValue
-  private var ckptInterval = 1
   private var smallThresholdOpt: Option[Long] = None
   private def smallThreshold: Long = smallThresholdOpt.getOrElse(
     graft.GraftConf.smallGraphThreshold(graph.vertices.sparkSession))
@@ -49,7 +48,6 @@ class WeightedShortestPaths(graph: GraphFrame, weightCol: String) {
     */
   def toLandmarks(): this.type = { toLandmarksFlag = true; this }
   def maxIterations(n: Int): this.type = { require(n >= 1); maxIter = n; this }
-  def checkpointInterval(n: Int): this.type = { ckptInterval = n; this }
   def smallGraphThreshold(n: Long): this.type = { smallThresholdOpt = Some(n); this }
 
   /** Synchronous Bellman-Ford over an edge array; one Long distance array
@@ -188,7 +186,6 @@ class WeightedShortestPaths(graph: GraphFrame, weightCol: String) {
       .withParticipationColumn("participating", initParticipating, updateParticipating)
       .withVertexVoting("active", updateParticipating)
       .maxIterations(maxIter)
-      .checkpointInterval(ckptInterval)
       .skipDestState()
 
     landmarks.foreach { lm =>

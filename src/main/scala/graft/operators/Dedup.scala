@@ -276,8 +276,8 @@ object Dedup {
       embeddings: DataFrame, idCol: String, vecCol: String,
       threshold: Double): DataFrame = {
     import graft.functions.ArrayDot.array_dot
-    val numParts = embeddings.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
+    val numParts = org.apache.spark.sql.graft.checkpointing
+      .shufflePartitions(embeddings.sparkSession)
     val e = embeddings.select(
       col(idCol).as("id"),
       col(vecCol).cast("array<double>").as("v"))
@@ -339,8 +339,8 @@ object Dedup {
     // post-join distinct, nothing redundant reaches the verify shuffle.
     // Stream side spread like embeddingNearDupPairs: a one-file corpus is
     // one partition, i.e. one task for the whole banded scan.
-    val numParts = embeddings.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
+    val numParts = org.apache.spark.sql.graft.checkpointing
+      .shufflePartitions(embeddings.sparkSession)
     val candidates = buckets.repartition(numParts).as("a")
       .join(buckets.as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&
@@ -472,8 +472,8 @@ object Dedup {
       .select(col("id"), col("sig"), col("bb.band").as("band"), col("bb.bh").as("bh"))
     val c = scope.cache(prepared(corpus))
     val h = scope.cache(prepared(heldOut))
-    val numParts = corpus.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
+    val numParts = org.apache.spark.sql.graft.checkpointing
+      .shufflePartitions(corpus.sparkSession)
     val candidates = banded(c).repartition(numParts).as("a")
       .join(banded(h).as("b"),
         col("a.band") === col("b.band") && col("a.bh") === col("b.bh") &&

@@ -34,8 +34,14 @@ object MessageDirection extends Enumeration {
   *     projection is checkpointed once, hash-partitioned by `src` and
   *     sorted within partitions, both DECLARED on its `LogicalRDD`, so the
   *     per-iteration state⋈edges sort-merge join plans with no edge-side
-  *     exchange or sort (with [[withCoPartitionedState]] the state
-  *     checkpoint declares its `id` partitioning too).
+  *     exchange or sort. The state is kept the same way: every round's
+  *     local checkpoint is hash-partitioned and sorted by `id`, both
+  *     declared (reliable checkpoints keep no declared layout), so
+  *     the state side of the edge join and of the message delivery needs
+  *     no exchange either, and a round shuffles only its messages (GraphX's
+  *     co-partitioned vertex state). A declared layout is the only way to
+  *     avoid those exchanges: the stats-free state leaves are never
+  *     broadcast, so without it both joins re-shuffle the state.
   *   - Every checkpoint in the loop is LAZY: built from a static plan, it
   *     schedules nothing, and the round's one count runs it, so each round
   *     is exactly ONE Spark job (the activity count in voting mode, a plain
@@ -62,10 +68,7 @@ class Pregel(graph: GraphFrame) extends Serializable {
   private var votingCond: Option[Column] = None
   private var participation: Option[VertexCol] = None
   private var useDestState = true
-  private var unionMessages = false
-  private var ckptInterval = 1
   private var reliableDir: Option[String] = None
-  private var coPartitionState = false
   private var edgesPrePartitioned = false
 
   def maxIterations(n: Int): this.type = { maxIter = Some(n); this }
@@ -102,33 +105,6 @@ class Pregel(graph: GraphFrame) extends Serializable {
 
   /** Skip the destination-state join when updates never read it. */
   def skipDestState(): this.type = { useDestState = false; this }
-
-  /** Keep the state frame hash-partitioned on `id` across iterations with
-    * the partitioning DECLARED on each checkpoint, so the state⋈edges and
-    * message-delivery joins plan with no state-side exchange. Opt-in:
-    * it costs one state repartition per iteration, which only pays off when
-    * the state is too large for AQE to broadcast (huge vertex sets with
-    * most vertices active) — with participation pruning or small graphs the
-    * broadcast plan is already shuffle-free and this flag is overhead
-    * (measured: PageRank at 16.8 M edges is 103 s without, 162 s with).
-    */
-  def withCoPartitionedState(): this.type = { coPartitionState = true; this }
-
-  /** Truncate state lineage every `n` iterations (default 1). */
-  def checkpointInterval(n: Int): this.type = {
-    require(n >= 1, "checkpointInterval must be >= 1"); ckptInterval = n; this
-  }
-
-  /** MEASUREMENT ONLY (package-private): force the pre-r14 two-branch
-    * unionByName form for both-direction messages instead of the
-    * one-generate explode, so `ScaleBench pregel-bidi[-union]` can compare
-    * the forms side by side on identical semantics. Never set by
-    * algorithms — the type-mismatch fallback picks the union form
-    * automatically when it is the only correct one.
-    */
-  private[graft] def forceUnionMessages(): this.type = {
-    unionMessages = true; this
-  }
 
   /** Declare that `graph.edges` is ALREADY hash-partitioned by `src` into
     * the session's shuffle-partition count (e.g. via a declared-partitioning
@@ -179,26 +155,25 @@ class Pregel(graph: GraphFrame) extends Serializable {
           "checkpoint eviction would delete source data")
       spark.sparkContext.setCheckpointDir(dir)
     }
-    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    // Opt-in co-partitioned state (see withCoPartitionedState): checkpoints
-    // DECLARE their id-partitioning (enforced by the repartition right
-    // before), so the state⋈edges and message-delivery joins plan with no
-    // state-side exchange — a plain localCheckpoint under AQE reports
-    // unknown partitioning and forfeits this (graft.tools.PlanProbe).
-    // Every flavor must RESET the leaf's estimated stats: plain
+    val shufflePartitions = org.apache.spark.sql.graft.checkpointing.shufflePartitions(spark)
+    // Local checkpoints DECLARE their id-partitioning (made true by the
+    // repartition right before, which the planner drops when the round's
+    // message-delivery join already produced it), so the state⋈edges and
+    // message-delivery joins plan with no state-side exchange (PlanSpec:
+    // "declared partitioning+ordering checkpoint: SMJ with no exchange, no
+    // sort"). Every flavor must RESET the leaf's estimated stats: plain
     // localCheckpoint / checkpoint copy the optimizer's sizeInBytes
     // estimate onto the new leaf, and in an iterative loop that estimate
     // is a product over the previous leaf's — the bit-length compounds
     // geometrically per iteration until stats estimation (BigInteger
     // products) dominates planning (checkpointing.localCheckpointNoStats).
     // localCheckpointHashPartitioned already builds its LogicalRDD fresh.
-    def ckpt(df: DataFrame, eager: Boolean): DataFrame =
+    def ckpt(df: DataFrame): DataFrame =
       if (resolvedReliableDir.isDefined)
-        org.apache.spark.sql.graft.checkpointing.dropLeafStats(df.checkpoint(eager))
-      else if (coPartitionState)
+        org.apache.spark.sql.graft.checkpointing.dropLeafStats(df.checkpoint(eager = false))
+      else
         org.apache.spark.sql.graft.checkpointing.localCheckpointHashPartitioned(
-          df.repartition(shufflePartitions, col(ID)), Seq(ID), shufflePartitions, eager)
-      else org.apache.spark.sql.graft.checkpointing.localCheckpointNoStats(df, eager)
+          df.repartition(shufflePartitions, col(ID)), Seq(ID), shufflePartitions, eager = false)
 
     // ---- init state: vertex columns applied sequentially (later init
     // expressions may reference earlier ones), then voting + participation.
@@ -233,8 +208,7 @@ class Pregel(graph: GraphFrame) extends Serializable {
     // vertex property columns are visible to messages in iteration 1 only —
     // reference semantics (`pregel.rs:266-270`, `440-499`). Lazy like every
     // round's checkpoint: the first round's action materializes it.
-    state = ckpt(state, eager = false)
-    var previous: DataFrame = state
+    state = ckpt(state)
 
     val dstTargeted = msgs.filter(m => m.direction != MessageDirection.DstToSrc)
     val srcTargeted = msgs.filter(m => m.direction != MessageDirection.SrcToDst)
@@ -288,7 +262,7 @@ class Pregel(graph: GraphFrame) extends Serializable {
             .toMap
           val typesDiffer = dstTypes.keySet.intersect(srcTypes.keySet)
             .exists(n => dstTypes(n) != srcTypes(n))
-          if (typesDiffer || unionMessages) {
+          if (typesDiffer) {
             // A name emitted in both directions with DIFFERENT types:
             // the explode array needs one element type, and relying on
             // CreateArray's struct coercion would silently cast one
@@ -326,45 +300,27 @@ class Pregel(graph: GraphFrame) extends Serializable {
         .join(aggregated.withColumnRenamed(ID, AM_ID), col(ID) === col(AM_ID), "left")
         .drop(AM_ID)
 
-      var newState = withMessages.select(updateCols: _*)
-      var toRelease: DataFrame = null
-      if (iteration % ckptInterval == 0) {
-        // LAZY checkpoint: its static plan runs as stages of the round's
-        // one action below, which materializes it before the previous
-        // state is released.
-        newState = ckpt(newState, eager = false)
-        toRelease = previous
-        previous = newState
-      }
-      state = newState
+      // LAZY checkpoint: its static plan runs as stages of the round's one
+      // action below, which materializes it before the previous state is
+      // released.
+      val previous = state
+      state = ckpt(withMessages.select(updateCols: _*))
 
-      // The round's ONE job: the active count in voting mode; in
-      // fixed-iteration mode a plain count that only materializes the
-      // checkpoint (rounds between checkpoints run nothing).
-      if (votingCol.isDefined || (toRelease ne null)) {
-        val counted = votingCol.fold(state)(ac => state.filter(col(ac)))
-        val active = org.apache.spark.sql.graft.checkpointing.roundCounts(counted).head
-        if (votingCol.isDefined && active == 0) converged = true
-      }
+      // The round's ONE job: the active count in voting mode, otherwise a
+      // plain count that only materializes the checkpoint.
+      val counted = votingCol.fold(state)(ac => state.filter(col(ac)))
+      val active = org.apache.spark.sql.graft.checkpointing.roundCounts(counted).head
+      if (votingCol.isDefined && active == 0) converged = true
       // By here the new checkpoint is materialized. Release is the REAL
       // one: localCheckpoint blocks belong to the RDD and plain
       // Dataset.unpersist never reaches them (CacheManager no-op).
-      if ((toRelease ne null) && (toRelease ne state))
-        org.apache.spark.sql.graft.checkpointing.release(toRelease)
+      org.apache.spark.sql.graft.checkpointing.release(previous)
     }
 
-    // State is already materialized when the last iteration hit the
-    // checkpoint interval (or no iterations ran); avoid a redundant copy.
-    var result =
-      if (state eq previous) state
-      else {
-        val r = ckpt(state, eager = true)
-        org.apache.spark.sql.graft.checkpointing.release(previous)
-        r
-      }
     org.apache.spark.sql.graft.checkpointing.release(edges)
-    if (!includeDebugColumns)
-      result = result.select((vertexCols.map(vc => col(vc.name)) :+ col(ID)): _*)
+    val result =
+      if (includeDebugColumns) state
+      else state.select((vertexCols.map(vc => col(vc.name)) :+ col(ID)): _*)
     PregelResult(result, iteration)
   }
 }

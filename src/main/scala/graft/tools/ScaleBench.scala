@@ -77,32 +77,25 @@ object ScaleBench {
         val r = g.kCore.smallGraphThreshold(0).run()
         val maxCore = r.vertices.select(max("kcore")).head.getLong(0)
         println(f"SCALE-OK $algo n=$n m=$m iters=${r.iterations} maxCore=$maxCore sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-      case "kcore-copart" =>
-        val r = g.kCore.smallGraphThreshold(0).withCoPartitionedState().run()
-        val maxCore = r.vertices.select(max("kcore")).head.getLong(0)
-        println(f"SCALE-OK kcore-copart n=$n m=$m iters=${r.iterations} maxCore=$maxCore sec=${(System.nanoTime() - t0) / 1e9}%.1f")
       case "pagerank" =>
         val r = g.pageRank.maxIterations(10).run()
         val cnt = r.ranks.count()
         println(f"SCALE-OK pagerank n=$n m=$m iters=${r.iterations} rows=$cnt sec=${(System.nanoTime() - t0) / 1e9}%.1f")
-      case "pregel-bidi" | "pregel-bidi-union" =>
-        // Both-direction message scale probe — the r14 one-generate-vs-
-        // union question measured on the ONE path that actually runs it
+      case "pregel-bidi" =>
+        // Both-direction message scale probe: the one-generate message path
         // (no shipped algorithm is bidirectional; g16 HITS has its own
-        // direction-alternating loop and never touched Pregel). 4 rounds
+        // direction-alternating loop and never touches Pregel). 4 rounds
         // of neighbor-count diffusion both ways; the checksum pins the
-        // two forms to identical semantics.
+        // result.
         import graft.pregel.{MessageDirection, Pregel}
-        val builder = g.pregel
+        val r = g.pregel
           .maxIterations(4)
-          .checkpointInterval(2)
           .addVertexColumn("value", lit(1L),
             col("value") + coalesce(Pregel.msg("m"), lit(0L)))
           .addNamedMessage("m", Pregel.src("value"), MessageDirection.Bidirectional)
           .addNamedAggregateExpr("m", org.apache.spark.sql.functions.sum(Pregel.msg("m")))
           .skipDestState()
-        if (algo.endsWith("-union")) builder.forceUnionMessages()
-        val r = builder.run()
+          .run()
         val checksum = r.vertices.select(sum(col("value"))).head.getLong(0)
         println(f"SCALE-OK $algo n=$n m=$m iters=${r.iterations} checksum=$checksum sec=${(System.nanoTime() - t0) / 1e9}%.1f")
       case "hits" =>
@@ -1248,18 +1241,18 @@ object ScaleBench {
           else edges.filter(lit(false))
         var tk = System.nanoTime()
         val prevCores = GraphFrame.fromEdges(yesterdayE).kCore
-          .smallGraphThreshold(0).withCoPartitionedState().run()
+          .smallGraphThreshold(0).run()
           .vertices.select(col("id"), col("kcore")).localCheckpoint(true)
         val tPrevK = (System.nanoTime() - tk) / 1e9
         tk = System.nanoTime()
         val coldRes = GraphFrame.fromEdges(todayE).kCore
-          .smallGraphThreshold(0).withCoPartitionedState().run()
+          .smallGraphThreshold(0).run()
         val coldCores = coldRes.vertices.select(col("id"), col("kcore"))
           .localCheckpoint(true)
         val tColdK = (System.nanoTime() - tk) / 1e9
         tk = System.nanoTime()
         val warmRes = GraphFrame.fromEdges(todayE).kCore
-          .smallGraphThreshold(0).withCoPartitionedState()
+          .smallGraphThreshold(0)
           .warmStart(prevCores, addedE).run()
         val warmCores = warmRes.vertices.select(col("id"), col("kcore"))
           .localCheckpoint(true)

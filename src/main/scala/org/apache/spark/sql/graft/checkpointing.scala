@@ -1,11 +1,11 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.rdd.{RDD, UnionRDD}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, SortOrder}
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, UnknownPartitioning}
-import org.apache.spark.sql.classic.{Dataset => ClassicDataset}
+import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecutionRDD}
 import org.apache.spark.sql.execution.reuse.ReuseExchangeAndSubquery
 import org.apache.spark.sql.functions.col
@@ -64,6 +64,15 @@ object checkpointing {
   private def execution(df: DataFrame): QueryExecution =
     df.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]].queryExecution
 
+  /** The partition count the planner gives the session's shuffles
+    * (`SQLConf.numShufflePartitions`: Spark's default when
+    * `spark.sql.shuffle.partitions` is unset, the adaptive initial count
+    * when one is set). A declared `HashPartitioning` must use this count,
+    * or the first planner-made exchange it meets re-shuffles it.
+    */
+  def shufflePartitions(spark: SparkSession): Int =
+    spark.asInstanceOf[ClassicSparkSession].sessionState.conf.numShufflePartitions
+
   /** The frame's physical plan prepared WITHOUT adaptive execution
     * (exchange reuse kept), executed into an RDD. Building it runs no job
     * unless the plan holds a broadcast exchange or a subquery: Spark starts
@@ -72,9 +81,12 @@ object checkpointing {
     * small input joined in (an explicit `broadcast` hint, a small table)
     * still runs its own job here. The session's
     * `spark.sql.adaptive.enabled` is left alone: other threads and
-    * streams share it.
+    * streams share it. Planning runs with the frame's session active, as
+    * `QueryExecution` itself does: the planner reads the active session's
+    * confs (the shuffle partition count among them), which for a frame of
+    * a non-default session are not the frame's own.
     */
-  private def staticRows(qe: QueryExecution): RDD[InternalRow] = {
+  private def staticRows(qe: QueryExecution): RDD[InternalRow] = qe.sparkSession.withActive {
     val plan = ReuseExchangeAndSubquery(
       QueryExecution.prepareExecutedPlan(qe.sparkSession, qe.sparkPlan.clone()))
     // Same wrapper as QueryExecution.toRdd: tasks see the session's SQL
@@ -161,8 +173,8 @@ object checkpointing {
     * algorithm each round's estimate is a product over the previous
     * round's leaf sizes (every join MULTIPLIES the sides' estimates), so
     * the estimate's bit-length compounds geometrically round over round —
-    * one self-join per round doubles it (measured: 20 -> 38,880 bits in 12
-    * rounds, graft.tools.StatsProbe), and a 30-round peel leaves Catalyst
+    * one self-join per round doubles it (`graft.CheckpointStatsSpec` pins
+    * the growth over 12 self-join rounds), and a 30-round peel leaves Catalyst
     * multiplying million-bit BigIntegers inside stats estimation: planning
     * hangs while the cluster idles. Capped loops mask it; deep fixpoint
     * loops die of it.

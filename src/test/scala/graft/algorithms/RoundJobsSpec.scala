@@ -12,7 +12,9 @@ import graft.graph.GraphFrame
   * a static plan and runs nothing, and every distributed round of WCC,
   * MIS, k-core, shortest paths and fixed-iteration PageRank is exactly ONE
   * Spark job (its termination or materializing count), on top of a fixed
-  * per-run constant for set-up and result assembly. Each algorithm's
+  * per-run constant for set-up and result assembly, and a Pregel round
+  * (PageRank, k-core, shortest paths) is 2 stages: its state keeps a
+  * declared layout, so only the messages are exchanged. Each algorithm's
   * result is checked against its driver-side twin or an in-test oracle,
   * the same equivalences RandomGraphSpec pins on small random graphs.
   *
@@ -37,7 +39,27 @@ class RoundJobsSpec extends AnyFunSuite with SparkTestHarness {
     GraphFrame.fromEdges(edgeRows.toSeq.toDF("src", "dst").localCheckpoint(true))
   }
 
-  private def jobs[T](body: => T): (T, Int) = JobCounter(spark.sparkContext)(body)
+  private def counts[T](body: => T): (T, JobCounter.Counts) =
+    JobCounter(spark.sparkContext)(body)
+  private def jobs[T](body: => T): (T, Int) = {
+    val (result, c) = counts(body)
+    (result, c.jobs)
+  }
+
+  /** A Pregel round moves only its messages: the state checkpoint declares
+    * its `id` layout, so the round's one job runs the message shuffle's map
+    * stage and the stage that delivers the messages and writes the new
+    * state — 2 stages. `run(k)` runs the loop capped at k rounds and
+    * returns the rounds it ran.
+    */
+  private def assertRoundCost(label: String)(run: Int => Int): Unit = {
+    val (short, c1) = counts(run(1))
+    val (long, c3) = counts(run(3))
+    assert(short == 1 && long == 3, s"$label ran $short and $long rounds")
+    assert(c3.jobs - c1.jobs == 2 && c3.stages - c1.stages == 4,
+      s"$label: 2 extra rounds added ${c3.jobs - c1.jobs} jobs and " +
+        s"${c3.stages - c1.stages} stages")
+  }
 
   private def longMap(df: DataFrame, value: String): Map[Long, Long] =
     df.select(col("id"), col(value)).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -129,5 +151,26 @@ class RoundJobsSpec extends AnyFunSuite with SparkTestHarness {
       val want = pr(v) / total
       assert(math.abs(got(v) - want) <= 1e-9 * math.max(1.0, want), s"vertex $v")
     }
+  }
+
+  test("pregel loops: each extra round adds exactly 1 job and 2 stages") {
+    assertRoundCost("pagerank")(k => graph.pageRank.resetProbability(0.15).tolerance(0.0)
+      .maxIterations(k).run().iterations)
+    assertRoundCost("kcore")(k => graph.kCore.smallGraphThreshold(0)
+      .maxIterations(k).run().iterations)
+    assertRoundCost("sssp")(k => graph.shortestPaths(Seq(0L, 1L, 2L)).toLandmarks()
+      .smallGraphThreshold(0).maxIterations(k).run().iterations)
+  }
+
+  test("pregel state layout follows the planner's partition count when the key is unset") {
+    val s = spark.newSession()
+    s.conf.unset("spark.sql.shuffle.partitions")
+    // The count a literal fallback would have declared is not the one the
+    // planner gives the message aggregate; the helper follows the planner.
+    assert(s.conf.get("spark.sql.shuffle.partitions", "32") == "32")
+    assert(checkpointing.shufflePartitions(s) == 200)
+    val g = GraphFrame.fromEdges(s.createDataFrame(edgeRows.toSeq).toDF("src", "dst"))
+    assertRoundCost("pagerank, 200 partitions")(k => g.pageRank.resetProbability(0.15)
+      .tolerance(0.0).maxIterations(k).run().iterations)
   }
 }

@@ -110,23 +110,6 @@ class PregelSpec extends AnyFunSuite with SparkTestHarness {
     assert(valuesById(res.vertices, "value").values.toSet === Set(1L))
   }
 
-  test("co-partitioned state: same result and iteration count as default") {
-    val g = graph(Seq(1L, 2L, 3L, 4L), Seq((1L, 2L), (2L, 3L), (3L, 4L)))
-    val res = g.pregel
-      .maxIterations(100)
-      .withCoPartitionedState()
-      .addVertexColumn("value",
-        when(col("id") === 1L, lit(1)).otherwise(lit(0)),
-        when(defaultMsg > col("value"), defaultMsg).otherwise(col("value")))
-      .withVertexVoting("active", col("value") =!= defaultMsg)
-      .addMessage(src("value"), MessageDirection.SrcToDst)
-      .addAggregateExpr(max(defaultMsg))
-      .skipDestState()
-      .run()
-    assert(res.iterations === 4)
-    assert(valuesById(res.vertices, "value").values.toSet === Set(1L))
-  }
-
   test("reliable checkpointing: same result and iteration count as local") {
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
     val g = graph(Seq(1L, 2L, 3L, 4L), Seq((1L, 2L), (2L, 3L), (3L, 4L)))
@@ -224,7 +207,6 @@ class PregelSpec extends AnyFunSuite with SparkTestHarness {
     val g = graph(0L until n, edges)
     val res = g.pregel
       .maxIterations(40)
-      .checkpointInterval(2)
       .addVertexColumn("value", lit(0), col("value") + defaultMsg)
       .addMessage(lit(1), MessageDirection.Bidirectional)
       .addAggregateExpr(sum(defaultMsg))
@@ -252,23 +234,6 @@ class PregelSpec extends AnyFunSuite with SparkTestHarness {
     val got = res.vertices.select("id", "value").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(got === Map(1L -> 0.5, 2L -> 1.0))
-  }
-
-  test("forceUnionMessages (measurement switch) is result-identical to the one-generate form") {
-    val n = 20L
-    val edges = (0L until n).map(i => (i, (i + 1) % n))
-    def run(union: Boolean) = {
-      val b = graph(0L until n, edges).pregel
-        .maxIterations(3)
-        .addVertexColumn("value", lit(1L),
-          col("value") + coalesce(msg("m"), lit(0L)))
-        .addNamedMessage("m", src("value"), MessageDirection.Bidirectional)
-        .addNamedAggregateExpr("m", sum(msg("m")))
-        .skipDestState()
-      if (union) b.forceUnionMessages()
-      valuesById(b.run().vertices, "value")
-    }
-    assert(run(union = true) === run(union = false))
   }
 
   test("validation: messages required; aggregate required for multi-message") {
