@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Engine-tuning defaults every graft session builder applies — ONE
-  * definition so the four entry points (Bench, Verify, ScaleBench, the
-  * test harness) can never drift onto different engine configs than the
-  * ones the SCALE_RECORD measurements and PlanSpec pins were taken under.
+  * definition so the entry points (Bench, Verify, ScaleBench, Profile,
+  * ExplainProbe, RunAlgorithm, GraphDemo, the test harness) can never
+  * drift onto different engine configs than the ones the SCALE_RECORD
+  * measurements and PlanSpec pins were taken under.
   *
   *  - `codegen.hugeMethodLimit=8000`: stages whose largest generated
   *    method would exceed HotSpot's ~8K-bytecode JIT cap run in the RAW
@@ -57,10 +58,39 @@ object SparkDefaults {
     // re-compiles what the queries in between evicted — measured with
     // CodegenMetrics (graft.tools.Profile `compiles=`): the CDC
     // maintenance loops' STEADY reps re-Janino'd 261/214/166 classes at
-    // the default vs 74/66/64 at a bigger cache (r20 optimization round;
-    // the residue is per-batch exprId churn, not eviction). 2000 entries
-    // of small generated classes is trivial driver memory next to an
-    // 8 GB heap and is the production-sane value for any long-lived
-    // session serving a diverse query mix.
+    // the default vs 74/66/64 at a bigger cache (r20 optimization round).
+    // That residue was not eviction: the two settings below remove it.
+    // 2000 entries of small generated classes is trivial driver memory
+    // next to an 8 GB heap and is the production-sane value for any
+    // long-lived session serving a diverse query mix.
     .config("spark.sql.codegen.cache.maxEntries", "2000")
+    // Spark keys its generated-class cache on (thread context
+    // classloader, source). Every `writeStream.start()` clones the session
+    // under a new UUID, and with artifact isolation on (the default) that
+    // query's tasks run under a fresh per-session executor classloader, so
+    // the first micro-batch of EVERY streaming drain re-compiled every plan
+    // it ran (47 classes for a 2-batch CDC WCC drain) and kept the
+    // duplicates alive in the cache.
+    // Isolation only scopes the artifacts (jars, files, REPL classes) a
+    // session adds to itself. The condition it relies on: the engine adds
+    // none, so off costs it nothing. A deployment whose Spark Connect
+    // clients add their own jars must turn it back on.
+    // `graft.CodegenReuseSpec` pins both this and the setting below.
+    .config("spark.sql.artifact.isolation.enabled", "false")
+    // Whole-stage classes are named GeneratedIteratorForCodegenStage<id>,
+    // and the id is a position, not a body: each planning pass numbers its
+    // stages in plan order, and adaptive execution keeps counting across
+    // its re-plans. The same stage body therefore gets one id in a lazy
+    // checkpoint's static plan (`checkpointing.staticRows`), another in an
+    // adaptive query, another after a timing-dependent re-plan or when a
+    // union lists its inputs in another order — and every id compiles the
+    // byte-identical body again. With both settings the CDC gates' warm
+    // reps compile 0 classes, down from 40-91 (BASELINE.md), and the
+    // cdc-stream benchmark's live heap is about 5 MB smaller.
+    // Off, every stage's class is `GeneratedIterator` and the cache key is
+    // the body alone; the id stays in the plan, in `explain` output and in
+    // a source comment the cache key ignores. The condition it relies on:
+    // nothing maps a generated class name back to its stage (JVM stack
+    // traces and profiles then name `GeneratedIterator`, not the stage).
+    .config("spark.sql.codegen.useIdInClassName", "false")
 }

@@ -13,10 +13,10 @@ import graft.pregel.{MessageDirection, Pregel}
 object GraphDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
+    val spark = graft.SparkDefaults(SparkSession.builder()
       .master("local[4]")
       .appName("graft-demo")
-      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.shuffle.partitions", "4"))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -41,10 +41,13 @@ object Profile {
       // Codegen-compilation attribution (host-independent, unlike wall
       // clock on this bursty sandbox): Janino compile count + millis per
       // rep, from Spark's own CodegenMetrics. A warm rep that still
-      // compiles means the 100-entry generated-class cache evicted its
-      // classes between reps — the recompile tax the
-      // spark.sql.codegen.cache.maxEntries default levies on a
-      // 273-query board.
+      // compiles missed the generated-class cache, keyed on (thread
+      // context classloader, source). The causes measured so far, each
+      // removed in graft.SparkDefaults: eviction at Spark's 100-entry
+      // default, the fresh executor classloader every streaming query
+      // start gets under artifact isolation, and a whole-stage class name
+      // carrying the codegen stage id, which differs with the body's plan
+      // position.
       val cg = org.apache.spark.metrics.source.CodegenMetrics
       val times = (1 to reps).map { _ =>
         val c0 = cg.METRIC_COMPILATION_TIME.getCount

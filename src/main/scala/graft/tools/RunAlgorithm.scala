@@ -32,10 +32,10 @@ object RunAlgorithm {
       .getOrElse(Runtime.getRuntime.availableProcessors)
 
     // spark-submit injects the master; standalone runMain falls back to local.
-    val spark = SparkSession.builder()
+    val spark = graft.SparkDefaults(SparkSession.builder()
       .appName(s"graft-$algorithm")
       .master(sys.props.getOrElse("spark.master", s"local[$nParts]"))
-      .config("spark.sql.shuffle.partitions", nParts.toString)
+      .config("spark.sql.shuffle.partitions", nParts.toString))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
