@@ -151,6 +151,39 @@ object SparkEntry {
     df.sparkSession.table(name)
   }
 
+  /** Stage `staged` as `nFiles` mtime-ordered parquet files split by
+    * `idCol`, then drain them one file per micro-batch through the
+    * maintenance loop `loop` builds over the file stream (the st30–st36
+    * gates). Returns once the stream has drained.
+    */
+  private def stageAndDrain(s: SparkSession, staged: DataFrame, tag: String,
+      nFiles: Int, idCol: String)(loop: DataFrame =>
+        org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row])
+      : Unit = {
+    val dir = stageMtimeFiles(staged, tag, nFiles = nFiles, idCol = idCol)
+    val schema = s.read.parquet(s"$dir/in").schema
+    val stream = s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
+    loop(stream)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+  }
+
+  /** The change log of the CDC gates (st32/st33/st34/st36): every edge
+    * added in one of 3 batches by `(src + dst) % 3`, then a 4th batch
+    * taking down the `(src + dst) % 7 == 1` slice; `stage_id` is the
+    * batch.
+    */
+  private def addsThenTakedown(edges: DataFrame): DataFrame =
+    edges.select(col("src"), col("dst"),
+        lit("add").as("op"),
+        pmod(col("src") + col("dst"), lit(3L)).as("stage_id"))
+      .unionByName(edges
+        .filter(pmod(col("src") + col("dst"), lit(7L)) === 1L)
+        .select(col("src"), col("dst"), lit("remove").as("op"),
+          lit(3L).as("stage_id")))
+
   /** The shared st29/st29b/st29c body — the streaming as-of enrichment
     * trio over the event stream: the purchase feature table persists
     * BUCKETED by the as-of key (the layout a long-lived serving job
@@ -3377,17 +3410,11 @@ object SparkEntry {
     // recompute over ALL edges — batch boundaries invisible because
     // the composition is exact at every step. Oracle = g07 verbatim.
     "st30_stream_wcc_maintain" -> ((s, d) => {
-      val dir = stageMtimeFiles(custNationRegionEdges(s, d), "graft-st30",
-        nFiles = 4, idCol = "src")
-      val schema = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-      graft.streaming.Streams.initWccLabelsTable(s, "st30_labels")
-      val q = graft.streaming.Streams
-        .streamingWccMaintain(stream, "st30_labels")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      stageAndDrain(s, custNationRegionEdges(s, d), "graft-st30",
+          nFiles = 4, idCol = "src") { stream =>
+        graft.streaming.Streams.initWccLabelsTable(s, "st30_labels")
+        graft.streaming.Streams.streamingWccMaintain(stream, "st30_labels")
+      }
       // The maintenance loop rewrote the table from a cloned session;
       // this (outer) session's relation cache is stale the same way.
       s.catalog.refreshTable("st30_labels")
@@ -3405,16 +3432,12 @@ object SparkEntry {
       val edges = nations.as("a").join(nations.as("b"),
           col("a.r") === col("b.r") && col("a.k") < col("b.k"))
         .select(col("a.k").as("src"), col("b.k").as("dst"))
-      val dir = stageMtimeFiles(edges, "graft-st31", nFiles = 4, idCol = "src")
-      val schema = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-      graft.streaming.Streams.initTriangleTables(s, "st31_counts", "st31_adj")
-      val q = graft.streaming.Streams
-        .streamingTriangleMaintain(stream, "st31_counts", "st31_adj")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      stageAndDrain(s, edges, "graft-st31", nFiles = 4, idCol = "src") {
+        stream =>
+          graft.streaming.Streams.initTriangleTables(s, "st31_counts", "st31_adj")
+          graft.streaming.Streams
+            .streamingTriangleMaintain(stream, "st31_counts", "st31_adj")
+      }
       s.catalog.refreshTable("st31_counts")
       // Vertex universe: the g11 oracle reports every nation; nations
       // whose edges all arrived carry counts, the output covers edge
@@ -3432,25 +3455,13 @@ object SparkEntry {
     // net edge set, stranded vertices as singletons. Oracle = g37's.
     "st32_stream_wcc_cdc" -> ((s, d) => {
       val edges = custNationRegionEdges(s, d)
-      val staged = edges.select(col("src"), col("dst"),
-          lit("add").as("op"),
-          pmod(col("src") + col("dst"), lit(3L)).as("stage_id"))
-        .unionByName(edges
-          .filter(pmod(col("src") + col("dst"), lit(7L)) === 1L)
-          .select(col("src"), col("dst"), lit("remove").as("op"),
-            lit(3L).as("stage_id")))
-      val dir = stageMtimeFiles(staged, "graft-st32", nFiles = 4,
-        idCol = "stage_id")
-      val schema = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-      graft.streaming.Streams.initWccCdcTables(s, "st32_labels",
-        "st32_edges", "st32_tombs")
-      val q = graft.streaming.Streams.streamingWccMaintainCdc(
-          stream, "st32_labels", "st32_edges", "st32_tombs")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      stageAndDrain(s, addsThenTakedown(edges), "graft-st32", nFiles = 4,
+          idCol = "stage_id") { stream =>
+        graft.streaming.Streams.initWccCdcTables(s, "st32_labels",
+          "st32_edges", "st32_tombs")
+        graft.streaming.Streams.streamingWccMaintainCdc(
+            stream, "st32_labels", "st32_edges", "st32_tombs")
+      }
       s.catalog.refreshTable("st32_labels")
       s.table("st32_labels")
     }),
@@ -3463,25 +3474,13 @@ object SparkEntry {
     // they re-enter as singletons off the maintained labels' universe.
     "st36_cdc_log_compact" -> ((s, d) => {
       val edges = custNationRegionEdges(s, d)
-      val staged = edges.select(col("src"), col("dst"),
-          lit("add").as("op"),
-          pmod(col("src") + col("dst"), lit(3L)).as("stage_id"))
-        .unionByName(edges
-          .filter(pmod(col("src") + col("dst"), lit(7L)) === 1L)
-          .select(col("src"), col("dst"), lit("remove").as("op"),
-            lit(3L).as("stage_id")))
-      val dir = stageMtimeFiles(staged, "graft-st36", nFiles = 4,
-        idCol = "stage_id")
-      val schema = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-      graft.streaming.Streams.initWccCdcTables(s, "st36_labels",
-        "st36_edges", "st36_tombs")
-      val q = graft.streaming.Streams.streamingWccMaintainCdc(
-          stream, "st36_labels", "st36_edges", "st36_tombs")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      stageAndDrain(s, addsThenTakedown(edges), "graft-st36", nFiles = 4,
+          idCol = "stage_id") { stream =>
+        graft.streaming.Streams.initWccCdcTables(s, "st36_labels",
+          "st36_edges", "st36_tombs")
+        graft.streaming.Streams.streamingWccMaintainCdc(
+            stream, "st36_labels", "st36_edges", "st36_tombs")
+      }
       graft.streaming.Streams.compactCdcEdgeLog(s, "st36_edges",
         "st36_tombs")
       s.catalog.refreshTable("st36_edges")
@@ -3502,25 +3501,13 @@ object SparkEntry {
       val edges = nations.as("a").join(nations.as("b"),
           col("a.r") === col("b.r") && col("a.k") < col("b.k"))
         .select(col("a.k").as("src"), col("b.k").as("dst"))
-      val staged = edges.select(col("src"), col("dst"),
-          lit("add").as("op"),
-          pmod(col("src") + col("dst"), lit(3L)).as("stage_id"))
-        .unionByName(edges
-          .filter(pmod(col("src") + col("dst"), lit(7L)) === 1L)
-          .select(col("src"), col("dst"), lit("remove").as("op"),
-            lit(3L).as("stage_id")))
-      val dir = stageMtimeFiles(staged, "graft-st33", nFiles = 4,
-        idCol = "stage_id")
-      val schema = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-      graft.streaming.Streams.initTriangleCdcTables(s, "st33_counts",
-        "st33_adj", "st33_tombs")
-      val q = graft.streaming.Streams.streamingTriangleMaintainCdc(
-          stream, "st33_counts", "st33_adj", "st33_tombs")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      stageAndDrain(s, addsThenTakedown(edges), "graft-st33", nFiles = 4,
+          idCol = "stage_id") { stream =>
+        graft.streaming.Streams.initTriangleCdcTables(s, "st33_counts",
+          "st33_adj", "st33_tombs")
+        graft.streaming.Streams.streamingTriangleMaintainCdc(
+            stream, "st33_counts", "st33_adj", "st33_tombs")
+      }
       s.catalog.refreshTable("st33_counts")
       nations.select(col("k").as("id"))
         .join(s.table("st33_counts").withColumnRenamed("triangles", "__t"),
@@ -3540,18 +3527,13 @@ object SparkEntry {
       val edges = custNationRegionEdges(s, d)
       val staged = edges.select(col("src"), col("dst"),
         pmod(col("src") + col("dst"), lit(3L)).as("stage_id"))
-      val dir = stageMtimeFiles(staged, "graft-st35", nFiles = 3,
-        idCol = "stage_id")
-      val schema = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-      graft.streaming.Streams.initPageRankTables(s, "st35_rawmass",
-        "st35_edges")
-      val q = graft.streaming.Streams.streamingPageRankMaintain(
-          stream, "st35_rawmass", "st35_edges", iterations = 2, tol = 1e-9)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      stageAndDrain(s, staged, "graft-st35", nFiles = 3, idCol = "stage_id") {
+        stream =>
+          graft.streaming.Streams.initPageRankTables(s, "st35_rawmass",
+            "st35_edges")
+          graft.streaming.Streams.streamingPageRankMaintain(
+            stream, "st35_rawmass", "st35_edges", iterations = 2, tol = 1e-9)
+      }
       s.catalog.refreshTable("st35_rawmass")
       val rm = s.table("st35_rawmass")
       // Normalize exactly as PageRankResult.ranks does (crossJoin with
@@ -3574,25 +3556,13 @@ object SparkEntry {
       val edges = nations.as("a").join(nations.as("b"),
           col("a.r") === col("b.r") && col("a.k") < col("b.k"))
         .select(col("a.k").as("src"), col("b.k").as("dst"))
-      val staged = edges.select(col("src"), col("dst"),
-          lit("add").as("op"),
-          pmod(col("src") + col("dst"), lit(3L)).as("stage_id"))
-        .unionByName(edges
-          .filter(pmod(col("src") + col("dst"), lit(7L)) === 1L)
-          .select(col("src"), col("dst"), lit("remove").as("op"),
-            lit(3L).as("stage_id")))
-      val dir = stageMtimeFiles(staged, "graft-st34", nFiles = 4,
-        idCol = "stage_id")
-      val schema = s.read.parquet(s"$dir/in").schema
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
-      graft.streaming.Streams.initKCoreCdcTables(s, "st34_cores",
-        "st34_edges", "st34_tombs")
-      val q = graft.streaming.Streams.streamingKCoreMaintainCdc(
-          stream, "st34_cores", "st34_edges", "st34_tombs")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      stageAndDrain(s, addsThenTakedown(edges), "graft-st34", nFiles = 4,
+          idCol = "stage_id") { stream =>
+        graft.streaming.Streams.initKCoreCdcTables(s, "st34_cores",
+          "st34_edges", "st34_tombs")
+        graft.streaming.Streams.streamingKCoreMaintainCdc(
+            stream, "st34_cores", "st34_edges", "st34_tombs")
+      }
       s.catalog.refreshTable("st34_cores")
       s.table("st34_cores")
     }),

@@ -453,10 +453,7 @@ object ConnectedComponents {
     // join instead of OOMing the executors (r19 verdict).
     val (remCkpt, nRem) = phase("iwd:rem-ckpt") {
       org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(
-        removedEdges.filter(col(SRC) =!= col(DST))
-          .select(least(col(SRC), col(DST)).as("__dw_l"),
-            greatest(col(SRC), col(DST)).as("__dw_g"))
-          .distinct())
+        GraphFrame.canonicalPairs(removedEdges))
     }
     val rem = DeltaBroadcast.hintIfBounded(remCkpt, nRem)
     // Components containing a removed edge — the only ones that can
@@ -465,7 +462,7 @@ object ConnectedComponents {
     // Broadcast under the same guard: bounded by |rem| (one label per
     // removed edge).
     val affected = DeltaBroadcast.hintIfBounded(rem
-      .join(prev.select(col(ID).as("__dw_l"), col("component")), Seq("__dw_l"))
+      .join(prev.select(col(ID).as(SRC), col("component")), Seq(SRC))
       .select(col("component")).distinct(), nRem)
     // Their full membership (bounded by the affected components' size).
     val affVerts = phase("iwd:affverts-ckpt") {
@@ -481,11 +478,8 @@ object ConnectedComponents {
     // vertex derivation); truncation shares one RDD between them. Bounded
     // by the affected components' edge mass.
     val sub = org.apache.spark.sql.graft.checkpointing.localCheckpointNoStats(
-      baseEdges.select(col(SRC), col(DST))
-        .join(affVerts.select(col(ID).as(SRC)), Seq(SRC), "left_semi")
-        .join(rem,
-          least(col(SRC), col(DST)) === col("__dw_l") &&
-            greatest(col(SRC), col(DST)) === col("__dw_g"), "left_anti"),
+      GraphFrame.withoutPairs(baseEdges.select(col(SRC), col(DST))
+        .join(affVerts.select(col(ID).as(SRC)), Seq(SRC), "left_semi"), rem),
       eager = false)
     // Recompute ONLY inside the affected components; stranded members
     // self-label (min-member labeling holds: a singleton's min is

@@ -232,11 +232,7 @@ class KCore(graph: GraphFrame) {
     val preparedVertices = warmOpt match {
       case None => basePrepared.withColumn("__seed", col("degree"))
       case Some((prevCores, addedEdges)) =>
-        val nAdded = addedEdges
-          .filter(col(SRC) =!= col(DST))
-          .select(least(col(SRC), col(DST)).as("a"),
-            greatest(col(SRC), col(DST)).as("b"))
-          .distinct().count()
+        val nAdded = GraphFrame.canonicalPairs(addedEdges).count()
         basePrepared.join(
             prevCores.select(col(ID), col("kcore").as("__prev")), Seq(ID), "left")
           .select(col(ID), col("degree"),

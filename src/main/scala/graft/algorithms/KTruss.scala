@@ -68,10 +68,8 @@ object KTruss {
 
   /** Canonical undirected simple edges `[a, b]`, a < b. */
   private def canonical(edges: DataFrame): DataFrame =
-    edges
-      .select(least(col(GraphFrame.SRC), col(GraphFrame.DST)).as("a"),
-        greatest(col(GraphFrame.SRC), col(GraphFrame.DST)).as("b"))
-      .filter(col("a") =!= col("b")).distinct()
+    GraphFrame.canonicalPairs(edges)
+      .select(col(GraphFrame.SRC).as("a"), col(GraphFrame.DST).as("b"))
 
   /** Per-edge triangle support of the canonical graph `cur` — one full
     * degree-oriented Schank-Wagner enumeration (wedges expand only from

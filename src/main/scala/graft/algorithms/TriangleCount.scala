@@ -153,10 +153,7 @@ object TriangleCount {
     // broadcast relation (r19 verdict).
     val (deltaNewCkpt, nNew) = graft.util.PhaseTiming.phase("tri-inc:deltaNew") {
       org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(
-        deltaEdges.filter(col(SRC) =!= col(DST))
-          .select(least(col(SRC), col(DST)).as(SRC),
-            greatest(col(SRC), col(DST)).as(DST))
-          .distinct()
+        GraphFrame.canonicalPairs(deltaEdges)
           .join(symBase, Seq(SRC, DST), "left_anti"))
     }
     val deltaNew = DeltaBroadcast.hintIfBounded(deltaNewCkpt, nNew)
@@ -289,10 +286,7 @@ object TriangleCount {
     // unmaterialized frame would re-run its lineage).
     val (remD, nRem) = graft.util.PhaseTiming.phase("tri-iwd:remDistinct") {
       org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(
-        removedEdges.filter(col(SRC) =!= col(DST))
-          .select(least(col(SRC), col(DST)).as(SRC),
-            greatest(col(SRC), col(DST)).as(DST))
-          .distinct())
+        GraphFrame.canonicalPairs(removedEdges))
     }
     // Hinted when bounded: every consumer below (the two
     // degree-orientation joins, the symPost anti, the destroy fanout)
@@ -342,12 +336,7 @@ object TriangleCount {
     // pass reads it three times, and three cheap re-filters of the
     // already-materialized symBase beat one extra E-sized checkpoint
     // write (measured 73 s -> re-probed after this change at 16.8 M).
-    val symPost = symBase
-      .join(DeltaBroadcast.hintIfBounded(
-          remCanonCkpt.select( // already canonical: src < dst
-            col(SRC).as("__td_l"), col(DST).as("__td_g")), nRem),
-        least(col(SRC), col(DST)) === col("__td_l") &&
-          greatest(col(SRC), col(DST)) === col("__td_g"), "left_anti")
+    val symPost = GraphFrame.withoutPairs(symBase, remCanon)
     // Additions compose over the edited adjacency (baseEdges unused by
     // incremental when the adjacency is supplied). Output is eagerly
     // checkpointed by incremental, so releasing our intermediates after

@@ -246,29 +246,47 @@ object GraphFrame {
   private[graft] def symmetrizeEdges(edges: DataFrame, doDistinct: Boolean): DataFrame = {
     // Same one-generate shape as [[symmetrize]] — the union form scanned
     // the (possibly expensive) edge lineage once per direction.
-    val noLoops = edges.filter(col(SRC) =!= col(DST))
-    if (doDistinct) {
-      // Dedup BEFORE the generate, on the canonical (least, greatest)
-      // form: (a,b) and (b,a) collapse to one row, so the aggregate
-      // processes m rows instead of the 2m a post-explode distinct
-      // would — and the explode of the deduped set is duplicate-free by
-      // construction (each undirected edge emits exactly its two
-      // directions). The 2m-row post-explode distinct doubled every
-      // task's partial hash-agg state and OOM'd the 67 M-edge probe.
-      noLoops
-        .select(least(col(SRC), col(DST)).as(SRC),
-          greatest(col(SRC), col(DST)).as(DST))
-        .distinct()
-        .select(explode(array(
-          struct(col(SRC), col(DST)),
-          struct(col(DST).as(SRC), col(SRC).as(DST)))).as("__sym"))
-        .select(col(s"__sym.$SRC").as(SRC), col(s"__sym.$DST").as(DST))
-    } else {
-      noLoops
-        .select(explode(array(
-          struct(col(SRC), col(DST)),
-          struct(col(DST).as(SRC), col(SRC).as(DST)))).as("__sym"))
-        .select(col(s"__sym.$SRC").as(SRC), col(s"__sym.$DST").as(DST))
-    }
+    // doDistinct dedups BEFORE the generate, on the canonical pairs: (a,b) and (b,a)
+    // collapse to one row, so the aggregate processes m rows instead of
+    // the 2m a post-explode distinct would — and the explode of the
+    // deduped set is duplicate-free by construction (each undirected
+    // edge emits exactly its two directions). The 2m-row post-explode
+    // distinct doubled every task's partial hash-agg state and OOM'd the
+    // 67 M-edge probe.
+    val undirected =
+      if (doDistinct) canonicalPairs(edges) else edges.filter(col(SRC) =!= col(DST))
+    undirected
+      .select(explode(array(
+        struct(col(SRC), col(DST)),
+        struct(col(DST).as(SRC), col(SRC).as(DST)))).as("__sym"))
+      .select(col(s"__sym.$SRC").as(SRC), col(s"__sym.$DST").as(DST))
   }
+
+  /** The undirected simple form of an edge frame: self-loops dropped,
+    * each edge projected to its `(least, greatest)` pair as `[src, dst]`,
+    * duplicates removed — so `(a,b)`, `(b,a)` and a repeated `(a,b)` are
+    * one row. Every undirected edge set in the library (tombstones,
+    * removal and addition deltas, the k-truss edge table) is this form.
+    */
+  private[graft] def canonicalPairs(edges: DataFrame): DataFrame =
+    edges.filter(col(SRC) =!= col(DST))
+      .select(least(col(SRC), col(DST)).as(SRC),
+        greatest(col(SRC), col(DST)).as(DST))
+      .distinct()
+
+  /** `edges` minus every edge whose undirected pair is in `pairs`: a
+    * left-anti join on `(least, greatest)`, so both orientations and
+    * every copy of a listed edge drop, while `edges` keeps its columns,
+    * orientation and duplicates otherwise. `pairs` must be canonical
+    * (`src < dst`, as [[canonicalPairs]] makes them) and is joined
+    * exactly as the caller hinted it — `broadcast(...)` or
+    * `DeltaBroadcast.hintIfBounded(...)` carry through. This is the one
+    * predicate behind "the current graph is the log minus its
+    * tombstones": the CDC maintenance loops read with it and
+    * compaction writes with it.
+    */
+  private[graft] def withoutPairs(edges: DataFrame, pairs: DataFrame): DataFrame =
+    edges.join(pairs.select(col(SRC).as("__wp_l"), col(DST).as("__wp_g")),
+      least(col(SRC), col(DST)) === col("__wp_l") &&
+        greatest(col(SRC), col(DST)) === col("__wp_g"), "left_anti")
 }

@@ -1,7 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.checkpointing
+import org.apache.spark.sql.streaming.DataStreamWriter
+
+import graft.graph.GraphFrame.{canonicalPairs, withoutPairs, DST, SRC}
 
 /** Structured Streaming operators for the training-data pipeline. The
   * reference engine is batch-only ("out-of-core" = disk-spilled batch, no
@@ -557,6 +561,89 @@ object Streams {
     }
   }
 
+  /** One table write of a maintenance batch: `frame` saved as `table` in
+    * `mode` ("overwrite" or "append").
+    */
+  private case class TableWrite(table: String, mode: String, frame: DataFrame)
+
+  /** What a maintenance batch body hands back: its table writes, in the
+    * order they must happen, and the checkpointed frames to release once
+    * they have.
+    */
+  private case class BatchOut(writes: Seq[TableWrite], checkpoints: Seq[DataFrame])
+
+  /** Perform `writes` in order, one named phase each. The order is the
+    * crash contract of the loop (or compaction) that lists them: a crash
+    * between two writes leaves exactly the earlier ones landed.
+    */
+  private def writeInOrder(tag: String, writes: Seq[TableWrite]): Unit =
+    writes.foreach { w =>
+      phase(s"$tag:write-${w.table}") {
+        w.frame.write.mode(w.mode).saveAsTable(w.table)
+      }
+    }
+
+  /** The foreachBatch skeleton of the graph maintenance loops (st30–st35):
+    * require a stream, skip empty micro-batches, re-arm adaptive execution
+    * ([[withBatchSession]]), refresh `tables`, run `body`, perform the
+    * writes it lists in their order, then release its checkpoints. The
+    * per-batch `refreshTable` is LOAD-BEARING twice over: the cloned
+    * micro-batch session pins each table's file listing at stream start,
+    * and the loop itself rewrites the tables every batch. A frame `body`
+    * lists for writing must be materialized, or read only materialized
+    * frames: the writes overwrite or append to tables the lineages read.
+    */
+  private def maintenanceLoop(stream: DataFrame, notAStream: String,
+      tag: String, tables: Seq[String])(
+      body: (SparkSession, DataFrame) => BatchOut): DataStreamWriter[Row] = {
+    require(stream.isStreaming, notAStream)
+    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+      if (!phase(s"$tag:isEmpty")(batch.isEmpty)) withBatchSession(batch) { ss =>
+        phase(s"$tag:refresh")(tables.foreach(ss.catalog.refreshTable))
+        val out = body(ss, batch)
+        writeInOrder(tag, out.writes)
+        out.checkpoints.foreach(checkpointing.release)
+      }
+    }
+  }
+
+  /** A change batch `[src, dst, op]` split into its adds and its removes,
+    * each `[src, dst]`.
+    */
+  private def splitChanges(changes: DataFrame, opCol: String): (DataFrame, DataFrame) = {
+    def edgesOf(op: String) =
+      changes.filter(col(opCol) === op).select(col(SRC), col(DST))
+    (edgesOf("add"), edgesOf("remove"))
+  }
+
+  /** The tombstone table after a change batch: `(tombstones ∪ removes) ∖
+    * addPairs`, canonical. Removals apply first and adds after, so an
+    * edge removed and re-added in one batch nets to PRESENT, and an add
+    * RESURRECTS a matching tombstone — without that, a re-added edge's
+    * old log row and its new one would both die to the stale tombstone.
+    * `addPairs` is the batch's canonical adds, hinted as the caller
+    * wants them joined.
+    */
+  private def nextTombstones(tomb: DataFrame, removes: DataFrame,
+      addPairs: DataFrame): DataFrame =
+    canonicalPairs(tomb.unionByName(removes))
+      .join(addPairs, Seq(SRC, DST), "left_anti")
+
+  /** Empty `[src, dst]` frame: the cold state of every edge log,
+    * adjacency and tombstone table.
+    */
+  private def emptyEdges(spark: SparkSession): DataFrame =
+    spark.range(0).select(col("id").as(SRC), col("id").as(DST))
+
+  /** Recreate `table` from `frame`, its cold state. A prior JVM's
+    * managed-table location survives its catalog, so it is dropped with
+    * the table, or the CREATE fails with LOCATION_ALREADY_EXISTS.
+    */
+  private def bootstrap(spark: SparkSession, table: String, frame: DataFrame): Unit = {
+    graft.sources.BucketedTables.dropWithLocation(spark, table)
+    frame.write.mode("overwrite").saveAsTable(table)
+  }
+
   /** STREAMING WCC MAINTENANCE (st30 — the incremental-graph family at
     * ingest): edge additions arrive as a stream; each micro-batch
     * composes yesterday's labels with the batch through
@@ -574,41 +661,26 @@ object Streams {
     *
     * `labelsTable` must exist (bootstrap: [[initWccLabelsTable]] for a
     * cold start, or any min-member components frame saved as a table).
-    * The per-batch `refreshTable` is LOAD-BEARING twice over here: the
-    * cloned micro-batch session pins the table's file listing at stream
-    * start AND this loop itself rewrites the table every batch.
     */
   def streamingWccMaintain(stream: DataFrame, labelsTable: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(stream.isStreaming,
+      : DataStreamWriter[Row] =
+    maintenanceLoop(stream,
       "streamingWccMaintain consumes a STREAM of edges — batch deltas " +
-        "call ConnectedComponents.incremental directly")
-    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) withBatchSession(batch) { ss =>
-        ss.catalog.refreshTable(labelsTable)
-        val prev = ss.table(labelsTable)
-        // Materialize BEFORE overwriting the table the lineage reads.
-        val next = graft.algorithms.ConnectedComponents
-          .incremental(prev, batch.select(col(graft.graph.GraphFrame.SRC),
-            col(graft.graph.GraphFrame.DST)))
-          .localCheckpoint(true)
-        next.write.mode("overwrite").saveAsTable(labelsTable)
-        org.apache.spark.sql.graft.checkpointing.release(next)
-      }
+        "call ConnectedComponents.incremental directly",
+      "wcc", Seq(labelsTable)) { (ss, batch) =>
+      // Materialize BEFORE overwriting the table the lineage reads.
+      val next = graft.algorithms.ConnectedComponents
+        .incremental(ss.table(labelsTable), batch.select(col(SRC), col(DST)))
+        .localCheckpoint(true)
+      BatchOut(Seq(TableWrite(labelsTable, "overwrite", next)), Seq(next))
     }
-  }
 
   /** Empty `[id, component]` bootstrap for [[streamingWccMaintain]] —
     * the cold-start state of a brand-new ingest loop.
     */
-  def initWccLabelsTable(spark: org.apache.spark.sql.SparkSession,
-      labelsTable: String): Unit = {
-    // A prior JVM's managed-table location survives its catalog: clear
-    // it or the bootstrap CREATE fails with LOCATION_ALREADY_EXISTS.
-    graft.sources.BucketedTables.dropWithLocation(spark, labelsTable)
-    spark.range(0).select(col("id"), col("id").as("component"))
-      .write.mode("overwrite").saveAsTable(labelsTable)
-  }
+  def initWccLabelsTable(spark: SparkSession, labelsTable: String): Unit =
+    bootstrap(spark, labelsTable,
+      spark.range(0).select(col("id"), col("id").as("component")))
 
   /** STREAMING TRIANGLE-COUNT MAINTENANCE (st31 — [[streamingWccMaintain]]'s
     * companion for the triangle family): each micro-batch of edge
@@ -630,52 +702,34 @@ object Streams {
     * snapshot tag; the exactness claims here are per completed batch).
     */
   def streamingTriangleMaintain(stream: DataFrame, countsTable: String,
-      adjTable: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(stream.isStreaming,
+      adjTable: String): DataStreamWriter[Row] =
+    maintenanceLoop(stream,
       "streamingTriangleMaintain consumes a STREAM of edges — batch " +
-        "deltas call TriangleCount.incremental directly")
-    val SRC = graft.graph.GraphFrame.SRC
-    val DST = graft.graph.GraphFrame.DST
-    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) withBatchSession(batch) { ss =>
-        ss.catalog.refreshTable(countsTable)
-        ss.catalog.refreshTable(adjTable)
-        val prev = ss.table(countsTable)
-        val sym = ss.table(adjTable)
-        val delta = batch.select(col(SRC), col(DST)).localCheckpoint(true)
-        val next = graft.algorithms.TriangleCount
-          .incremental(prev, sym, delta, Some(sym))
-          .localCheckpoint(true)
-        // Truly-new undirected edges (the same filter the compose
-        // applied), appended in both directions — delta-sized write.
-        val newCanon = delta.filter(col(SRC) =!= col(DST))
-          .select(least(col(SRC), col(DST)).as(SRC),
-            greatest(col(SRC), col(DST)).as(DST))
-          .distinct()
-          .join(sym, Seq(SRC, DST), "left_anti")
-        val newSym = newCanon.select(col(SRC), col(DST))
-          .unionByName(newCanon.select(col(DST).as(SRC), col(SRC).as(DST)))
-          .localCheckpoint(true)
-        next.write.mode("overwrite").saveAsTable(countsTable)
-        newSym.write.mode("append").saveAsTable(adjTable)
-        org.apache.spark.sql.graft.checkpointing.release(next)
-        org.apache.spark.sql.graft.checkpointing.release(newSym)
-        org.apache.spark.sql.graft.checkpointing.release(delta)
-      }
+        "deltas call TriangleCount.incremental directly",
+      "tri", Seq(countsTable, adjTable)) { (ss, batch) =>
+      val sym = ss.table(adjTable)
+      val delta = batch.select(col(SRC), col(DST)).localCheckpoint(true)
+      val next = graft.algorithms.TriangleCount
+        .incremental(ss.table(countsTable), sym, delta, Some(sym))
+        .localCheckpoint(true)
+      // Truly-new undirected edges (the same filter the compose
+      // applied), appended in both directions — delta-sized write.
+      val newCanon = canonicalPairs(delta).join(sym, Seq(SRC, DST), "left_anti")
+      val newSym = newCanon.select(col(SRC), col(DST))
+        .unionByName(newCanon.select(col(DST).as(SRC), col(SRC).as(DST)))
+        .localCheckpoint(true)
+      BatchOut(
+        Seq(TableWrite(countsTable, "overwrite", next),
+          TableWrite(adjTable, "append", newSym)),
+        Seq(next, newSym, delta))
     }
-  }
 
   /** Empty bootstraps for [[streamingTriangleMaintain]]. */
-  def initTriangleTables(spark: org.apache.spark.sql.SparkSession,
-      countsTable: String, adjTable: String): Unit = {
-    Seq(countsTable, adjTable).foreach(
-      graft.sources.BucketedTables.dropWithLocation(spark, _))
-    spark.range(0).select(col("id"), col("id").as("triangles"))
-      .write.mode("overwrite").saveAsTable(countsTable)
-    spark.range(0).select(col("id").as(graft.graph.GraphFrame.SRC),
-        col("id").as(graft.graph.GraphFrame.DST))
-      .write.mode("overwrite").saveAsTable(adjTable)
+  def initTriangleTables(spark: SparkSession, countsTable: String,
+      adjTable: String): Unit = {
+    bootstrap(spark, countsTable,
+      spark.range(0).select(col("id"), col("id").as("triangles")))
+    bootstrap(spark, adjTable, emptyEdges(spark))
   }
 
   /** STREAMING WCC MAINTENANCE, CDC FORM (st32 — [[streamingWccMaintain]]
@@ -700,83 +754,42 @@ object Streams {
     */
   def streamingWccMaintainCdc(stream: DataFrame, labelsTable: String,
       edgesTable: String, tombstonesTable: String, opCol: String = "op")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(stream.isStreaming,
+      : DataStreamWriter[Row] =
+    maintenanceLoop(stream,
       "streamingWccMaintainCdc consumes a change STREAM — batch deltas " +
-        "call ConnectedComponents.incrementalWithDeletions directly")
-    val SRC = graft.graph.GraphFrame.SRC
-    val DST = graft.graph.GraphFrame.DST
-    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      if (!phase("wcc-cdc:isEmpty")(batch.isEmpty)) withBatchSession(batch) { ss =>
-        phase("wcc-cdc:refresh") {
-          Seq(labelsTable, edgesTable, tombstonesTable)
-            .foreach(ss.catalog.refreshTable)
-        }
-        val b = phase("wcc-cdc:batch-ckpt") {
-          batch.select(col(SRC), col(DST), col(opCol))
-            .localCheckpoint(true)
-        }
-        val adds = b.filter(col(opCol) === "add").select(col(SRC), col(DST))
-        val removes = b.filter(col(opCol) === "remove")
-          .select(col(SRC), col(DST))
-        val tomb = ss.table(tombstonesTable)
-        val baseEdges = ss.table(edgesTable)
-          .join(broadcast(tomb.select(col(SRC).as("__cd_l"),
-            col(DST).as("__cd_g"))),
-            least(col(SRC), col(DST)) === col("__cd_l") &&
-              greatest(col(SRC), col(DST)) === col("__cd_g"), "left_anti")
-        val next = phase("wcc-cdc:compose") {
-          graft.algorithms.ConnectedComponents
-            .incrementalWithDeletions(ss.table(labelsTable), baseEdges,
-              adds, removes)
-        }
-        // Tombstones are delta-scale, so they are REWRITTEN, not
-        // appended blindly: this batch's adds RESURRECT any matching
-        // tombstone — without that, a re-added edge's old log row and
-        // its new one would both die to the stale tombstone. Order
-        // mirrors the compose (removals first, adds after): an edge
-        // removed and re-added in one batch nets to present.
-        def canon(df: DataFrame) = df.filter(col(SRC) =!= col(DST))
-          .select(least(col(SRC), col(DST)).as(SRC),
-            greatest(col(SRC), col(DST)).as(DST))
-          .distinct()
-        val tombNext = phase("wcc-cdc:tomb-ckpt") {
-          canon(tomb.unionByName(removes))
-            .join(canon(adds), Seq(SRC, DST), "left_anti")
-            .localCheckpoint(true)
-        }
-        // incrementalWithDeletions materializes its output eagerly, so
-        // overwriting labels (which its lineage read) is safe; tombNext
-        // is materialized above for the same reason.
-        phase("wcc-cdc:labels-write") {
-          next.write.mode("overwrite").saveAsTable(labelsTable)
-        }
-        phase("wcc-cdc:edges-append") {
-          adds.write.mode("append").saveAsTable(edgesTable)
-        }
-        phase("wcc-cdc:tombs-write") {
-          tombNext.write.mode("overwrite").saveAsTable(tombstonesTable)
-        }
-        org.apache.spark.sql.graft.checkpointing.release(next)
-        org.apache.spark.sql.graft.checkpointing.release(tombNext)
-        org.apache.spark.sql.graft.checkpointing.release(b)
+        "call ConnectedComponents.incrementalWithDeletions directly",
+      "wcc-cdc", Seq(labelsTable, edgesTable, tombstonesTable)) { (ss, batch) =>
+      val b = phase("wcc-cdc:batch-ckpt") {
+        batch.select(col(SRC), col(DST), col(opCol)).localCheckpoint(true)
       }
+      val (adds, removes) = splitChanges(b, opCol)
+      val tomb = ss.table(tombstonesTable)
+      val baseEdges = withoutPairs(ss.table(edgesTable), broadcast(tomb))
+      // incrementalWithDeletions materializes its output eagerly, so
+      // overwriting labels (which its lineage read) is safe; tombNext
+      // is materialized for the same reason.
+      val next = phase("wcc-cdc:compose") {
+        graft.algorithms.ConnectedComponents
+          .incrementalWithDeletions(ss.table(labelsTable), baseEdges,
+            adds, removes)
+      }
+      val tombNext = phase("wcc-cdc:tomb-ckpt") {
+        nextTombstones(tomb, removes, canonicalPairs(adds)).localCheckpoint(true)
+      }
+      BatchOut(
+        Seq(TableWrite(labelsTable, "overwrite", next),
+          TableWrite(edgesTable, "append", adds),
+          TableWrite(tombstonesTable, "overwrite", tombNext)),
+        Seq(next, tombNext, b))
     }
-  }
 
   /** Bootstraps for [[streamingWccMaintainCdc]]: empty labels, edge log,
     * and tombstone log.
     */
-  def initWccCdcTables(spark: org.apache.spark.sql.SparkSession,
-      labelsTable: String, edgesTable: String,
-      tombstonesTable: String): Unit = {
+  def initWccCdcTables(spark: SparkSession, labelsTable: String,
+      edgesTable: String, tombstonesTable: String): Unit = {
     initWccLabelsTable(spark, labelsTable)
-    Seq(edgesTable, tombstonesTable).foreach { t =>
-      graft.sources.BucketedTables.dropWithLocation(spark, t)
-      spark.range(0).select(col("id").as(graft.graph.GraphFrame.SRC),
-          col("id").as(graft.graph.GraphFrame.DST))
-        .write.mode("overwrite").saveAsTable(t)
-    }
+    Seq(edgesTable, tombstonesTable).foreach(bootstrap(spark, _, emptyEdges(spark)))
   }
 
   /** STREAMING TRIANGLE MAINTENANCE, CDC FORM (st33 —
@@ -792,87 +805,59 @@ object Streams {
     */
   def streamingTriangleMaintainCdc(stream: DataFrame, countsTable: String,
       adjTable: String, tombstonesTable: String, opCol: String = "op")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(stream.isStreaming,
+      : DataStreamWriter[Row] =
+    maintenanceLoop(stream,
       "streamingTriangleMaintainCdc consumes a change STREAM — batch " +
-        "deltas call TriangleCount.incrementalWithDeletions directly")
-    val SRC = graft.graph.GraphFrame.SRC
-    val DST = graft.graph.GraphFrame.DST
-    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) withBatchSession(batch) { ss =>
-        Seq(countsTable, adjTable, tombstonesTable)
-          .foreach(ss.catalog.refreshTable)
-        // Counted checkpoint: the batch row count (free — the eager
-        // materialization pays it anyway) bounds |addCanon| below, so
-        // the tombNext anti can keep its broadcast under the delta cap.
-        val (b, nB) = org.apache.spark.sql.graft.checkpointing
-          .localCheckpointCounted(
-            batch.select(col(SRC), col(DST), col(opCol)))
-        val adds = b.filter(col(opCol) === "add").select(col(SRC), col(DST))
-        val removes = b.filter(col(opCol) === "remove")
-          .select(col(SRC), col(DST))
-        val tomb = ss.table(tombstonesTable)
-        val sym = ss.table(adjTable)
-          .join(broadcast(tomb.select(col(SRC).as("__ct_l"),
-            col(DST).as("__ct_g"))),
-            least(col(SRC), col(DST)) === col("__ct_l") &&
-              greatest(col(SRC), col(DST)) === col("__ct_g"), "left_anti")
-        val next = phase("tri-cdc:compose") {
-          graft.algorithms.TriangleCount.incrementalWithDeletions(
-            ss.table(countsTable), sym, adds, removes, Some(sym))
-        }
-        def canon(df: DataFrame) = df.filter(col(SRC) =!= col(DST))
-          .select(least(col(SRC), col(DST)).as(SRC),
-            greatest(col(SRC), col(DST)).as(DST))
-          .distinct()
-        // Adjacency log delta: canonical adds whose edge has NEVER been
-        // in the log (a tombstoned edge re-added RESURRECTS the
-        // existing log row by dropping its tombstone — appending a
-        // second copy would break the log's dedup invariant, and both
-        // copies would die to the stale tombstone). Tombstone table is
-        // delta-scale and REWRITTEN: (old ∪ removes-present) ∖ adds.
-        // LAZY truncation (r20): addCanon is consumed twice (the
-        // genuinelyNew anti below and the tombNext anti) but both
-        // consumers materialize inside this body's later eager jobs —
-        // the lazy form shares one RDD without adding a scheduled job
-        // to the per-batch floor.
-        val addCanon = org.apache.spark.sql.graft.checkpointing
-          .localCheckpointNoStats(canon(adds), eager = false)
-        val genuinelyNew = addCanon
-          .join(ss.table(adjTable), Seq(SRC, DST), "left_anti")
-        val newSym = genuinelyNew.select(col(SRC), col(DST))
-          .unionByName(genuinelyNew.select(col(DST).as(SRC), col(SRC).as(DST)))
-          .localCheckpoint(true)
-        val remPresent = sym.join(
-          graft.algorithms.DeltaBroadcast.hintIfBounded(canon(removes), nB),
-          Seq(SRC, DST), "left_semi")
-        val tombNext = canon(tomb.unionByName(remPresent))
-          .join(graft.algorithms.DeltaBroadcast.hintIfBounded(addCanon, nB),
-            Seq(SRC, DST), "left_anti")
-          .localCheckpoint(true)
-        phase("tri-cdc:writes") {
-          next.write.mode("overwrite").saveAsTable(countsTable)
-          newSym.write.mode("append").saveAsTable(adjTable)
-          tombNext.write.mode("overwrite").saveAsTable(tombstonesTable)
-        }
-        org.apache.spark.sql.graft.checkpointing.release(next)
-        org.apache.spark.sql.graft.checkpointing.release(newSym)
-        org.apache.spark.sql.graft.checkpointing.release(tombNext)
-        org.apache.spark.sql.graft.checkpointing.release(addCanon)
-        org.apache.spark.sql.graft.checkpointing.release(b)
+        "deltas call TriangleCount.incrementalWithDeletions directly",
+      "tri-cdc", Seq(countsTable, adjTable, tombstonesTable)) { (ss, batch) =>
+      // Counted checkpoint: the batch row count (free — the eager
+      // materialization pays it anyway) bounds |addCanon| below, so
+      // the tombNext anti can keep its broadcast under the delta cap.
+      val (b, nB) = checkpointing.localCheckpointCounted(
+        batch.select(col(SRC), col(DST), col(opCol)))
+      val (adds, removes) = splitChanges(b, opCol)
+      val tomb = ss.table(tombstonesTable)
+      val sym = withoutPairs(ss.table(adjTable), broadcast(tomb))
+      val next = phase("tri-cdc:compose") {
+        graft.algorithms.TriangleCount.incrementalWithDeletions(
+          ss.table(countsTable), sym, adds, removes, Some(sym))
       }
+      // Adjacency log delta: canonical adds whose edge has NEVER been
+      // in the log (a tombstoned edge re-added RESURRECTS the
+      // existing log row by dropping its tombstone — appending a
+      // second copy would break the log's dedup invariant, and both
+      // copies would die to the stale tombstone). Tombstones gain only
+      // the removes of PRESENT edges.
+      // LAZY truncation (r20): addCanon is consumed twice (the
+      // genuinelyNew anti below and the tombNext anti) but both
+      // consumers materialize inside this body's later eager jobs —
+      // the lazy form shares one RDD without adding a scheduled job
+      // to the per-batch floor.
+      val addCanon = checkpointing.localCheckpointNoStats(
+        canonicalPairs(adds), eager = false)
+      val genuinelyNew = addCanon
+        .join(ss.table(adjTable), Seq(SRC, DST), "left_anti")
+      val newSym = genuinelyNew.select(col(SRC), col(DST))
+        .unionByName(genuinelyNew.select(col(DST).as(SRC), col(SRC).as(DST)))
+        .localCheckpoint(true)
+      val remPresent = sym.join(
+        graft.algorithms.DeltaBroadcast.hintIfBounded(canonicalPairs(removes), nB),
+        Seq(SRC, DST), "left_semi")
+      val tombNext = nextTombstones(tomb, remPresent,
+          graft.algorithms.DeltaBroadcast.hintIfBounded(addCanon, nB))
+        .localCheckpoint(true)
+      BatchOut(
+        Seq(TableWrite(countsTable, "overwrite", next),
+          TableWrite(adjTable, "append", newSym),
+          TableWrite(tombstonesTable, "overwrite", tombNext)),
+        Seq(next, newSym, tombNext, addCanon, b))
     }
-  }
 
   /** Bootstraps for [[streamingTriangleMaintainCdc]]. */
-  def initTriangleCdcTables(spark: org.apache.spark.sql.SparkSession,
-      countsTable: String, adjTable: String,
-      tombstonesTable: String): Unit = {
+  def initTriangleCdcTables(spark: SparkSession, countsTable: String,
+      adjTable: String, tombstonesTable: String): Unit = {
     initTriangleTables(spark, countsTable, adjTable)
-    graft.sources.BucketedTables.dropWithLocation(spark, tombstonesTable)
-    spark.range(0).select(col("id").as(graft.graph.GraphFrame.SRC),
-        col("id").as(graft.graph.GraphFrame.DST))
-      .write.mode("overwrite").saveAsTable(tombstonesTable)
+    bootstrap(spark, tombstonesTable, emptyEdges(spark))
   }
 
   /** STREAMING K-CORE MAINTENANCE, CDC FORM (st34 — the warm-start
@@ -900,55 +885,31 @@ object Streams {
     */
   def streamingKCoreMaintainCdc(stream: DataFrame, coresTable: String,
       edgesTable: String, tombstonesTable: String, opCol: String = "op")
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(stream.isStreaming,
+      : DataStreamWriter[Row] =
+    maintenanceLoop(stream,
       "streamingKCoreMaintainCdc consumes a change STREAM — batch " +
-        "deltas call KCore.warmStart directly")
-    val SRC = graft.graph.GraphFrame.SRC
-    val DST = graft.graph.GraphFrame.DST
-    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) withBatchSession(batch) { ss =>
-        Seq(coresTable, edgesTable, tombstonesTable)
-          .foreach(ss.catalog.refreshTable)
-        val b = batch.select(col(SRC), col(DST), col(opCol))
-          .localCheckpoint(true)
-        val adds = b.filter(col(opCol) === "add").select(col(SRC), col(DST))
-        val removes = b.filter(col(opCol) === "remove")
-          .select(col(SRC), col(DST))
-        def canon(df: DataFrame) = df.filter(col(SRC) =!= col(DST))
-          .select(least(col(SRC), col(DST)).as(SRC),
-            greatest(col(SRC), col(DST)).as(DST))
-          .distinct()
-        val tomb = ss.table(tombstonesTable)
-        val base = ss.table(edgesTable)
-          .join(broadcast(tomb.select(col(SRC).as("__ck_l"),
-            col(DST).as("__ck_g"))),
-            least(col(SRC), col(DST)) === col("__ck_l") &&
-              greatest(col(SRC), col(DST)) === col("__ck_g"), "left_anti")
-        // Removals first, adds after: (base ∖ removes) ∪ adds — a
-        // same-batch remove+re-add nets to present, the st32 discipline.
-        val edited = base
-          .join(broadcast(canon(removes).select(col(SRC).as("__cr_l"),
-            col(DST).as("__cr_g"))),
-            least(col(SRC), col(DST)) === col("__cr_l") &&
-              greatest(col(SRC), col(DST)) === col("__cr_g"), "left_anti")
-          .unionByName(adds)
-        val next = graft.graph.GraphFrame.fromEdges(edited).kCore
-          .warmStart(ss.table(coresTable), adds).run()
-          .vertices.select(col("id"), col("kcore"))
-          .localCheckpoint(true)
-        val tombNext = canon(tomb.unionByName(removes))
-          .join(canon(adds), Seq(SRC, DST), "left_anti")
-          .localCheckpoint(true)
-        next.write.mode("overwrite").saveAsTable(coresTable)
-        adds.write.mode("append").saveAsTable(edgesTable)
-        tombNext.write.mode("overwrite").saveAsTable(tombstonesTable)
-        org.apache.spark.sql.graft.checkpointing.release(next)
-        org.apache.spark.sql.graft.checkpointing.release(tombNext)
-        org.apache.spark.sql.graft.checkpointing.release(b)
-      }
+        "deltas call KCore.warmStart directly",
+      "kcore-cdc", Seq(coresTable, edgesTable, tombstonesTable)) { (ss, batch) =>
+      val b = batch.select(col(SRC), col(DST), col(opCol)).localCheckpoint(true)
+      val (adds, removes) = splitChanges(b, opCol)
+      val tomb = ss.table(tombstonesTable)
+      val base = withoutPairs(ss.table(edgesTable), broadcast(tomb))
+      // Removals first, adds after: (base ∖ removes) ∪ adds — a
+      // same-batch remove+re-add nets to present, the st32 discipline.
+      val edited = withoutPairs(base, broadcast(canonicalPairs(removes)))
+        .unionByName(adds)
+      val next = graft.graph.GraphFrame.fromEdges(edited).kCore
+        .warmStart(ss.table(coresTable), adds).run()
+        .vertices.select(col("id"), col("kcore"))
+        .localCheckpoint(true)
+      val tombNext = nextTombstones(tomb, removes, canonicalPairs(adds))
+        .localCheckpoint(true)
+      BatchOut(
+        Seq(TableWrite(coresTable, "overwrite", next),
+          TableWrite(edgesTable, "append", adds),
+          TableWrite(tombstonesTable, "overwrite", tombNext)),
+        Seq(next, tombNext, b))
     }
-  }
 
   /** STREAMING PAGERANK MAINTENANCE (st35 — the ranking family at
     * ingest, the g40 residual restart per micro-batch): edge additions
@@ -980,35 +941,31 @@ object Streams {
     */
   def streamingPageRankMaintain(stream: DataFrame, rawMassTable: String,
       edgesTable: String, iterations: Int = 2, tol: Double = 1e-9)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(stream.isStreaming,
-      "streamingPageRankMaintain consumes a STREAM of edges — batch " +
-        "deltas call PageRank.warmStart directly")
+      : DataStreamWriter[Row] = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val SRC = graft.graph.GraphFrame.SRC
-    val DST = graft.graph.GraphFrame.DST
-    stream.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
-      if (!batch.isEmpty) withBatchSession(batch) { ss =>
-        Seq(rawMassTable, edgesTable).foreach(ss.catalog.refreshTable)
-        val adds = batch.select(col(SRC), col(DST)).localCheckpoint(true)
-        val all = ss.table(edgesTable).unionByName(adds)
-        val next = graft.graph.GraphFrame.fromEdges(all).pageRank
-          .tolerance(tol).maxIterations(iterations)
-          .warmStart(ss.table(rawMassTable)).run()
-          .rawMass.localCheckpoint(true)
-        next.write.mode("overwrite").saveAsTable(rawMassTable)
-        adds.write.mode("append").saveAsTable(edgesTable)
-        org.apache.spark.sql.graft.checkpointing.release(next)
-        org.apache.spark.sql.graft.checkpointing.release(adds)
-      }
+    maintenanceLoop(stream,
+      "streamingPageRankMaintain consumes a STREAM of edges — batch " +
+        "deltas call PageRank.warmStart directly",
+      "pr", Seq(rawMassTable, edgesTable)) { (ss, batch) =>
+      val adds = batch.select(col(SRC), col(DST)).localCheckpoint(true)
+      val all = ss.table(edgesTable).unionByName(adds)
+      val next = graft.graph.GraphFrame.fromEdges(all).pageRank
+        .tolerance(tol).maxIterations(iterations)
+        .warmStart(ss.table(rawMassTable)).run()
+        .rawMass.localCheckpoint(true)
+      BatchOut(
+        Seq(TableWrite(rawMassTable, "overwrite", next),
+          TableWrite(edgesTable, "append", adds)),
+        Seq(next, adds))
     }
   }
 
   /** CDC LOG COMPACTION (st36 — the cadence every CDC maintenance
     * scaladoc above promises): folds the tombstone table into the edge
-    * log — the log is rewritten to `log ∖ tombstones` (canonical-pair
-    * match, the exact predicate the maintenance loops apply at read
-    * time) and the tombstone table empties. The NET graph is unchanged
+    * log — the log is rewritten to `log ∖ tombstones` through
+    * [[graft.graph.GraphFrame.withoutPairs]], the same canonical-pair
+    * predicate the maintenance loops read the log with — and the
+    * tombstone table empties. The NET graph is unchanged
     * by construction, so every maintained table (labels, counts, cores,
     * raw mass) stays valid across the compaction with no recompute —
     * the st36 gate pins exactly that: a cold recompute from the
@@ -1037,55 +994,38 @@ object Streams {
     * anti-join) but appending its adds to a table a concurrent
     * overwrite may clobber.
     */
-  def compactCdcEdgeLog(spark: org.apache.spark.sql.SparkSession,
-      edgesTable: String, tombstonesTable: String): Unit = {
-    val SRC = graft.graph.GraphFrame.SRC
-    val DST = graft.graph.GraphFrame.DST
+  def compactCdcEdgeLog(spark: SparkSession, edgesTable: String,
+      tombstonesTable: String): Unit = {
     Seq(edgesTable, tombstonesTable).foreach(spark.catalog.refreshTable)
-    val tomb = spark.table(tombstonesTable)
-    val compacted = spark.table(edgesTable)
-      .join(broadcast(tomb.select(col(SRC).as("__cc_l"),
-        col(DST).as("__cc_g"))),
-        least(col(SRC), col(DST)) === col("__cc_l") &&
-          greatest(col(SRC), col(DST)) === col("__cc_g"), "left_anti")
+    val compacted = withoutPairs(spark.table(edgesTable),
+        broadcast(spark.table(tombstonesTable)))
       .select(col(SRC), col(DST))
       .localCheckpoint(true)
-    compacted.write.mode("overwrite").saveAsTable(edgesTable)
-    spark.range(0).select(col("id").as(SRC), col("id").as(DST))
-      .write.mode("overwrite").saveAsTable(tombstonesTable)
-    org.apache.spark.sql.graft.checkpointing.release(compacted)
+    writeInOrder("compact", Seq(
+      TableWrite(edgesTable, "overwrite", compacted),
+      TableWrite(tombstonesTable, "overwrite", emptyEdges(spark))))
+    checkpointing.release(compacted)
   }
 
   /** Bootstraps for [[streamingPageRankMaintain]]: empty raw mass (the
     * g = 0 seed — batch 1's residual pass then reproduces the cold init
     * exactly) and an empty edge log.
     */
-  def initPageRankTables(spark: org.apache.spark.sql.SparkSession,
-      rawMassTable: String, edgesTable: String): Unit = {
-    graft.sources.BucketedTables.dropWithLocation(spark, rawMassTable)
-    spark.range(0).select(col("id"), col("id").cast("double").as("pagerank"))
-      .write.mode("overwrite").saveAsTable(rawMassTable)
-    graft.sources.BucketedTables.dropWithLocation(spark, edgesTable)
-    spark.range(0).select(col("id").as(graft.graph.GraphFrame.SRC),
-        col("id").as(graft.graph.GraphFrame.DST))
-      .write.mode("overwrite").saveAsTable(edgesTable)
+  def initPageRankTables(spark: SparkSession, rawMassTable: String,
+      edgesTable: String): Unit = {
+    bootstrap(spark, rawMassTable,
+      spark.range(0).select(col("id"), col("id").cast("double").as("pagerank")))
+    bootstrap(spark, edgesTable, emptyEdges(spark))
   }
 
   /** Bootstraps for [[streamingKCoreMaintainCdc]]: empty cores, edge
     * log, and tombstone log.
     */
-  def initKCoreCdcTables(spark: org.apache.spark.sql.SparkSession,
-      coresTable: String, edgesTable: String,
-      tombstonesTable: String): Unit = {
-    graft.sources.BucketedTables.dropWithLocation(spark, coresTable)
-    spark.range(0).select(col("id"), col("id").as("kcore"))
-      .write.mode("overwrite").saveAsTable(coresTable)
-    Seq(edgesTable, tombstonesTable).foreach { t =>
-      graft.sources.BucketedTables.dropWithLocation(spark, t)
-      spark.range(0).select(col("id").as(graft.graph.GraphFrame.SRC),
-          col("id").as(graft.graph.GraphFrame.DST))
-        .write.mode("overwrite").saveAsTable(t)
-    }
+  def initKCoreCdcTables(spark: SparkSession, coresTable: String,
+      edgesTable: String, tombstonesTable: String): Unit = {
+    bootstrap(spark, coresTable,
+      spark.range(0).select(col("id"), col("id").as("kcore")))
+    Seq(edgesTable, tombstonesTable).foreach(bootstrap(spark, _, emptyEdges(spark)))
   }
 
   case class LatestOut(user_id: Long, last_ts: Long, last_event_id: Long,

@@ -829,9 +829,10 @@ object TextFunctions {
   // regexes once: CollapseProject refuses to inline a non-cheap producer
   // referenced more than once, so the two-projection shape survives the
   // optimizer (spec-pinned) while staying map-only — no shuffle, no UDF.
-  // Measured at sf0.1 (HtmlHofProbe, full-materialization timing): triple
-  // HOF ~2.0 s, shared-aux ~0.8 s, exploded+groupBy twin ~0.9 s — the
-  // shared form keeps the exploded twin's win WITHOUT the corpus shuffle.
+  // Measured at sf0.1 (full-materialization timing, BASELINE.md "Round-15
+  // t18 HTML-kernel probe"): triple HOF ~2.0 s, shared-aux ~0.8 s,
+  // exploded+groupBy twin ~0.9 s — the shared form keeps the exploded
+  // twin's win WITHOUT the corpus shuffle.
 
   /** Per-line `struct(v, al)` (visible text, anchor-visible length) — the
     * one expensive pass. Alias it in its OWN select, then feed that column

@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 /** Plan-audit handle: print the executed plan of named SparkEntry queries
   * (default sf0.001) so operator plan shapes can be inspected without
   * writing a throwaway main. Usage:
-  * `runMain graft.tools.ExplainProbe q03_join_inner_agg [more names...]`
+  * `runMain graft.tools.ExplainProbe q03_join_inner_agg [more names...]`;
+  * `SPARK_GRAFT_CONF` overrides confs as in [[Profile]].
   */
 object ExplainProbe {
   def main(args: Array[String]): Unit = {
@@ -19,16 +20,7 @@ object ExplainProbe {
       .config("spark.sql.shuffle.partitions", cpus))
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // Dev A/B knob: SPARK_GRAFT_EXPLAIN_CONF="k=v;k2=v2" overrides
-    // runtime-settable confs AFTER SparkDefaults, so a dump pair can
-    // show a plan with and without one engine default (e.g. the 64 MB
-    // broadcast ceiling vs Spark's 10 MB stock value).
-    sys.env.get("SPARK_GRAFT_EXPLAIN_CONF").foreach {
-      _.split(";").map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      }
-    }
+    Profile.applyConfOverrides(spark)
     val names = if (args.nonEmpty) args.toSeq else Seq("q01_groupby_agg")
     names.foreach { n =>
       // Operators that eagerly materialize inside CacheScope.scoped

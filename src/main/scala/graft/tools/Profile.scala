@@ -12,6 +12,20 @@ import graft.SparkEntry
   * physical plan before executing.
   */
 object Profile {
+  /** Ad-hoc runtime-conf overrides, `SPARK_GRAFT_CONF="k=v;k2=v2"`, set
+    * AFTER SparkDefaults so a run (or a plan dump) can show one engine
+    * default against another value, e.g. the 64 MB broadcast ceiling vs
+    * Spark's 10 MB stock value. Entries are trimmed; one without `=` is
+    * skipped.
+    */
+  private[tools] def applyConfOverrides(spark: SparkSession): Unit =
+    sys.env.get("SPARK_GRAFT_CONF").foreach {
+      _.split(';').map(_.trim).filter(_.contains("=")).foreach { kv =>
+        val Array(k, v) = kv.split("=", 2)
+        spark.conf.set(k, v)
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -24,11 +38,7 @@ object Profile {
       .getOrCreate()
     spark.sparkContext.setLogLevel(
       sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
-    // Ad-hoc conf overrides: SPARK_GRAFT_CONF="k=v;k2=v2".
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.nonEmpty).foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-    })
+    applyConfOverrides(spark)
     spark.range(1000000L).selectExpr("sum(id)").collect()
     args.foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

@@ -1410,12 +1410,8 @@ object ScaleBench {
         val base = eDel.filter(bucket =!= 0L)
         val added = eDel.filter(bucket === 0L)
         val removed = base.filter(bucket === 1L)
-        val removedCanon = removed.select(
-          least(col("src"), col("dst")).as("l"),
-          greatest(col("src"), col("dst")).as("g"))
-        val edited = base.join(removedCanon,
-            least(col("src"), col("dst")) === col("l") &&
-              greatest(col("src"), col("dst")) === col("g"), "left_anti")
+        val edited = GraphFrame.withoutPairs(base,
+            GraphFrame.canonicalPairs(removed))
           .unionByName(added)
         val universe = base.select(col("src").as("id"))
           .unionByName(base.select(col("dst").as("id")))
@@ -1480,12 +1476,8 @@ object ScaleBench {
         val base = edges.filter(bucket =!= 0L)
         val added = edges.filter(bucket === 0L)
         val removed = base.filter(bucket === 1L)
-        val removedCanon = removed.select(
-          least(col("src"), col("dst")).as("l"),
-          greatest(col("src"), col("dst")).as("g"))
-        val edited = base.join(removedCanon,
-            least(col("src"), col("dst")) === col("l") &&
-              greatest(col("src"), col("dst")) === col("g"), "left_anti")
+        val edited = GraphFrame.withoutPairs(base,
+            GraphFrame.canonicalPairs(removed))
           .unionByName(added)
         val tf0 = System.nanoTime()
         val full = GraphFrame(vertices, edited).triangleCount.run()

@@ -188,12 +188,13 @@ object checkpointing {
     * (garbage anyway) estimates — loops that want a broadcast say so
     * explicitly with `broadcast()`.
     */
-  def localCheckpointNoStats(df: DataFrame, eager: Boolean = true): DataFrame = {
-    val qe = execution(df)
-    val rdd = checkpointRows(qe, eager).localCheckpoint()
-    if (eager) rdd.count()
-    ofRdd(qe, rdd, UnknownPartitioning(0), Nil)
-  }
+  def localCheckpointNoStats(df: DataFrame, eager: Boolean = true): DataFrame =
+    if (eager) localCheckpointCounted(df)._1
+    else {
+      val qe = execution(df)
+      ofRdd(qe, checkpointRows(qe, eager = false).localCheckpoint(),
+        UnknownPartitioning(0), Nil)
+    }
 
   /** [[localCheckpointNoStats]]'s eager form, RETURNING the row count the
     * materialization already paid for. Every eager local checkpoint runs
