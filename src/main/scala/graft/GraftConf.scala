@@ -18,32 +18,19 @@ import org.apache.spark.sql.SparkSession
   *     executor-local checkpoints. Builder `withReliableCheckpoint` wins.
   *
   * The reference's third knob, `prefer_smj`, maps directly onto Spark's
-  * own `spark.sql.join.preferSortMergeJoin` — no wrapper needed.
+  * own `spark.sql.join.preferSortMergeJoin` — no wrapper needed — and
+  * whether a delta is small enough to broadcast is Spark's
+  * `spark.sql.autoBroadcastJoinThreshold`, read off the exact statistics
+  * of counted checkpoints (`checkpointing`).
   */
 object GraftConf {
   val SmallGraphThresholdKey = "spark.graft.smallGraphThreshold"
   val CheckpointDirKey = "spark.graft.checkpointDir"
-  val DeltaBroadcastRowCapKey = "spark.graft.deltaBroadcastRowCap"
 
   val DefaultSmallGraphThreshold = 1000000L
 
   def smallGraphThreshold(spark: SparkSession): Long =
     spark.conf.get(SmallGraphThresholdKey, DefaultSmallGraphThreshold.toString).toLong
-
-  /** Row cap under which the incremental/CDC composes broadcast-hint
-    * their delta frames (removals, truly-new edges, oriented fanout
-    * seeds). The hints exist because those frames ride stats-free
-    * checkpoint leaves Catalyst refuses to auto-broadcast; the cap exists
-    * because delta-boundedness is an API contract, not a law — a bulk
-    * deletion batch (a domain takedown at 100 TB) must degrade to the
-    * shuffle join, not OOM the executors building a giant broadcast
-    * relation. Default rides the smallGraphThreshold discipline: 1M
-    * canonical edge pairs ≈ 16 MB of key data, comfortably inside the
-    * 64 MB session broadcast ceiling.
-    */
-  def deltaBroadcastRowCap(spark: SparkSession): Long =
-    spark.conf.get(DeltaBroadcastRowCapKey,
-      DefaultSmallGraphThreshold.toString).toLong
 
   def checkpointDir(spark: SparkSession): Option[String] =
     spark.conf.getOption(CheckpointDirKey).filter(_.nonEmpty)

@@ -440,30 +440,19 @@ object ConnectedComponents {
     import graft.util.PhaseTiming.phase
     val prev = prevComponents.select(col(ID), col("component"))
     // Canonical removals (delta-sized; the broadcast side of both edge
-    // passes below).
-    // BROADCAST-hinted WHEN COUNT-BOUNDED: removals are delta-scale by
-    // the takedown discipline (the same contract the CDC loop's
-    // broadcast(tomb) rides), and the checkpointed leaf carries no
-    // usable stats — the hint is what lets both edge passes below ride
-    // the base scan as broadcast joins instead of shuffling V/E-sized
-    // sides (r19 optimization round). The count (captured from the
-    // materialization the eager checkpoint already pays for — no extra
-    // job) GUARDS the hint: delta-boundedness is documentation, not
-    // code, and a bulk deletion batch must fall back to the shuffle
-    // join instead of OOMing the executors (r19 verdict).
-    val (remCkpt, nRem) = phase("iwd:rem-ckpt") {
+    // passes below when small).
+    // Broadcast or shuffle: the session byte threshold decides (checkpointing's leaf rule).
+    val (rem, nRem) = phase("iwd:rem-ckpt") {
       org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(
         GraphFrame.canonicalPairs(removedEdges))
     }
-    val rem = DeltaBroadcast.hintIfBounded(remCkpt, nRem)
     // Components containing a removed edge — the only ones that can
     // split. Either endpoint works (they share the label); removals of
     // edges never in the base simply find no label and drop out.
-    // Broadcast under the same guard: bounded by |rem| (one label per
-    // removed edge).
-    val affected = DeltaBroadcast.hintIfBounded(rem
-      .join(prev.select(col(ID).as(SRC), col("component")), Seq(SRC))
-      .select(col("component")).distinct(), nRem)
+    // At most one label per removed edge: nRem bounds it.
+    val affected = org.apache.spark.sql.graft.checkpointing.localCheckpointBounded(
+      rem.join(prev.select(col(ID).as(SRC), col("component")), Seq(SRC))
+        .select(col("component")).distinct(), nRem)
     // Their full membership (bounded by the affected components' size).
     val affVerts = phase("iwd:affverts-ckpt") {
       prev.join(affected, Seq("component"), "left_semi")
@@ -504,8 +493,7 @@ object ConnectedComponents {
     val out = phase("iwd:incremental+ckpt") {
       incremental(postRemoval, addedEdges).localCheckpoint(true)
     }
-    org.apache.spark.sql.graft.checkpointing.release(remCkpt)
-    org.apache.spark.sql.graft.checkpointing.release(affVerts)
+    Seq(rem, affected, affVerts).foreach(org.apache.spark.sql.graft.checkpointing.release)
     out
   }
 }

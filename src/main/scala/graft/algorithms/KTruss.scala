@@ -56,15 +56,15 @@ class KTruss(graph: GraphFrame) {
 object KTruss {
   private val checkpointing = org.apache.spark.sql.graft.checkpointing
 
-  /** Per-round lineage truncation. NoStats is load-bearing: a plain
-    * `localCheckpoint` inherits the optimizer's estimated sizeInBytes,
-    * whose bit-length compounds geometrically across peel rounds until
-    * stats estimation (BigInteger products) dwarfs the actual work — a
-    * deep fixpoint peel then hangs in PLANNING, not execution (see
-    * checkpointing.localCheckpointNoStats).
+  /** Per-round lineage truncation. The counted leaf is load-bearing: a
+    * plain `localCheckpoint` inherits the optimizer's estimated
+    * sizeInBytes, whose bit-length compounds geometrically across peel
+    * rounds until stats estimation (BigInteger products) dwarfs the actual
+    * work — a deep fixpoint peel then hangs in PLANNING, not execution.
+    * An exact count does not compound (see `checkpointing`).
     */
   private def ckpt(df: DataFrame): DataFrame =
-    checkpointing.localCheckpointNoStats(df)
+    checkpointing.localCheckpointCounted(df)._1
 
   /** Canonical undirected simple edges `[a, b]`, a < b. */
   private def canonical(edges: DataFrame): DataFrame =

@@ -22,9 +22,9 @@ import graft.operators.{CacheScope, Sampling}
   * frontier (one row per live walk) moves. Walks reaching a sink simply
   * drop out of the inner join — shorter rows, never nulls. Frontier
   * lineage grows one join per step, so every 8 steps the frontier is cut
-  * to a stats-free local checkpoint ([[org.apache.spark.sql.graft
-  * .checkpointing.localCheckpointNoStats]]) — constant-size plans and
-  * planning-time stats however long the walk runs.
+  * to a counted local checkpoint ([[org.apache.spark.sql.graft
+  * .checkpointing.localCheckpointCounted]]) — constant-size plans and
+  * exact planning-time stats however long the walk runs.
   *
   * Output: `[walk_id, step, vertex]`, step 0 = the start vertex.
   */
@@ -49,7 +49,7 @@ object RandomWalks {
           .select(col("walk_id"), col("m.d").as("cur"))
         if (t % 8 == 0)
           frontier = org.apache.spark.sql.graft.checkpointing
-            .localCheckpointNoStats(frontier)
+            .localCheckpointCounted(frontier)._1
         steps += frontier.select(col("walk_id"), lit(t.toLong).as("step"),
           col("cur").as("vertex"))
       }

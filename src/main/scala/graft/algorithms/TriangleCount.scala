@@ -142,21 +142,12 @@ object TriangleCount {
       baseEdges.select(SRC, DST), doDistinct = true).localCheckpoint(false))
     // Truly-new undirected edges: canonical, loop-free, deduped, and not
     // already present in the base in either direction.
-    // BROADCAST-hinted WHEN COUNT-BOUNDED: delta-bounded by construction
-    // (the takedown/ingest discipline), and the checkpointed leaf
-    // carries no usable stats — without the hint the degree-orientation
-    // joins below planned as sort-merge joins shuffling the V-sized
-    // degree frame (r19 optimization round). The count rides the
-    // materialization the eager checkpoint already pays for; above the
-    // cap (a bulk ingest batch) the hints are withheld and the joins
-    // fall back to the shuffle strategies instead of OOMing on a giant
-    // broadcast relation (r19 verdict).
-    val (deltaNewCkpt, nNew) = graft.util.PhaseTiming.phase("tri-inc:deltaNew") {
+    // Broadcast or shuffle: the session byte threshold decides (checkpointing's leaf rule).
+    val (deltaNew, nNew) = graft.util.PhaseTiming.phase("tri-inc:deltaNew") {
       org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(
         GraphFrame.canonicalPairs(deltaEdges)
           .join(symBase, Seq(SRC, DST), "left_anti"))
     }
-    val deltaNew = DeltaBroadcast.hintIfBounded(deltaNewCkpt, nNew)
     val symDelta = deltaNew.select(explode(array(
         struct(col(SRC), col(DST)),
         struct(col(DST).as(SRC), col(SRC).as(DST)))).as("__ti"))
@@ -177,7 +168,9 @@ object TriangleCount {
     // recompute on a 2 M-edge skew graph (and an OOM at 8 M) before
     // this orientation, which is the whole game on power-law graphs.
     val deg = nbrs.groupBy(col(SRC).as("__ti_v")).agg(count(lit(1)).as("__ti_d"))
-    val oriented = deltaNew
+    // One row per truly-new delta edge: nNew bounds it, so the fanout
+    // below rides the adjacency scan instead of shuffling it.
+    val oriented = org.apache.spark.sql.graft.checkpointing.localCheckpointBounded(deltaNew
       .join(deg.select(col("__ti_v").as("__ti_vs"), col("__ti_d").as("__ti_ds")),
         col(SRC) === col("__ti_vs"))
       .join(deg.select(col("__ti_v").as("__ti_vd"), col("__ti_d").as("__ti_dd")),
@@ -186,11 +179,8 @@ object TriangleCount {
         when(struct(col("__ti_ds"), col(SRC)) <= struct(col("__ti_dd"), col(DST)),
           col(SRC)).otherwise(col(DST)).as("u"),
         when(struct(col("__ti_ds"), col(SRC)) <= struct(col("__ti_dd"), col(DST)),
-          col(DST)).otherwise(col(SRC)).as("v"))
-    // oriented is one row per truly-new delta edge, so the deltaNew
-    // count bounds it too — hinted under the same guard, the fanout
-    // rides the adjacency scan instead of shuffling it.
-    val cand = DeltaBroadcast.hintIfBounded(oriented, nNew)
+          col(DST)).otherwise(col(SRC)).as("v")), nNew)
+    val cand = oriented
       .join(nbrs.select(col(SRC).as("u"), col(DST).as("w")), Seq("u"))
       .filter(col("w") =!= col("v"))
       .join(nbrs.select(col(SRC).as("v"), col(DST).as("w")),
@@ -219,7 +209,7 @@ object TriangleCount {
     // A caller-provided adjacency is caller-owned; release only our own.
     if (symBaseOpt.isEmpty)
       org.apache.spark.sql.graft.checkpointing.release(symBase)
-    org.apache.spark.sql.graft.checkpointing.release(deltaNewCkpt)
+    Seq(deltaNew, oriented).foreach(org.apache.spark.sql.graft.checkpointing.release)
     out
   }
 
@@ -277,37 +267,27 @@ object TriangleCount {
     // a semi with the E-sized side on the right would shuffle E instead
     // of riding its scan (symBase is deduped and the join keys are the
     // canonical pair, so exactly the canonical-direction row survives).
-    // Canonical removal set, materialized WITH its count: the count
-    // guards every broadcast hint below — delta-boundedness of a
-    // takedown batch is an API contract, not code, and a bulk deletion
-    // must degrade to shuffle joins instead of OOMing on the broadcast
-    // build (r19 verdict). One extra delta-scale checkpoint vs the
-    // unguarded r19 form; it is what makes the guard honest (counting an
-    // unmaterialized frame would re-run its lineage).
+    // Canonical removal set, materialized WITH its count, which bounds
+    // every removal-derived frame below.
+    // Broadcast or shuffle: the session byte threshold decides (checkpointing's leaf rule).
     val (remD, nRem) = graft.util.PhaseTiming.phase("tri-iwd:remDistinct") {
       org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(
         GraphFrame.canonicalPairs(removedEdges))
     }
-    // Hinted when bounded: every consumer below (the two
-    // degree-orientation joins, the symPost anti, the destroy fanout)
-    // wants the delta-sized removal set on the build side. LAZY
-    // truncation (r20): the consumers all materialize inside later jobs
-    // of this call, so an eager checkpoint here only added one more
-    // scheduled job to the per-batch floor — the lazy form still shares
-    // ONE RDD between the four consumers.
-    val remCanonCkpt = graft.util.PhaseTiming.phase("tri-iwd:remCanon") {
-      org.apache.spark.sql.graft.checkpointing.localCheckpointNoStats(
-        symBase
-          .join(DeltaBroadcast.hintIfBounded(remD, nRem), Seq(SRC, DST),
-            "left_semi"),
-        eager = false)
+    // LAZY truncation (r20): the consumers (the two degree-orientation
+    // joins, the symPost anti, the destroy fanout) all materialize inside
+    // later jobs of this call, so an eager checkpoint here only added one
+    // more scheduled job to the per-batch floor — the lazy form still
+    // shares ONE RDD between them.
+    val remCanon = graft.util.PhaseTiming.phase("tri-iwd:remCanon") {
+      org.apache.spark.sql.graft.checkpointing.localCheckpointBounded(
+        symBase.join(remD, Seq(SRC, DST), "left_semi"), nRem)
     }
-    val remCanon = DeltaBroadcast.hintIfBounded(remCanonCkpt, nRem)
     // Destroyed triangles {u,v,w}: w a common BASE-neighbor of the
     // removed edge {u,v}, fanned from the lower-(degree, id) endpoint.
     val deg = symBase.groupBy(col(SRC).as("__td_v"))
       .agg(count(lit(1)).as("__td_d"))
-    val oriented = remCanon
+    val oriented = org.apache.spark.sql.graft.checkpointing.localCheckpointBounded(remCanon
       .join(deg.select(col("__td_v").as("__td_vs"), col("__td_d").as("__td_ds")),
         col(SRC) === col("__td_vs"))
       .join(deg.select(col("__td_v").as("__td_vd"), col("__td_d").as("__td_dd")),
@@ -316,8 +296,8 @@ object TriangleCount {
         when(struct(col("__td_ds"), col(SRC)) <= struct(col("__td_dd"), col(DST)),
           col(SRC)).otherwise(col(DST)).as("u"),
         when(struct(col("__td_ds"), col(SRC)) <= struct(col("__td_dd"), col(DST)),
-          col(DST)).otherwise(col(SRC)).as("v"))
-    val destroyed = DeltaBroadcast.hintIfBounded(oriented, nRem)
+          col(DST)).otherwise(col(SRC)).as("v")), nRem)
+    val destroyed = oriented
       .join(symBase.select(col(SRC).as("u"), col(DST).as("w")), Seq("u"))
       .filter(col("w") =!= col("v"))
       .join(symBase.select(col(SRC).as("v"), col(DST).as("w")),
@@ -346,8 +326,7 @@ object TriangleCount {
     }
     if (symBaseOpt.isEmpty)
       org.apache.spark.sql.graft.checkpointing.release(symBase)
-    org.apache.spark.sql.graft.checkpointing.release(remD)
-    org.apache.spark.sql.graft.checkpointing.release(remCanonCkpt)
+    Seq(remD, remCanon, oriented).foreach(org.apache.spark.sql.graft.checkpointing.release)
     out
   }
 }

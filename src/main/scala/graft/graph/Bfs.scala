@@ -32,6 +32,7 @@ import org.apache.spark.sql.functions._
   * the join tree never deepens past one level.
   */
 object Bfs {
+  private val checkpointing = org.apache.spark.sql.graft.checkpointing
 
   def run(g: GraphFrame, fromExpr: Column, toExpr: Column,
       maxPathLength: Int = 10, edgeFilter: Option[Column] = None): DataFrame = {
@@ -61,30 +62,26 @@ object Bfs {
       val hop = e.select(col(GraphFrame.SRC).as("__bfs_src"),
         col(GraphFrame.DST).as("__bfs_dst"),
         struct(e.columns.map(col).toIndexedSeq: _*).as(s"e${level - 1}"))
-      val expanded = org.apache.spark.sql.graft.checkpointing
-        .localCheckpointNoStats(
-          frontier.join(hop, col("__bfs_last") === col("__bfs_src"))
-            .join(vStruct.withColumnRenamed("__bfs_v", s"v$level"),
-              col("__bfs_dst") === vStruct("__bfs_id"))
-            .drop("__bfs_last", "__bfs_src", "__bfs_id")
-            .withColumnRenamed("__bfs_dst", "__bfs_last"))
-      // ONE action decides both continue/stop questions: total expanded
-      // rows (frontier died?) and arrived rows (target reached?) from a
-      // single aggregate over the checkpointed level — to-ids are unique
-      // (vertex contract), so the left join replicates nothing and
-      // count(__bfs_to) counts exactly the arrived paths. Two separate
-      // limit(1).count() probes cost a driver round-trip each; on deep
-      // searches the per-level scheduling floor is the dominant cost
-      // (the g23b lesson).
-      val stats = expanded
-        .join(toIds, col("__bfs_last") === col("__bfs_to"), "left_outer")
-        .agg(count(lit(1)).as("n"), count(col("__bfs_to")).as("nArrived"))
-        .head()
-      if (stats.getLong(0) == 0) // frontier died: no path at all
+      val (expanded, rows) = checkpointing.localCheckpointCounted(
+        frontier.join(hop, col("__bfs_last") === col("__bfs_src"))
+          .join(vStruct.withColumnRenamed("__bfs_v", s"v$level"),
+            col("__bfs_dst") === vStruct("__bfs_id"))
+          .drop("__bfs_last", "__bfs_src", "__bfs_id")
+          .withColumnRenamed("__bfs_dst", "__bfs_last"))
+      // The level before is superseded now that this one is stored (level
+      // 1 expanded the from-vertices, which are no checkpoint).
+      if (level > 1) checkpointing.release(frontier)
+      frontier = expanded
+      if (rows == 0) { // frontier died: no path at all
+        checkpointing.release(expanded)
         return level0.limit(0)
-      if (stats.getLong(1) > 0) {
-        val arrived = expanded
-          .join(toIds, col("__bfs_last") === col("__bfs_to"), "left_semi")
+      }
+      // The checkpoint's count answered "frontier died?"; ONE probe
+      // answers "target reached?". On deep searches the per-level
+      // scheduling floor is the dominant cost (the g23b lesson).
+      val arrived = expanded
+        .join(toIds, col("__bfs_last") === col("__bfs_to"), "left_semi")
+      if (arrived.limit(1).count() > 0) {
         // Rename the terminal vertex struct to `to` and order columns
         // from, e0, v1, ..., e_{L-1}, to.
         val mids = (1 until level).map(i => Seq(col(s"e${i - 1}"), col(s"v$i")))
@@ -93,8 +90,8 @@ object Bfs {
           (col("from") +: mids :+ col(s"e${level - 1}")
             :+ col(s"v$level").as("to")): _*)
       }
-      frontier = expanded
     }
+    if (level > 0) checkpointing.release(frontier)
     level0.limit(0) // depth exhausted: empty frame with the level-0 schema
   }
 }

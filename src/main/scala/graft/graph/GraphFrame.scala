@@ -279,8 +279,8 @@ object GraphFrame {
     * every copy of a listed edge drop, while `edges` keeps its columns,
     * orientation and duplicates otherwise. `pairs` must be canonical
     * (`src < dst`, as [[canonicalPairs]] makes them) and is joined
-    * exactly as the caller hinted it — `broadcast(...)` or
-    * `DeltaBroadcast.hintIfBounded(...)` carry through. This is the one
+    * exactly as the caller gave it — a `broadcast(...)` hint or a counted
+    * leaf's statistics carry through. This is the one
     * predicate behind "the current graph is the log minus its
     * tombstones": the CDC maintenance loops read with it and
     * compaction writes with it.

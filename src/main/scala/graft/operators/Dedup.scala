@@ -880,9 +880,9 @@ object Dedup {
     // islands frame is duplicate-island-sized — orders of magnitude
     // smaller than the corpus — and counts is one (id, nt) row per doc.
     val islands =
-      org.apache.spark.sql.graft.checkpointing.localCheckpointNoStats(islandsPlan)
+      org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(islandsPlan)._1
     val countsCk =
-      org.apache.spark.sql.graft.checkpointing.localCheckpointNoStats(counts)
+      org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(counts)._1
     val gaps = islands
       .withColumn("prev_e", lag(col("ie"), 1, -1L).over(
         Window.partitionBy(id).orderBy("is")))

@@ -537,8 +537,8 @@ object Similarity {
     // probed by every query batch (at scale they live in a table and
     // arrive via codesOf).
     val codes = codesOf.getOrElse(
-      org.apache.spark.sql.graft.checkpointing.localCheckpointNoStats(
-        pqCodes(corpus, idCol, vecCol, m, kCent, Some(book))))
+      org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(
+        pqCodes(corpus, idCol, vecCol, m, kCent, Some(book)))._1)
       .select(col(idCol).as("id"), col("codes"))
     // Literal [m][kCent] distance-table EXPRESSION evaluated on the query
     // side: tables(s)(j) = ||q_s - c_{s,j}||^2, integer-exact.
@@ -659,7 +659,7 @@ object Similarity {
     // The index artifact, checkpointed before any per-query fan-out (the
     // pqTopK lesson: without the cut the optimizer re-derives the encode
     // chain per (candidate x query) row).
-    (org.apache.spark.sql.graft.checkpointing.localCheckpointNoStats(encoded),
+    (org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(encoded)._1,
       coarse, book)
   }
 
@@ -894,8 +894,8 @@ object Similarity {
       metaCols: Seq[String] = Nil)
       : (DataFrame, Array[Array[Long]], Array[Array[Array[Long]]]) = {
     val (artifact, coarse, book) = index
-    val enc = org.apache.spark.sql.graft.checkpointing.localCheckpointNoStats(
-      ivfPqAppend(delta, idCol, vecCol, coarse, book, metaCols))
+    val enc = org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(
+      ivfPqAppend(delta, idCol, vecCol, coarse, book, metaCols))._1
     (artifact.unionByName(enc), coarse, book)
   }
 
@@ -919,8 +919,8 @@ object Similarity {
       metaCols: Seq[String] = Nil)
       : (DataFrame, Array[Array[Long]], Array[Array[Array[Long]]]) = {
     val (artifact, coarse, book) = index
-    val enc = org.apache.spark.sql.graft.checkpointing.localCheckpointNoStats(
-      ivfPqAppend(delta, idCol, vecCol, coarse, book, metaCols))
+    val enc = org.apache.spark.sql.graft.checkpointing.localCheckpointCounted(
+      ivfPqAppend(delta, idCol, vecCol, coarse, book, metaCols))._1
     (artifact.join(enc.select(col("id")), Seq("id"), "left_anti")
       .unionByName(enc), coarse, book)
   }

@@ -811,8 +811,8 @@ object Streams {
         "deltas call TriangleCount.incrementalWithDeletions directly",
       "tri-cdc", Seq(countsTable, adjTable, tombstonesTable)) { (ss, batch) =>
       // Counted checkpoint: the batch row count (free — the eager
-      // materialization pays it anyway) bounds |addCanon| below, so
-      // the tombNext anti can keep its broadcast under the delta cap.
+      // materialization pays it anyway) bounds |addCanon| below.
+      // Broadcast or shuffle: the session byte threshold decides (checkpointing's leaf rule).
       val (b, nB) = checkpointing.localCheckpointCounted(
         batch.select(col(SRC), col(DST), col(opCol)))
       val (adds, removes) = splitChanges(b, opCol)
@@ -833,19 +833,14 @@ object Streams {
       // consumers materialize inside this body's later eager jobs —
       // the lazy form shares one RDD without adding a scheduled job
       // to the per-batch floor.
-      val addCanon = checkpointing.localCheckpointNoStats(
-        canonicalPairs(adds), eager = false)
+      val addCanon = checkpointing.localCheckpointBounded(canonicalPairs(adds), nB)
       val genuinelyNew = addCanon
         .join(ss.table(adjTable), Seq(SRC, DST), "left_anti")
       val newSym = genuinelyNew.select(col(SRC), col(DST))
         .unionByName(genuinelyNew.select(col(DST).as(SRC), col(SRC).as(DST)))
         .localCheckpoint(true)
-      val remPresent = sym.join(
-        graft.algorithms.DeltaBroadcast.hintIfBounded(canonicalPairs(removes), nB),
-        Seq(SRC, DST), "left_semi")
-      val tombNext = nextTombstones(tomb, remPresent,
-          graft.algorithms.DeltaBroadcast.hintIfBounded(addCanon, nB))
-        .localCheckpoint(true)
+      val remPresent = sym.join(canonicalPairs(removes), Seq(SRC, DST), "left_semi")
+      val tombNext = nextTombstones(tomb, remPresent, addCanon).localCheckpoint(true)
       BatchOut(
         Seq(TableWrite(countsTable, "overwrite", next),
           TableWrite(adjTable, "append", newSym),

@@ -333,10 +333,9 @@ object ScaleBench {
         // max(1, ...): a tiny smoke n must not divide by zero (ANSI mod)
         // or turn every vector into a query.
         val stride = math.max(1L, n / 16)
-        val codes = org.apache.spark.sql.graft.checkpointing
-          .localCheckpointNoStats(graft.operators.Similarity.pqCodes(
+        val (codes, nCodes) = org.apache.spark.sql.graft.checkpointing
+          .localCheckpointCounted(graft.operators.Similarity.pqCodes(
             pts, "vec_id", "embedding", m = 8, kCent = 16))
-        val nCodes = codes.count()
         val tEnc = (System.nanoTime() - t0) / 1e9
         // The encoded table is PASSED to the search (codesOf) so the
         // search figure measures query cost, not a hidden re-encode.
@@ -997,10 +996,9 @@ object ScaleBench {
         // query returns exactly k hits.
         val dim = 64
         val pts = syntheticVectors(spark, n, dim)
-        val codes = org.apache.spark.sql.graft.checkpointing
-          .localCheckpointNoStats(graft.operators.Similarity.binaryCodes(
+        val (codes, nCodes) = org.apache.spark.sql.graft.checkpointing
+          .localCheckpointCounted(graft.operators.Similarity.binaryCodes(
             pts, "vec_id", "embedding", dim))
-        val nCodes = codes.count()
         val tEnc = (System.nanoTime() - t0) / 1e9
         require(nCodes == n, s"code rows $nCodes != $n")
         val stride = math.max(1L, n / 16)

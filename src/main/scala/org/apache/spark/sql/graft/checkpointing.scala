@@ -4,6 +4,8 @@ import org.apache.spark.rdd.{RDD, UnionRDD}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SQLExecutionRDD}
@@ -25,6 +27,26 @@ import org.apache.spark.sql.functions.col
   * plan is therefore fixed when it is built — no runtime re-planning, no
   * runtime broadcast, no partition coalescing — and a loop round that
   * checkpoints lazily and ends in [[roundCounts]] runs as ONE job.
+  *
+  * STATISTICS: a leaf has them exactly when its row count is known.
+  *   - An eager checkpoint counts its rows while it materializes them, so
+  *     its leaf carries `rowCount = n` and `sizeInBytes =
+  *     EstimationUtils.getOutputSize(output, n)` (1, never 0, when empty: a
+  *     0 would zero every size product above the leaf). One rule then owns
+  *     "is this delta small enough to broadcast?": the session's byte
+  *     threshold, `spark.sql.autoBroadcastJoinThreshold`. An exact count
+  *     does not compound from round to round.
+  *   - A lazy checkpoint has no count when it is built. It stays stats-free
+  *     (`defaultSizeInBytes`, never auto-broadcast) unless the caller passes
+  *     an upper bound that is itself an exact count ([[localCheckpointBounded]]),
+  *     which sets `sizeInBytes` only.
+  *   - Loop state is lazy and stays stats-free. A plain
+  *     `Dataset.localCheckpoint` copies the optimizer's ESTIMATE onto its
+  *     leaf, and every join multiplies its sides' estimates, so a loop that
+  *     joins its state with itself doubles the estimate's bit length every
+  *     round (`graft.CheckpointStatsSpec`): a deep fixpoint loop then hangs
+  *     in planning, multiplying million-bit BigIntegers, while the cluster
+  *     idles. A stats-free leaf restarts from the default size every round.
   *
   * DECLARED LAYOUT. `Dataset.localCheckpoint` under AQE produces a
   * `LogicalRDD` whose output partitioning is unknown, so iterative
@@ -78,8 +100,8 @@ object checkpointing {
     * unless the plan holds a broadcast exchange or a subquery: Spark starts
     * those as soon as the plan executes. Loop state never triggers one —
     * its stats-free checkpoint leaves are never auto-broadcast — but a
-    * small input joined in (an explicit `broadcast` hint, a small table)
-    * still runs its own job here. The session's
+    * small input joined in (a counted delta, an explicit `broadcast` hint,
+    * a small table) still runs its own job here. The session's
     * `spark.sql.adaptive.enabled` is left alone: other threads and
     * streams share it. Planning runs with the frame's session active, as
     * `QueryExecution` itself does: the planner reads the active session's
@@ -101,14 +123,20 @@ object checkpointing {
   private def checkpointRows(qe: QueryExecution, eager: Boolean): RDD[InternalRow] =
     (if (eager) qe.toRdd else staticRows(qe)).map(_.copy())
 
-  /** A frame over `rdd` that carries no inherited statistics (see
-    * [[localCheckpointNoStats]]).
+  /** A frame over `rdd` under the leaf rule (see the object doc):
+    * `rows` is the checkpoint's row count when it is known, `exact` when
+    * it is the count itself rather than an upper bound on it.
     */
   private def ofRdd(qe: QueryExecution, rdd: RDD[InternalRow],
-      partitioning: Partitioning, ordering: Seq[SortOrder]): DataFrame = {
+      partitioning: Partitioning, ordering: Seq[SortOrder],
+      rows: Option[Long], exact: Boolean): DataFrame = {
     val spark = qe.sparkSession
+    val output = qe.analyzed.output
+    val stats = rows.map(n => Statistics(
+      sizeInBytes = EstimationUtils.getOutputSize(output, n),
+      rowCount = if (exact) Some(n) else None))
     ClassicDataset.ofRows(spark,
-      LogicalRDD(qe.analyzed.output, rdd, partitioning, ordering, isStreaming = false)(spark))
+      LogicalRDD(output, rdd, partitioning, ordering, isStreaming = false)(spark, stats))
   }
 
   /** The loop round's ONE action: the row count of each frame, all
@@ -135,7 +163,7 @@ object checkpointing {
       if (sortWithinPartitions) df.sortWithinPartitions(keys.map(col): _*) else df
     val qe = execution(sorted)
     var rdd = checkpointRows(qe, eager)
-    if (rdd.getNumPartitions == 0) {
+    val rows = if (rdd.getNumPartitions == 0) {
       // A provably-empty frame can plan to a zero-partition scan (AQE's
       // empty-relation propagation, or the optimizer's on an empty local
       // input). An empty frame is trivially hash-partitioned, but the
@@ -143,6 +171,7 @@ object checkpointing {
       // exchange-elided co-partitioned joins — so rebuild it as numParts
       // empty partitions.
       rdd = qe.sparkSession.sparkContext.parallelize(Seq.empty[InternalRow], numParts)
+      Option.when(eager)(0L)
     } else {
       // Partitioning-contract guard: a declared partitioning over the wrong
       // partition count elides exchanges the plan actually needs and
@@ -154,7 +183,7 @@ object checkpointing {
           s"partitions but HashPartitioning($keys, $numParts) was declared — " +
           "repartition(numParts, keys*) immediately upstream")
       rdd = rdd.localCheckpoint()
-      if (eager) rdd.count()
+      Option.when(eager)(rdd.count())
     }
     val output: Seq[Attribute] = qe.analyzed.output
     val keyAttrs = keys.map(k =>
@@ -162,60 +191,51 @@ object checkpointing {
         throw new IllegalArgumentException(s"key column '$k' not in ${output.map(_.name)}")))
     val ordering: Seq[SortOrder] =
       if (sortWithinPartitions) keyAttrs.map(a => SortOrder(a, Ascending)) else Nil
-    ofRdd(qe, rdd, HashPartitioning(keyAttrs, numParts), ordering)
+    ofRdd(qe, rdd, HashPartitioning(keyAttrs, numParts), ordering, rows, exact = true)
   }
 
-  /** Lineage-truncating local checkpoint that RESETS the leaf's estimated
-    * statistics instead of propagating them.
-    *
-    * `Dataset.localCheckpoint` copies the optimizer's ESTIMATED
-    * `sizeInBytes` onto the new `LogicalRDD` leaf. In an iterative
-    * algorithm each round's estimate is a product over the previous
-    * round's leaf sizes (every join MULTIPLIES the sides' estimates), so
-    * the estimate's bit-length compounds geometrically round over round —
-    * one self-join per round doubles it (`graft.CheckpointStatsSpec` pins
-    * the growth over 12 self-join rounds), and a 30-round peel leaves Catalyst
-    * multiplying million-bit BigIntegers inside stats estimation: planning
-    * hangs while the cluster idles. Capped loops mask it; deep fixpoint
-    * loops die of it.
-    *
-    * This helper materializes the frame exactly like `localCheckpoint`
-    * (execute + row copy + localCheckpoint + eager count) but constructs
-    * the `LogicalRDD` WITHOUT the inherited stats, so every round restarts
-    * from `defaultSizeInBytes` — constant-size planning forever. Use it
-    * for EVERY per-round checkpoint in an unbounded or deep loop. The cost
-    * is that Catalyst can no longer auto-broadcast off these leaves'
-    * (garbage anyway) estimates — loops that want a broadcast say so
-    * explicitly with `broadcast()`.
+  /** A LAZY checkpoint with no statistics: loop state (see the object
+    * doc). `eager` must be false, and stays only so that call sites name
+    * the mode: an eager checkpoint knows its row count, and
+    * [[localCheckpointCounted]] keeps it.
     */
-  def localCheckpointNoStats(df: DataFrame, eager: Boolean = true): DataFrame =
-    if (eager) localCheckpointCounted(df)._1
-    else {
-      val qe = execution(df)
-      ofRdd(qe, checkpointRows(qe, eager = false).localCheckpoint(),
-        UnknownPartitioning(0), Nil)
-    }
+  def localCheckpointNoStats(df: DataFrame, eager: Boolean): DataFrame = {
+    require(!eager, "an eager checkpoint knows its row count: use localCheckpointCounted")
+    lazyLeaf(df, rowBound = None)
+  }
 
-  /** [[localCheckpointNoStats]]'s eager form, RETURNING the row count the
-    * materialization already paid for. Every eager local checkpoint runs
-    * `rdd.count()` to force the blocks; callers that need the frame's
-    * cardinality anyway (e.g. to decide whether a delta frame is small
-    * enough to broadcast) capture it here instead of scheduling a second
-    * count job over the materialized RDD.
+  /** A LAZY checkpoint whose row count is at most `rowBound`, an exact
+    * count the caller already holds (a delta's size bounding a join over
+    * it). The bound sets the leaf's `sizeInBytes` only, so the planner can
+    * broadcast a small delta that Spark's own estimate of the join — the
+    * product of its inputs' sizes — could never call small.
+    */
+  def localCheckpointBounded(df: DataFrame, rowBound: Long): DataFrame =
+    lazyLeaf(df, Some(rowBound))
+
+  private def lazyLeaf(df: DataFrame, rowBound: Option[Long]): DataFrame = {
+    val qe = execution(df)
+    ofRdd(qe, checkpointRows(qe, eager = false).localCheckpoint(),
+      UnknownPartitioning(0), Nil, rowBound, exact = false)
+  }
+
+  /** An EAGER checkpoint, run now, and its row count: the leaf carries the
+    * count as exact statistics, and the caller gets it without a second
+    * job (materializing the blocks counts them anyway).
     */
   def localCheckpointCounted(df: DataFrame): (DataFrame, Long) = {
     val qe = execution(df)
     val rdd = checkpointRows(qe, eager = true).localCheckpoint()
     val n = rdd.count()
-    (ofRdd(qe, rdd, UnknownPartitioning(0), Nil), n)
+    (ofRdd(qe, rdd, UnknownPartitioning(0), Nil, rows = Some(n), exact = true), n)
   }
 
   /** Rebuild an already-checkpointed frame's `LogicalRDD` WITHOUT its
     * inherited estimated stats, preserving the rdd, declared partitioning,
     * and ordering. For checkpoint flavors this module doesn't construct
     * itself — `Dataset.checkpoint(reliable)` in Pregel's reliable-dir mode
-    * — which propagate estimates exactly like `localCheckpoint` (see
-    * [[localCheckpointNoStats]]). No-op on non-LogicalRDD plans.
+    * — which propagate estimates exactly like `localCheckpoint` (see the
+    * object doc). No-op on non-LogicalRDD plans.
     */
   def dropLeafStats(df: DataFrame): DataFrame = {
     val ds = df.asInstanceOf[ClassicDataset[org.apache.spark.sql.Row]]

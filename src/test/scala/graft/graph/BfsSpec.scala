@@ -66,4 +66,15 @@ class BfsSpec extends AnyFunSuite with SparkTestHarness {
       .as[(String, String, String)].collect().toSeq
     assert(r == Seq(("a", "b", "c")))
   }
+
+  test("bfs keeps only the level its result reads: a 3-hop search grows persistent RDDs by at most 1") {
+    // Blocking the 1->5 shortcut makes 1 ~> 4 the 3-hop chain via 2 and 3.
+    // Ids, not sizes: the cleaner may drop earlier suites' RDDs meanwhile.
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val paths = g.bfs(col("id") === 1L, col("id") === 4L,
+      edgeFilter = Some(!(col("src") === 1L && col("dst") === 5L)))
+    assert(paths.select(col("to.id")).as[Long].collect().toSeq == Seq(4L))
+    val grown = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(grown.size <= 1, s"a 3-hop search left ${grown.size} more persistent RDDs")
+  }
 }

@@ -8,10 +8,12 @@ import graft.SparkTestHarness
 
 /** Round-20 optimization-hardening specs:
   *
-  *  1. the delta-broadcast hints in the incremental/CDC composes are
-  *     COUNT-GUARDED (r19 verdict: an unbounded removal batch must fall
-  *     back to the shuffle join, not OOM building a broadcast relation),
-  *     and the composes stay exact on the fallback path;
+  *  1. a delta the incremental/CDC composes checkpoint with its count
+  *     broadcasts exactly when the session's byte threshold
+  *     (`spark.sql.autoBroadcastJoinThreshold`) allows it: a bulk removal
+  *     batch above the threshold must plan the shuffle join, not OOM
+  *     building a broadcast relation, and the composes stay exact on that
+  *     path;
   *  2. `checkpointing.release` reclaims a checkpoint even when the frame
   *     was wrapped in `broadcast(...)` (r19 advisor: ResolvedHint hid the
   *     LogicalRDD and the release was a silent per-micro-batch leak).
@@ -19,47 +21,46 @@ import graft.SparkTestHarness
 class Round20OpsSpec extends AnyFunSuite with SparkTestHarness {
   import spark.implicits._
 
-  private def withRowCap[T](cap: Long)(f: => T): T = {
-    spark.conf.set(graft.GraftConf.DeltaBroadcastRowCapKey, cap.toString)
+  private val ThresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+
+  private def withBroadcastThreshold[T](bytes: BigInt)(f: => T): T = {
+    val old = spark.conf.get(ThresholdKey)
+    spark.conf.set(ThresholdKey, bytes.toString)
     try f
-    finally spark.conf.unset(graft.GraftConf.DeltaBroadcastRowCapKey)
+    finally spark.conf.set(ThresholdKey, old)
   }
 
   private def hasHint(df: org.apache.spark.sql.DataFrame): Boolean =
     df.queryExecution.analyzed.collectFirst { case h: ResolvedHint => h }
       .isDefined
 
-  test("DeltaBroadcast.hintIfBounded: hints under the cap, withholds " +
-      "above it, and the above-cap join plans as a shuffle join") {
+  test("a counted delta leaf broadcasts unhinted under the session threshold; " +
+      "above its exact size the join plans as a shuffle join") {
     val delta = Seq((1L, 2L), (3L, 4L)).toDF("src", "dst")
     val (ckpt, n) = org.apache.spark.sql.graft.checkpointing
       .localCheckpointCounted(delta)
     assert(n == 2L)
+    val size = ckpt.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size == org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+      .EstimationUtils.getOutputSize(ckpt.queryExecution.analyzed.output, n))
     val base = spark.range(100)
       .select(col("id").as("src"), (col("id") + 1).as("dst"))
-    withRowCap(0L) {
-      val joined = base.join(
-        graft.algorithms.DeltaBroadcast.hintIfBounded(ckpt, n),
-        Seq("src", "dst"), "left_anti")
-      assert(!hasHint(joined), "above-cap delta must not carry a hint")
-      // The stats-free leaf keeps the static planner off the broadcast
-      // build: the OOM path is gone at PLAN time (AQE may still flip to
-      // broadcast at runtime from TRUE observed sizes — safe by
-      // definition, not what this guards).
-      val plan = joined.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode)
-      assert(!plan.contains("BroadcastHashJoin"),
-        s"above-cap join must plan as a shuffle join, got:\n$plan")
+    def plan(): String = {
+      val joined = base.join(ckpt, Seq("src", "dst"), "left_anti")
+      assert(!hasHint(joined), "the delta must carry no hint")
+      joined.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
     }
-    withRowCap(1000000L) {
-      val joined = base.join(
-        graft.algorithms.DeltaBroadcast.hintIfBounded(ckpt, n),
-        Seq("src", "dst"), "left_anti")
-      assert(hasHint(joined), "under-cap delta must carry the hint")
-      val plan = joined.queryExecution.explainString(
-        org.apache.spark.sql.execution.SimpleMode)
-      assert(plan.contains("BroadcastHashJoin"),
-        s"under-cap join must plan as a broadcast join, got:\n$plan")
+    val under = plan()
+    assert(under.contains("BroadcastHashJoin"),
+      s"a delta under the threshold must plan as a broadcast join, got:\n$under")
+    // The bulk takedown: the same leaf above the threshold stays off the
+    // broadcast build at PLAN time (AQE may still flip to broadcast at
+    // runtime from TRUE observed sizes — safe by definition, not what
+    // this guards).
+    withBroadcastThreshold(size - 1) {
+      val above = plan()
+      assert(!above.contains("BroadcastHashJoin"),
+        s"a delta above the threshold must plan as a shuffle join, got:\n$above")
     }
     org.apache.spark.sql.graft.checkpointing.release(ckpt)
   }
@@ -88,7 +89,7 @@ class Round20OpsSpec extends AnyFunSuite with SparkTestHarness {
       .unionByName(base.select(col("dst").as("id")))
       .unionByName(added.select(col("src").as("id")))
       .unionByName(added.select(col("dst").as("id"))).distinct()
-    withRowCap(0L) { // EVERY nonempty delta is above the cap
+    withBroadcastThreshold(-1) { // EVERY delta is above the threshold
       // WCC with deletions.
       val fullLabels = GraphFrame.fromEdges(edited)
         .connectedComponents.run().components
