@@ -2,12 +2,18 @@ package graft.algorithms
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.checkpointing
+import org.apache.spark.sql.graft.checkpointing.{RoundStat, Step}
 
 import graft.functions.FiniteAxpb
 import graft.functions.FiniteAxpb.finite_axpb
 import graft.graph.GraphFrame
 
-case class ConnectedComponentsResult(components: DataFrame, iterations: Int)
+/** `rounds`: one [[RoundStat]] per counted round, its count the
+  * contracted edge set (round 0: the symmetrized input).
+  */
+case class ConnectedComponentsResult(components: DataFrame, iterations: Int,
+    rounds: Seq[RoundStat])
 
 /** Weakly connected components via randomized contraction (Bögeholz et al.,
   * ICDE 2020), NOT Pregel — ports the reference's bespoke dataflow loop
@@ -23,15 +29,12 @@ case class ConnectedComponentsResult(components: DataFrame, iterations: Int)
   * stay bit-identical. Finally isolated vertices become their own component
   * and (optionally) each component is relabeled to its minimum member id.
   *
-  * Expected O(log n) iterations. Each round's frames are LAZILY
-  * checkpointed with declared hash-partitioning AND sort order (the Spark
-  * analogue of the reference's hash-partitioned pre-sorted parquet spill,
-  * `hash_partitioned.rs:146-361`) — lineage truncates immediately, each
-  * checkpoint's plan is static and schedules nothing when built, the
-  * round's single termination count (`checkpointing.roundCounts`) runs
-  * the whole round as ONE job, the per-round joins plan without edge-side
-  * exchanges or sorts, and superseded checkpoint blocks are released
-  * explicitly.
+  * Expected O(log n) iterations. Each round's frames are checkpointed with
+  * declared hash-partitioning AND sort order (the Spark analogue of the
+  * reference's hash-partitioned pre-sorted parquet spill,
+  * `hash_partitioned.rs:146-361`), so the per-round joins plan without
+  * edge-side exchanges or sorts. Rounds run on the loop driver
+  * (`checkpointing.loop`, which states the round rule).
   */
 class ConnectedComponents(graph: GraphFrame) {
   private var useLabelsAsComponents = true
@@ -154,68 +157,49 @@ class ConnectedComponents(graph: GraphFrame) {
     // localCheckpoint under AQE reports unknown partitioning and forfeits
     // the elision (PlanSpec: "declared partitioning+ordering checkpoint: SMJ
     // with no exchange, no sort").
-    val numParts = org.apache.spark.sql.graft.checkpointing
-      .shufflePartitions(graph.edges.sparkSession)
-    def ckptBySrc(df: DataFrame, eager: Boolean): DataFrame =
-      org.apache.spark.sql.graft.checkpointing.localCheckpointHashPartitioned(
-        df, Seq(SRC), numParts, eager)
-    // LAZY: the first termination count below materializes the checkpoint
-    // in its one job — an eager checkpoint would schedule the same work as
-    // separate adaptive jobs first.
-    var edges = ckptBySrc(
+    val numParts = checkpointing.shufflePartitions(graph.edges.sparkSession)
+    def ckptBySrc(df: DataFrame): DataFrame =
+      checkpointing.localCheckpointHashPartitioned(df, Seq(SRC), numParts, eager = false)
+    val edges0 = ckptBySrc(
       GraphFrame.symmetrizeEdges(graph.edges.select(SRC, DST), doDistinct = false)
-        .repartition(numParts, col(SRC)),
-      eager = false)
+        .repartition(numParts, col(SRC)))
 
     val rng = new scala.util.Random(seed)
     var forwardReps = Vector.empty[DataFrame]
     var affineParams = Vector.empty[(Long, Long)]
-    var graphSize = graft.util.PhaseTiming.phase("wcc:first-count")(
-      org.apache.spark.sql.graft.checkpointing.roundCounts(edges).head)
-    var iteration = 0
 
     // Mid-loop hybrid cutover: contraction shrinks the edge set roughly
     // geometrically, so the tail iterations process little data while still
     // paying full per-round scheduling/replanning latency (~1.5 s each,
     // measured). Once the contracted edge set fits the threshold — possibly
-    // at iteration 0 — finish it with ONE driver union-find and feed the
-    // result into back-propagation as the frontier. Distributed rounds only
+    // at round 0 — the loop stops and ONE driver union-find finishes it,
+    // feeding back-propagation as the frontier. Distributed rounds only
     // ever process supercritical data.
-    var driverFrontier: Option[DataFrame] = None
-
-    while (graphSize > 0 && driverFrontier.isEmpty) {
-      if (useLabelsAsComponents && smallThreshold > 0 && graphSize <= 2 * smallThreshold) {
-        driverFrontier = Some(
-          graft.util.PhaseTiming.phase("wcc:union-find")(unionFindFrontier(edges)))
-      } else {
-        iteration += 1
+    def cutover(graphSize: Long): Boolean =
+      useLabelsAsComponents && smallThreshold > 0 && graphSize <= 2 * smallThreshold
+    // Rounds on the loop driver (checkpointing.loop); round 0 counts the
+    // symmetrized edges.
+    val contracted = checkpointing.loop(Step(edges0, Seq(edges0)), Int.MaxValue, "wcc") {
+      (edges, _) =>
         var rA = rng.nextLong()
         while (rA == 0L) rA = rng.nextLong()
         val rB = rng.nextLong()
         affineParams :+= (rA, rB)
-
-        // LAZY localCheckpoints: the logical plan is truncated immediately
-        // (reps appears twice in the relabel join — without truncation the
-        // plan tree doubles every iteration), and each checkpoint is built
-        // from a static plan, so nothing executes until the single
-        // termination count below, which runs both frames and all their
-        // shuffles as stages of ONE non-adaptive job.
-        // reps inherits edges' src-partitioning through the groupBy (the
-        // grouping key is aliased to `v`), so its checkpoint declares the
-        // same layout and the src-relabel join plans with no exchange at all.
-        val reps = org.apache.spark.sql.graft.checkpointing
-          .localCheckpointHashPartitioned(
-            computeReps(edges, rA, rB), Seq("v"), numParts, eager = false)
+        // reps appears twice in the relabel join: without truncation the
+        // plan tree doubles every round. reps inherits edges'
+        // src-partitioning through the groupBy (the grouping key is aliased
+        // to `v`), so its checkpoint declares the same layout and the
+        // src-relabel join plans with no exchange at all.
+        val reps = checkpointing.localCheckpointHashPartitioned(
+          computeReps(edges, rA, rB), Seq("v"), numParts, eager = false)
         forwardReps :+= reps
-
-        val previous = edges
-        edges = ckptBySrc(relabelEdges(edges, reps, numParts), eager = false)
-        graphSize = org.apache.spark.sql.graft.checkpointing.roundCounts(edges).head
-        // Real release: checkpoint blocks belong to the RDD, which plain
-        // Dataset.unpersist never reaches (it is a CacheManager no-op here).
-        org.apache.spark.sql.graft.checkpointing.release(previous)
-      }
-    }
+        val next = ckptBySrc(relabelEdges(edges, reps, numParts))
+        Step(next, Seq(next))
+    } { r => r.counts.head == 0 || cutover(r.counts.head) }
+    val edges = contracted.state
+    val iteration = contracted.iterations
+    val driverFrontier = Option.when(contracted.last.counts.head > 0)(
+      graft.util.PhaseTiming.phase("wcc:union-find")(unionFindFrontier(edges)))
 
     // Back pass: a chain of left joins over the CACHED forward reps. All
     // frames stay lazy; the eager result checkpoint at the end runs the
@@ -259,7 +243,7 @@ class ConnectedComponents(graph: GraphFrame) {
         vertices.select(col(ID), col(ID).as("component"))
     }
 
-    val release = org.apache.spark.sql.graft.checkpointing.release _
+    val release = checkpointing.release _
 
     // Immediate-cutover fast path: when the union-find ran on the ORIGINAL
     // (symmetrized) edge set, its reps are already the minimum member id of
@@ -271,7 +255,7 @@ class ConnectedComponents(graph: GraphFrame) {
     // and the driver-built frontier, so the edge checkpoint is released now.
     if (iteration == 0 && driverFrontier.isDefined && useLabelsAsComponents) {
       release(edges)
-      return ConnectedComponentsResult(labeled, 0)
+      return ConnectedComponentsResult(labeled, 0, contracted.rounds)
     }
 
     var relabelInput: Option[DataFrame] = None
@@ -292,7 +276,7 @@ class ConnectedComponents(graph: GraphFrame) {
     relabelInput.foreach(release)
     forwardReps.foreach(release)
     release(edges)
-    ConnectedComponentsResult(out, iteration)
+    ConnectedComponentsResult(out, iteration, contracted.rounds)
   }
 }
 

@@ -2,6 +2,8 @@ package graft.algorithms
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.checkpointing
+import org.apache.spark.sql.graft.checkpointing.Step
 
 import graft.graph.GraphFrame
 
@@ -60,20 +62,12 @@ class Hits(graph: GraphFrame) {
     // distinct under it) appeared 16 times in ONE plan, each copy
     // re-shuffling (r19 optimization round). A lazy no-stats checkpoint
     // per half-step makes both references share one RDD — plan linear
-    // in iterations. Each iteration ends in ONE counting job that runs
-    // both half-steps' static plans; after it the superseded frames are
-    // released, so at most two V-sized block sets are live. Without that
-    // action the unmaterialized checkpoints would chain across all
-    // iterations into one job whose task graph grows with the iteration
-    // count (a stack overflow at 45 iterations).
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.checkpointing
-        .localCheckpointNoStats(df, eager = false)
+    // in iterations. Rounds run on the loop driver (`checkpointing.loop`,
+    // which states the round rule).
+    def ckpt(df: DataFrame): DataFrame = checkpointing.localCheckpointNoStats(df, eager = false)
     val edges = graph.edges.select(GraphFrame.SRC, GraphFrame.DST)
-    var state = ckpt(graph.vertices.select(col(ID),
-      lit(1L).as("auth"), lit(1L).as("hub")))
-    var i = 0
-    while (i < iters) {
+    val init = ckpt(graph.vertices.select(col(ID), lit(1L).as("auth"), lit(1L).as("hub")))
+    val state = checkpointing.loop(Step(init, Nil), iters, "hits") { (state, _) =>
       val auth = edges.join(
           state.select(col(ID).as("__s_id"), col("hub").as("__s_hub")),
           col(GraphFrame.SRC) === col("__s_id"))
@@ -87,14 +81,11 @@ class Hits(graph: GraphFrame) {
           col(GraphFrame.DST) === col("__d_id"))
         .groupBy(col(GraphFrame.SRC).as(ID))
         .agg(try_sum(col("__d_auth")).as("__new_hub"), count(lit(1)).as("__nh_cnt"))
-      val previous = state
-      state = ckpt(withAuth.select(col(ID), col("auth"))
+      val next = ckpt(withAuth.select(col(ID), col("auth"))
         .join(hub.withColumnRenamed(ID, "__h_id"), col(ID) === col("__h_id"), "left")
         .select(col(ID), col("auth"), guarded("__new_hub", "__nh_cnt", "hub").as("hub")))
-      org.apache.spark.sql.graft.checkpointing.roundCounts(state)
-      Seq(previous, withAuth).foreach(org.apache.spark.sql.graft.checkpointing.release)
-      i += 1
-    }
+      Step(next, Seq(next), scratch = Seq(withAuth))
+    }(_.round == iters).state
     if (!normalize) state
     else {
       // One global aggregate; the 1-row norm frame broadcast-joins back

@@ -2,6 +2,8 @@ package graft.algorithms
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.checkpointing
+import org.apache.spark.sql.graft.checkpointing.Step
 import org.apache.spark.sql.types.LongType
 
 import graft.graph.GraphFrame
@@ -94,25 +96,16 @@ class HyperBall(graph: GraphFrame) {
     * radius 3 evaluated the initial state 8 times and scanned the edge
     * parquet 12 times in ONE plan (measured, r19 optimization round). A
     * lazy checkpoint per round makes both references share one RDD —
-    * the plan is linear in r and each round computes exactly once, in
-    * the ONE counting job that ends the round; the superseded round is
-    * released after it, so at most two V·2^p-sized block sets are live
-    * (see Hits for why the chain must not run unmaterialized across
-    * rounds).
+    * the plan is linear in r and each round computes exactly once.
+    * Rounds run on the loop driver (`checkpointing.loop`, which states
+    * the round rule).
     */
   def registers(): DataFrame = {
     val edges = graph.edges.select(GraphFrame.SRC, GraphFrame.DST)
-    var state = initState()
-    var i = 0
-    while (i < r) {
-      val previous = state
-      state = org.apache.spark.sql.graft.checkpointing
-        .localCheckpointNoStats(mergeRound(state, edges), eager = false)
-      org.apache.spark.sql.graft.checkpointing.roundCounts(state)
-      org.apache.spark.sql.graft.checkpointing.release(previous)
-      i += 1
-    }
-    state
+    checkpointing.loop(Step(initState(), Nil), r, "hyperball") { (state, _) =>
+      val next = checkpointing.localCheckpointNoStats(mergeRound(state, edges), eager = false)
+      Step(next, Seq(next))
+    }(_.round == r).state
   }
 
   /** The NEIGHBORHOOD FUNCTION and effective diameter — HyperANF's

@@ -2,6 +2,7 @@ package graft.algorithms
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.checkpointing.Step
 
 import graft.graph.GraphFrame
 
@@ -40,8 +41,7 @@ import graft.graph.GraphFrame
   *
   * Returns the canonical surviving edges `[src, dst, support]` (src < dst;
   * support measured in the final round's input graph). State is the edge
-  * support table itself — checkpointed per round and released, the Pregel
-  * discipline.
+  * support table itself.
   */
 class KTruss(graph: GraphFrame) {
   private var k = 4
@@ -61,10 +61,11 @@ object KTruss {
     * sizeInBytes, whose bit-length compounds geometrically across peel
     * rounds until stats estimation (BigInteger products) dwarfs the actual
     * work — a deep fixpoint peel then hangs in PLANNING, not execution.
-    * An exact count does not compound (see `checkpointing`).
+    * An exact count does not compound (see `checkpointing`). Eager, so the
+    * enumeration joins plan adaptively: as lazy static rounds the peels
+    * ran 3.3x slower at `ScaleBench 262144 1048576 ktruss` (SCALE_RECORD.md).
     */
-  private def ckpt(df: DataFrame): DataFrame =
-    checkpointing.localCheckpointCounted(df)._1
+  private def ckpt(df: DataFrame): DataFrame = checkpointing.localCheckpointCounted(df)._1
 
   /** Canonical undirected simple edges `[a, b]`, a < b. */
   private def canonical(edges: DataFrame): DataFrame =
@@ -75,9 +76,10 @@ object KTruss {
     * degree-oriented Schank-Wagner enumeration (wedges expand only from
     * the (degree, id)-smaller endpoint, so wedge volume is O(m^1.5)
     * regardless of skew). Returns `[a, b, support]` covering EVERY edge of
-    * `cur` (zero-support edges included).
+    * `cur` (zero-support edges included), and the oriented-edge checkpoint
+    * it read, the caller's to release.
     */
-  private def triangleSupport(cur: DataFrame): DataFrame = {
+  private def triangleSupport(cur: DataFrame): (DataFrame, DataFrame) = {
     val sym = cur.select(col("a").as("u"), col("b").as("v"))
       .unionAll(cur.select(col("b").as("u"), col("a").as("v")))
     val deg = sym.groupBy(col("u").as("__kt_v")).agg(count(lit(1)).as("__kt_d"))
@@ -103,131 +105,110 @@ object KTruss {
     val out = cur.join(credits, Seq("a", "b"), "left")
       .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
       .transform(ckpt)
-    checkpointing.release(oriented)
-    out
+    (out, oriented)
   }
 
-  /** Incremental-support peel (default). */
+  /** The surviving edges `[src, dst, support]` of a support table. */
+  private def result(supported: DataFrame): DataFrame =
+    supported.select(col("a").as(GraphFrame.SRC), col("b").as(GraphFrame.DST), col("support"))
+
+  /** Incremental-support peel (default). Rounds run on the loop driver
+    * (`checkpointing.loop`), which releases them. The state is `sup` with
+    * its split into removed edges and survivors, which the driver counts
+    * together; round 0 splits the seed enumeration.
+    */
   def run(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val cur0 = canonical(edges).transform(ckpt)
     // Loop invariant: `sup` holds the support of every edge of the current
     // graph, measured IN the current graph.
-    var sup = triangleSupport(cur0)
-    checkpointing.release(cur0)
-    var round = 1
-    var out: DataFrame = null
-    while (out == null) {
-      val removed = sup.filter(col("support") < k - 2)
-        .select("a", "b").transform(ckpt)
+    def split(sup: DataFrame, scratch: Seq[DataFrame]): Step[(DataFrame, DataFrame, DataFrame)] = {
+      val removed = sup.filter(col("support") < k - 2).select("a", "b").transform(ckpt)
       val survivors = sup.filter(col("support") >= k - 2).transform(ckpt)
-      val removedCount = removed.count()
-      if (removedCount == 0 || round == maxRounds) {
-        out = survivors
-          .select(col("a").as(GraphFrame.SRC), col("b").as(GraphFrame.DST),
-            col("support"))
-          .transform(ckpt)
-        checkpointing.release(survivors)
-        checkpointing.release(removed)
-      } else if (removedCount > survivors.count()) {
-        // MASS peel (most of the graph died this round — e.g. a sparse
-        // graph's first round): the removal frontier's wedge volume
-        // exceeds a fresh enumeration on the (smaller) survivor set, so
-        // incremental decrementing LOSES here — ScaleBench
-        // ktruss-inc-deep-skew measured 104 s frontier vs 44 s recount
-        // at 8.4 M edges peeling to 1512. Recount from scratch and let
-        // later (gradual) rounds take the incremental path.
-        val surEdges = survivors.select("a", "b").transform(ckpt)
-        val next = triangleSupport(surEdges)
-        checkpointing.release(surEdges)
-        checkpointing.release(survivors)
-        checkpointing.release(sup)
-        checkpointing.release(removed)
-        sup = next
-        round += 1
-      } else {
-        // Triangles of the PRE-removal graph touching >= 1 removed edge:
-        // expand each removed edge from its (degree, id)-smaller endpoint
-        // over the pre-removal adjacency, close against the pre-removal
-        // edge set, then dedupe on the canonical vertex triple.
-        val curEdges = sup.select("a", "b")
-        val sym = curEdges.select(col("a").as("u"), col("b").as("v"))
-          .unionAll(curEdges.select(col("b").as("u"), col("a").as("v")))
-        val deg = sym.groupBy(col("u").as("__kt_v"))
-          .agg(count(lit(1)).as("__kt_d"))
-        val flip = removed
-          .join(deg, col("a") === col("__kt_v"))
-          .select(col("a"), col("b"), struct(col("__kt_d"), col("a")).as("ra"))
-          .join(deg, col("b") === col("__kt_v"))
-          .select(col("a"), col("b"), col("ra"),
-            struct(col("__kt_d"), col("b")).as("rb"))
-          .select(when(col("ra") <= col("rb"), col("a")).otherwise(col("b")).as("p"),
-            when(col("ra") <= col("rb"), col("b")).otherwise(col("a")).as("q"))
-        val cands = flip.join(sym, col("p") === col("u"))
-          .select(col("p"), col("q"), col("v").as("c"))
-          .filter(col("c") =!= col("q"))
-        val closed = cands.join(
-          curEdges.select(col("a").as("ca"), col("b").as("cb")),
-          least(col("q"), col("c")) === col("ca") &&
-            greatest(col("q"), col("c")) === col("cb"))
-          .select(col("p"), col("q"), col("c"))
-        val tri = closed.select(
-          least(col("p"), col("q"), col("c")).as("x"),
-          (col("p") + col("q") + col("c")
-            - least(col("p"), col("q"), col("c"))
-            - greatest(col("p"), col("q"), col("c"))).as("y"),
-          greatest(col("p"), col("q"), col("c")).as("z"))
-          .distinct()
-        val losses = tri.select(col("x").as("a"), col("y").as("b"))
-          .unionAll(tri.select(col("x").as("a"), col("z").as("b")))
-          .unionAll(tri.select(col("y").as("a"), col("z").as("b")))
-          .groupBy("a", "b").agg(count(lit(1)).as("loss"))
-        val next = survivors.join(losses, Seq("a", "b"), "left")
-          .select(col("a"), col("b"),
-            (col("support") - coalesce(col("loss"), lit(0L))).as("support"))
-          .transform(ckpt)
-        checkpointing.release(survivors)
-        checkpointing.release(sup)
-        checkpointing.release(removed)
-        sup = next
-        round += 1
-      }
+      Step((sup, removed, survivors), Seq(removed, survivors), scratch)
     }
-    checkpointing.release(sup)
-    out
+    val cur0 = canonical(edges).transform(ckpt)
+    val (sup0, oriented0) = triangleSupport(cur0)
+    val peeled = checkpointing.loop(split(sup0, Seq(cur0, oriented0)), maxRounds - 1, "ktruss") {
+      case ((sup, removed, survivors), previous) =>
+        val Seq(removedCount, survivorCount) = previous.counts
+        if (removedCount > survivorCount) {
+          // MASS peel (most of the graph died this round — e.g. a sparse
+          // graph's first round): the removal frontier's wedge volume
+          // exceeds a fresh enumeration on the (smaller) survivor set, so
+          // incremental decrementing LOSES here — ScaleBench
+          // ktruss-inc-deep-skew measured 104 s frontier vs 44 s recount
+          // at 8.4 M edges peeling to 1512. Recount from scratch and let
+          // later (gradual) rounds take the incremental path.
+          val surEdges = survivors.select("a", "b").transform(ckpt)
+          val (next, oriented) = triangleSupport(surEdges)
+          split(next, Seq(surEdges, oriented))
+        } else {
+          // Triangles of the PRE-removal graph touching >= 1 removed edge:
+          // expand each removed edge from its (degree, id)-smaller endpoint
+          // over the pre-removal adjacency, close against the pre-removal
+          // edge set, then dedupe on the canonical vertex triple.
+          val curEdges = sup.select("a", "b")
+          val sym = curEdges.select(col("a").as("u"), col("b").as("v"))
+            .unionAll(curEdges.select(col("b").as("u"), col("a").as("v")))
+          val deg = sym.groupBy(col("u").as("__kt_v"))
+            .agg(count(lit(1)).as("__kt_d"))
+          val flip = removed
+            .join(deg, col("a") === col("__kt_v"))
+            .select(col("a"), col("b"), struct(col("__kt_d"), col("a")).as("ra"))
+            .join(deg, col("b") === col("__kt_v"))
+            .select(col("a"), col("b"), col("ra"),
+              struct(col("__kt_d"), col("b")).as("rb"))
+            .select(when(col("ra") <= col("rb"), col("a")).otherwise(col("b")).as("p"),
+              when(col("ra") <= col("rb"), col("b")).otherwise(col("a")).as("q"))
+          val cands = flip.join(sym, col("p") === col("u"))
+            .select(col("p"), col("q"), col("v").as("c"))
+            .filter(col("c") =!= col("q"))
+          val closed = cands.join(
+            curEdges.select(col("a").as("ca"), col("b").as("cb")),
+            least(col("q"), col("c")) === col("ca") &&
+              greatest(col("q"), col("c")) === col("cb"))
+            .select(col("p"), col("q"), col("c"))
+          val tri = closed.select(
+            least(col("p"), col("q"), col("c")).as("x"),
+            (col("p") + col("q") + col("c")
+              - least(col("p"), col("q"), col("c"))
+              - greatest(col("p"), col("q"), col("c"))).as("y"),
+            greatest(col("p"), col("q"), col("c")).as("z"))
+            .distinct()
+          val losses = tri.select(col("x").as("a"), col("y").as("b"))
+            .unionAll(tri.select(col("x").as("a"), col("z").as("b")))
+            .unionAll(tri.select(col("y").as("a"), col("z").as("b")))
+            .groupBy("a", "b").agg(count(lit(1)).as("loss"))
+          split(survivors.join(losses, Seq("a", "b"), "left")
+            .select(col("a"), col("b"),
+              (col("support") - coalesce(col("loss"), lit(0L))).as("support"))
+            .transform(ckpt), Nil)
+        }
+    } { r => r.counts.head == 0 || r.round + 1 >= maxRounds }
+    result(peeled.keep(_._3))
   }
 
   /** Full re-enumeration peel: recomputes every edge's support from
     * scratch each round. Same results as [[run]]; per-round cost is the
     * whole graph's triangle enumeration — the comparison arm for the
-    * ScaleBench deep-fixpoint row.
+    * ScaleBench deep-fixpoint row. The state is the surviving edges and
+    * their support table; the driver counts the survivors and the edges a
+    * round removed, and the peel is stable when it removed none.
     */
   def runReenumerate(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    var cur = canonical(edges).transform(ckpt)
-    var supported: DataFrame = null
-    var round = 0
-    var stable = false
-    var curCount = cur.count()
-    while (round < maxRounds && !stable) {
-      if (supported != null) checkpointing.release(supported)
-      supported = triangleSupport(cur)
-      val nxt = supported.filter(col("support") >= k - 2)
-        .select("a", "b").transform(ckpt)
-      val nxtCount = nxt.count()
-      stable = nxtCount == curCount
-      checkpointing.release(cur)
-      cur = nxt
-      curCount = nxtCount
-      round += 1
-    }
-    val out = supported.filter(col("support") >= k - 2)
-      .select(col("a").as(GraphFrame.SRC), col("b").as(GraphFrame.DST), col("support"))
-      .transform(ckpt)
-    checkpointing.release(cur)
-    checkpointing.release(supported)
-    out
+    // The state is (current edges, their support): round 0 has no support
+    // yet, and the first round enumerates the canonical edges.
+    val cur0 = canonical(edges).transform(ckpt)
+    val peeled = checkpointing.loop(Step((cur0, cur0), Nil), maxRounds, "ktruss") {
+      case ((cur, _), _) =>
+        val (supported, oriented) = triangleSupport(cur)
+        val next = supported.filter(col("support") >= k - 2).select("a", "b").transform(ckpt)
+        Step((next, supported), Seq(next, supported.filter(col("support") < k - 2)),
+          scratch = Seq(oriented))
+    } { r => r.round >= maxRounds || r.counts.lift(1).contains(0L) }
+    result(peeled.keep(_._2).filter(col("support") >= k - 2))
   }
 }

@@ -2,6 +2,8 @@ package graft.algorithms
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.checkpointing
+import org.apache.spark.sql.graft.checkpointing.Step
 
 import graft.graph.GraphFrame
 
@@ -58,36 +60,27 @@ class KatzCentrality(graph: GraphFrame) {
     val ID = GraphFrame.ID
     val edges = graph.edges.select(GraphFrame.SRC, GraphFrame.DST)
     // LAZY per-round lineage truncation: each round references its input
-    // state twice (message join + vertex carry), so an un-truncated
-    // chain doubles the plan per round — the Hits/HyperBall disease, at
-    // iterations(3) 8 copies of the vertex-distinct init in one plan
-    // (r19 optimization round). Both references now share one RDD per
-    // round. Each round ends in ONE counting job that runs its static
-    // plan; after it the superseded state is released, so at most two
-    // V-sized block sets are live (see Hits for why the chain must not
-    // run unmaterialized across rounds).
-    def ckpt(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.checkpointing
-        .localCheckpointNoStats(df, eager = false)
-    var state = ckpt(graph.vertices.select(col(ID), lit(1000000L).as("katz")))
-    var i = 0
-    while (i < iters) {
+    // state twice (message join + vertex carry), so an un-truncated chain
+    // doubles the plan per round — the Hits/HyperBall disease, at
+    // iterations(3) 8 copies of the vertex-distinct init in one plan (r19
+    // optimization round). Both references now share one RDD per round.
+    // Rounds run on the loop driver (`checkpointing.loop`, which states the
+    // round rule).
+    def ckpt(df: DataFrame): DataFrame = checkpointing.localCheckpointNoStats(df, eager = false)
+    val init = ckpt(graph.vertices.select(col(ID), lit(1000000L).as("katz")))
+    checkpointing.loop(Step(init, Nil), iters, "katz") { (state, _) =>
       val msgs = edges.join(
           state.select(col(ID).as("__kz_src"), col("katz").as("__kz_v")),
           col(GraphFrame.SRC) === col("__kz_src"))
         .groupBy(col(GraphFrame.DST).as("__kz_id"))
         .agg(try_sum(col("__kz_v")).as("__kz_sum"),
           count(lit(1)).as("__kz_cnt"))
-      val previous = state
-      state = ckpt(state.select(col(ID))
+      val next = ckpt(state.select(col(ID))
         .join(msgs, col(ID) === col("__kz_id"), "left")
         .select(col(ID), guarded("__kz_sum", "__kz_cnt").as("__kz_g"))
         .select(col(ID),
           (lit(1000000L) + expr(s"__kz_g div $aDen")).as("katz")))
-      org.apache.spark.sql.graft.checkpointing.roundCounts(state)
-      org.apache.spark.sql.graft.checkpointing.release(previous)
-      i += 1
-    }
-    state
+      Step(next, Seq(next))
+    }(_.round == iters).state
   }
 }

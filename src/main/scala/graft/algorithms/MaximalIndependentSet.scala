@@ -2,10 +2,15 @@ package graft.algorithms
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.checkpointing
+import org.apache.spark.sql.graft.checkpointing.{RoundStat, Step}
 
 import graft.graph.GraphFrame
 
-case class MISResult(vertices: DataFrame, iterations: Int)
+/** `rounds`: one [[RoundStat]] per distributed round, its counts the
+  * remaining edges, the remaining vertices and the round's new members.
+  */
+case class MISResult(vertices: DataFrame, iterations: Int, rounds: Seq[RoundStat])
 
 /** Maximal independent set via Ghaffari's probability-based nomination
   * (Ghaffari 2016), ported from the reference's bespoke loop
@@ -27,14 +32,8 @@ case class MISResult(vertices: DataFrame, iterations: Int)
   *     cluster layouts, and safe under task retry/recompute — which is what
   *     lets every per-round frame be LAZILY checkpointed (no eager "freeze
   *     the randomness" materializations).
-  *   - One Spark job per round: every per-round checkpoint is lazy, built
-  *     from a static plan that schedules nothing, and the three
-  *     loop-carried frames plus the member delta are materialized by a
-  *     single combined count (`checkpointing.roundCounts`, the same
-  *     discipline as [[ConnectedComponents]]) whose one non-adaptive job
-  *     runs every shuffle of the round as a stage — not ~9 eager
-  *     checkpoints+counts, each an adaptive plan running its shuffle
-  *     stages as jobs of their own.
+  *   - One Spark job per round on the loop driver (`checkpointing.loop`,
+  *     which states the round rule), not ~9 eager checkpoints and counts.
   */
 class MaximalIndependentSet(graph: GraphFrame) {
   private var seed = 42L
@@ -197,14 +196,19 @@ class MaximalIndependentSet(graph: GraphFrame) {
     (out.toArray, iter)
   }
 
+  /** A `[src, dst]` frame collected as its two id columns. */
+  private def collectEdges(edges: DataFrame): (Array[Long], Array[Long]) = {
+    val rows = edges.collect()
+    (rows.map(_.getLong(0)), rows.map(_.getLong(1)))
+  }
+
   def run(): MISResult = {
-    val release = org.apache.spark.sql.graft.checkpointing.release _
+    val release = checkpointing.release _
     val spark = graph.vertices.sparkSession
     import spark.implicits._
-    val numParts = org.apache.spark.sql.graft.checkpointing.shufflePartitions(spark)
+    val numParts = checkpointing.shufflePartitions(spark)
     def ckpt(df: DataFrame, keys: Seq[String]): DataFrame =
-      org.apache.spark.sql.graft.checkpointing
-        .localCheckpointHashPartitioned(df, keys, numParts, eager = false)
+      checkpointing.localCheckpointHashPartitioned(df, keys, numParts, eager = false)
 
     // Dedup matters here: duplicate edges would inflate effective degrees.
     // The dedup rides the dst-repartition (clustering-subset rule: equal
@@ -214,7 +218,7 @@ class MaximalIndependentSet(graph: GraphFrame) {
     // contract as WCC/k-core, mirroring the reference's hash-partitioned
     // pre-sorted spill files, hash_partitioned.rs:77-361). Lazy: the
     // threshold count (or the first round's combined count) materializes it.
-    var edges = ckpt(
+    val edges0 = ckpt(
       GraphFrame.symmetrizeEdges(graph.edges.select(SRC, DST), doDistinct = false)
         .repartition(numParts, col(DST))
         .dropDuplicates(SRC, DST),
@@ -223,25 +227,19 @@ class MaximalIndependentSet(graph: GraphFrame) {
     // Subcritical graphs: replay the EXACT rounds on the driver — same
     // draws, same branch decisions, same set as the distributed loop (see
     // simulateOnDriver), so the hybrid cutover never changes the result.
-    if (smallThreshold > 0 && edges.count() <= 2 * smallThreshold &&
+    if (smallThreshold > 0 && edges0.count() <= 2 * smallThreshold &&
         graph.vertices.count() <= smallThreshold) {
-      val rows = edges.collect()
-      val srcs = new Array[Long](rows.length)
-      val dsts = new Array[Long](rows.length)
-      var i = 0
-      while (i < rows.length) {
-        srcs(i) = rows(i).getLong(0); dsts(i) = rows(i).getLong(1); i += 1
-      }
+      val (srcs, dsts) = collectEdges(edges0)
       val vids = graph.vertices.select(col(ID)).collect().map(_.getLong(0))
       val (members, rounds) = simulateOnDriver(vids, srcs, dsts)
-      release(edges)
-      return MISResult(members.sorted.toSeq.toDF(ID), iterations = rounds)
+      release(edges0)
+      return MISResult(members.sorted.toSeq.toDF(ID), iterations = rounds, rounds = Nil)
     }
 
     // Active vertices with their selection probability (Ghaffari seeds 1/2),
     // hash(id)-declared: state⋈msgs and the removal anti-join stay
     // exchange-free on the state side every round.
-    var verticesLeft = ckpt(
+    val vertices0 = ckpt(
       graph.vertices.select(col(ID), lit(0.5).as("p"))
         .repartition(numParts, col(ID)),
       Seq(ID))
@@ -253,161 +251,142 @@ class MaximalIndependentSet(graph: GraphFrame) {
     // already carry.
     var memberParts = Vector.empty[DataFrame]
 
-    var iteration = 0
-    var converged = false
+    // The mid-loop hybrid cutover (the WCC discipline): the contraction
+    // shrinks the active graph geometrically, so tail rounds pay full
+    // per-round scheduling for little data. Once the remainder fits, the
+    // loop stops and the driver replay finishes it (below).
+    def cutover(eLeft: Long, vLeft: Long): Boolean =
+      smallThreshold > 0 && eLeft <= 2 * smallThreshold && vLeft <= smallThreshold
+    // Rounds on the loop driver (checkpointing.loop); the state is
+    // (edges, verticesLeft).
+    val looped = checkpointing.loop(Step((edges0, vertices0), Nil), Int.MaxValue, "mis") {
+      case ((edges, verticesLeft), previous) =>
+        val iteration = previous.round
+        // ---- nominate with p_t ----
+        // Draw u(id) = portableHash60("id:seed:iter") / 2^60 ∈ [0,1):
+        // deterministic per (id, iteration) — recomputes can never redraw —
+        // AND engine-portable (md5-based, see PortableHashes), so the whole
+        // loop is replicable in plain SQL: the g10/g10b driver gates unroll
+        // these exact rounds in DuckDB. p stays a power of two and degree
+        // sums stay dyadic-exact, so every comparison is bit-identical
+        // across engines. Nomination depends only on (draw, p) — NOT on the
+        // effective degree — which is what lets one edge pass aggregate both
+        // messages below.
+        val draw = conv(substring(md5(concat_ws(":", col(ID), lit(seed), lit(iteration))), 1, 15), 16, 10)
+          .cast("long").cast("double") / lit(1.152921504606846976e18)
+        val state = verticesLeft.withColumn("nom", draw <= col("p"))
 
-    while (!converged) {
-      // ---- nominate with p_t ----
-      // Draw u(id) = portableHash60("id:seed:iter") / 2^60 ∈ [0,1):
-      // deterministic per (id, iteration) — recomputes can never redraw —
-      // AND engine-portable (md5-based, see PortableHashes), so the whole
-      // loop is replicable in plain SQL: the g10/g10b driver gates unroll
-      // these exact rounds in DuckDB. p stays a power of two and degree
-      // sums stay dyadic-exact, so every comparison is bit-identical
-      // across engines. Nomination depends only on (draw, p) — NOT on the
-      // effective degree — which is what lets one edge pass aggregate both
-      // messages below.
-      val draw = conv(substring(md5(concat_ws(":", col(ID), lit(seed), lit(iteration))), 1, 15), 16, 10)
-        .cast("long").cast("double") / lit(1.152921504606846976e18)
-      val state = verticesLeft.withColumn("nom", draw <= col("p"))
+        // ---- ONE edge traversal for both per-neighbour messages ----
+        // d(v) = Σ p(u) and "any neighbour nominated" share the same
+        // edges⋈state join and the same groupBy(src) shuffle; aggregating
+        // them together halves the per-round edge traffic (all per-round
+        // frames are LAZY checkpoints, materialized in the round's single
+        // combined count below). The join itself is exchange-AND-sort-free:
+        // edges declare hash(dst), state declares hash(id). The explicit
+        // src-repartition before the aggregate pins the shuffle at numParts
+        // (AQE won't coalesce a user repartition), making the declared
+        // layout on the checkpoint true by construction.
+        val msgs = ckpt(
+          edges
+            .join(state.select(col(ID).as("__mis_nbr"), col("p").as("__mis_nbr_p"),
+                col("nom").as("__mis_nbr_nom")),
+              col(DST) === col("__mis_nbr"), "inner")
+            .select(col(SRC), col("__mis_nbr_p"), col("__mis_nbr_nom"))
+            .repartition(numParts, col(SRC))
+            .groupBy(col(SRC)).agg(
+              sum(col("__mis_nbr_p")).as("__mis_deg"),
+              bool_or(col("__mis_nbr_nom")).as("__mis_has_nbr_nom")),
+          Seq(SRC))
 
-      // ---- ONE edge traversal for both per-neighbour messages ----
-      // d(v) = Σ p(u) and "any neighbour nominated" share the same
-      // edges⋈state join and the same groupBy(src) shuffle; aggregating
-      // them together halves the per-round edge traffic (all per-round
-      // frames are LAZY checkpoints, materialized in the round's single
-      // combined count below). The join itself is exchange-AND-sort-free:
-      // edges declare hash(dst), state declares hash(id). The explicit
-      // src-repartition before the aggregate pins the shuffle at numParts
-      // (AQE won't coalesce a user repartition), making the declared
-      // layout on the checkpoint true by construction.
-      val msgs = ckpt(
-        edges
-          .join(state.select(col(ID).as("__mis_nbr"), col("p").as("__mis_nbr_p"),
-              col("nom").as("__mis_nbr_nom")),
-            col(DST) === col("__mis_nbr"), "inner")
-          .select(col(SRC), col("__mis_nbr_p"), col("__mis_nbr_nom"))
-          .repartition(numParts, col(SRC))
-          .groupBy(col(SRC)).agg(
-            sum(col("__mis_nbr_p")).as("__mis_deg"),
-            bool_or(col("__mis_nbr_nom")).as("__mis_has_nbr_nom")),
-        Seq(SRC))
+        // ---- isolated actives: no active neighbours, absent from msgs ----
+        // (id and src hash identically: no exchange on either side)
+        val isolated = state
+          .join(msgs, col(ID) === col(SRC), "left_anti")
+          .select(col(ID))
 
-      // ---- isolated actives: no active neighbours, absent from msgs ----
-      // (id and src hash identically: no exchange on either side)
-      val isolated = state
-        .join(msgs, col(ID) === col(SRC), "left_anti")
-        .select(col(ID))
+        // ---- advance p -> p_{t+1}; select joiners ----
+        val probs = ckpt(
+          state
+            .join(msgs, col(ID) === col(SRC), "inner")
+            .select(col(ID),
+              when(col("__mis_deg") >= 2.0, col("p") / 2.0)
+                .when(col("p") * 2.0 <= 0.5, col("p") * 2.0)
+                .otherwise(0.5).as("p"),
+              col("nom"), col("__mis_has_nbr_nom")),
+          Seq(ID))
 
-      // ---- advance p -> p_{t+1}; select joiners ----
-      val probs = ckpt(
-        state
-          .join(msgs, col(ID) === col(SRC), "inner")
-          .select(col(ID),
-            when(col("__mis_deg") >= 2.0, col("p") / 2.0)
-              .when(col("p") * 2.0 <= 0.5, col("p") * 2.0)
-              .otherwise(0.5).as("p"),
-            col("nom"), col("__mis_has_nbr_nom")),
-        Seq(ID))
+        // ---- nominated with no nominated neighbour => joins the MIS ----
+        val joinedMis = ckpt(
+          probs
+            .filter(col("nom") && !col("__mis_has_nbr_nom"))
+            .select(col(ID)),
+          Seq(ID))
 
-      // ---- nominated with no nominated neighbour => joins the MIS ----
-      val joinedMis = ckpt(
-        probs
-          .filter(col("nom") && !col("__mis_has_nbr_nom"))
-          .select(col(ID)),
-        Seq(ID))
+        // The symmetrized edge set makes one direction sufficient: every
+        // neighbour u of a joined v is the source of edge (u, v).
+        val neighborsOfMis = edges
+          .join(joinedMis.select(col(ID).as("__mis_j")), col(DST) === col("__mis_j"), "inner")
+          .select(col(SRC).as(ID))
 
-      // The symmetrized edge set makes one direction sufficient: every
-      // neighbour u of a joined v is the source of edge (u, v).
-      val neighborsOfMis = edges
-        .join(joinedMis.select(col(ID).as("__mis_j")), col(DST) === col("__mis_j"), "inner")
-        .select(col(SRC).as(ID))
+        // No distinct on either union: `removed` only ever feeds anti-joins
+        // (existence semantics — duplicate keys change nothing), and
+        // `isolated` ∪ `joinedMis` is duplicate-free by construction (each
+        // side dedup'd at its source; isolated vertices have no edges while
+        // joined ones do, so the sides are disjoint).
+        // NoStats: these truncate per ROUND — a plain localCheckpoint's
+        // inherited size estimate compounds geometrically across rounds
+        // (checkpointing.localCheckpointNoStats).
+        val removed =
+          checkpointing.localCheckpointNoStats(neighborsOfMis.union(joinedMis), eager = false)
+        val newMembers =
+          checkpointing.localCheckpointNoStats(isolated.union(joinedMis), eager = false)
+        memberParts :+= newMembers
 
-      // No distinct on either union: `removed` only ever feeds anti-joins
-      // (existence semantics — duplicate keys change nothing), and
-      // `isolated` ∪ `joinedMis` is duplicate-free by construction (each
-      // side dedup'd at its source; isolated vertices have no edges while
-      // joined ones do, so the sides are disjoint).
-      // NoStats: these truncate per ROUND — a plain localCheckpoint's
-      // inherited size estimate compounds geometrically across rounds
-      // (checkpointing.localCheckpointNoStats).
-      val removed = org.apache.spark.sql.graft.checkpointing
-        .localCheckpointNoStats(neighborsOfMis.union(joinedMis), eager = false)
-      val newMembers = org.apache.spark.sql.graft.checkpointing
-        .localCheckpointNoStats(isolated.union(joinedMis), eager = false)
-      memberParts :+= newMembers
+        val removedKeys = removed.select(col(ID).as("__mis_rem_v"))
+        val nextVertices = ckpt(
+          probs
+            .join(removedKeys, col(ID) === col("__mis_rem_v"), "left_anti")
+            .select(col(ID), col("p")),
+          Seq(ID))
 
-      val removedKeys = removed.select(col(ID).as("__mis_rem_v"))
-      val oldVerticesLeft = verticesLeft
-      verticesLeft = ckpt(
-        probs
-          .join(removedKeys, col(ID) === col("__mis_rem_v"), "left_anti")
-          .select(col(ID), col("p")),
-        Seq(ID))
+        // Contract: dst-anti first (exchange-free on the hash(dst) edges),
+        // then src-anti (one edge shuffle, pinned at numParts), then restore
+        // the dst layout FOR FREE by swapping the columns — the edge set is
+        // symmetric and removal is endpoint-symmetric, so the mirror IS the
+        // contracted set, and the mirror of a hash(src)-partitioned frame is
+        // hash(dst)-partitioned by construction. No repartition.
+        val nextEdges = ckpt(
+          edges
+            .join(removedKeys, col(DST) === col("__mis_rem_v"), "left_anti")
+            .repartition(numParts, col(SRC))
+            .join(removedKeys, col(SRC) === col("__mis_rem_v"), "left_anti")
+            .select(col(DST).as(SRC), col(SRC).as(DST)),
+          Seq(DST))
 
-      // Contract: dst-anti first (exchange-free on the hash(dst) edges),
-      // then src-anti (one edge shuffle, pinned at numParts), then restore
-      // the dst layout FOR FREE by swapping the columns — the edge set is
-      // symmetric and removal is endpoint-symmetric, so the mirror IS the
-      // contracted set, and the mirror of a hash(src)-partitioned frame is
-      // hash(dst)-partitioned by construction. No repartition.
-      val oldEdges = edges
-      edges = ckpt(
-        edges
-          .join(removedKeys, col(DST) === col("__mis_rem_v"), "left_anti")
-          .repartition(numParts, col(SRC))
-          .join(removedKeys, col(SRC) === col("__mis_rem_v"), "left_anti")
-          .select(col(DST).as(SRC), col(SRC).as(DST)),
-        Seq(DST))
-
-      // ---- the round's ONE materializing action: the three loop-carried
-      // checkpoints AND the round's member delta (and, transitively, every
-      // intermediate above) execute as stages of this single non-adaptive
-      // job; no checkpoint above ran anything when it was built.
-      val Seq(eLeft, vLeft, _) = org.apache.spark.sql.graft.checkpointing
-        .roundCounts(edges, verticesLeft, newMembers)
-
-      // Everything superseded or intermediate is materialized by now and
-      // nothing downstream references it: free the blocks for real.
-      Seq(oldVerticesLeft, oldEdges, msgs, probs, joinedMis, removed)
-        .foreach(release)
-
-      if (eLeft == 0) {
-        if (vLeft > 0) {
-          // Survivors are pairwise non-adjacent: sweep them all in.
-          memberParts :+= verticesLeft.select(col(ID))
-        }
-        converged = true
-      }
-      iteration += 1
-
-      // Mid-loop hybrid cutover (the WCC discipline): the contraction
-      // shrinks the active graph geometrically, so tail rounds pay full
-      // per-round scheduling for little data. Once the remainder fits,
-      // finish with the driver replay — CONTINUING the exact simulation
-      // from the current (p, iteration) state, so the result is still
+        // The round's one job counts the loop-carried frames and the round's
+        // member delta.
+        Step((nextEdges, nextVertices), Seq(nextEdges, nextVertices, newMembers),
+          scratch = Seq(msgs, probs, joinedMis, removed))
+    } { r => r.counts match {
+      case Seq(eLeft, vLeft, _) => eLeft == 0 || cutover(eLeft, vLeft)
+      case _ => false
+    } }
+    val (edges, verticesLeft) = looped.state
+    val Seq(eLeft, vLeft, _) = looped.last.counts
+    var iteration = looped.iterations
+    if (eLeft == 0) {
+      // Survivors are pairwise non-adjacent: sweep them all in.
+      if (vLeft > 0) memberParts :+= verticesLeft.select(col(ID))
+    } else {
+      // Finish with the driver replay, CONTINUING the exact simulation from
+      // the current (p, iteration) state, so the result is still
       // bit-identical to running the rounds distributed.
-      if (!converged && smallThreshold > 0 &&
-          eLeft <= 2 * smallThreshold && vLeft <= smallThreshold) {
-        val vRows = verticesLeft.collect()
-        val vids = new Array[Long](vRows.length)
-        val ps = new Array[Double](vRows.length)
-        var i = 0
-        while (i < vRows.length) {
-          vids(i) = vRows(i).getLong(0); ps(i) = vRows(i).getDouble(1); i += 1
-        }
-        val eRows = edges.collect()
-        val srcs = new Array[Long](eRows.length)
-        val dsts = new Array[Long](eRows.length)
-        i = 0
-        while (i < eRows.length) {
-          srcs(i) = eRows(i).getLong(0); dsts(i) = eRows(i).getLong(1); i += 1
-        }
-        val (members, rounds) = simulateOnDriver(vids, srcs, dsts, ps, iteration)
-        memberParts :+= members.sorted.toSeq.toDF(ID)
-        iteration = rounds
-        converged = true
-      }
+      val vRows = verticesLeft.collect()
+      val (srcs, dsts) = collectEdges(edges)
+      val (members, rounds) = simulateOnDriver(vRows.map(_.getLong(0)), srcs, dsts,
+        vRows.map(_.getDouble(1)), iteration)
+      memberParts :+= members.sorted.toSeq.toDF(ID)
+      iteration = rounds
     }
 
     // One action assembles the result; then every remaining checkpoint
@@ -417,6 +396,6 @@ class MaximalIndependentSet(graph: GraphFrame) {
     memberParts.foreach(release)
     release(verticesLeft)
     release(edges)
-    MISResult(result, iteration)
+    MISResult(result, iteration, looped.rounds)
   }
 }

@@ -2,6 +2,7 @@ package graft.algorithms
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.checkpointing.RoundStat
 
 import graft.graph.GraphFrame
 import graft.pregel.{MessageDirection, Pregel}
@@ -15,7 +16,7 @@ import graft.pregel.{MessageDirection, Pregel}
   * cold-run-once, warm-resume-forever.
   */
 case class PageRankResult(ranks: DataFrame, iterations: Int,
-    rawMass: DataFrame)
+    rawMass: DataFrame, rounds: Seq[RoundStat])
 
 /** Delta-incremental (GraphX-style) PageRank as a Pregel client
   * (`/root/reference/src/algorithm/centrality/pagerank.rs:80-210`).
@@ -216,6 +217,6 @@ class PageRank(graph: GraphFrame) {
     val total = raw.agg(sum(col("pagerank")).as("pagerank_sum"))
     val ranks = raw.crossJoin(total)
       .select(col(ID), (col("pagerank") / col("pagerank_sum")).as("pagerank"))
-    PageRankResult(ranks, result.iterations, raw)
+    PageRankResult(ranks, result.iterations, raw, result.rounds)
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.graft.checkpointing
+import org.apache.spark.sql.graft.checkpointing.Step
 
 /** Distributed strongly connected components — the Orzan/FW-BW COLORING
   * scheme, the standard data-parallel SCC (Tarjan's stack is inherently
@@ -26,8 +27,8 @@ import org.apache.spark.sql.graft.checkpointing
   * terminates; color classes split the remaining graph so later rounds
   * shrink fast (O(log) expected rounds on random structure). All loop
   * frames cut lineage with stats-free local checkpoints; both inner
-  * fixpoints are count-guarded with a loud cap — a truncated propagation
-  * would silently merge SCCs, so running past the cap throws instead.
+  * fixpoints are capped loudly — a truncated propagation would silently
+  * merge SCCs, so running past the cap throws instead.
   *
   * Output: `[id, scc_id]` with `scc_id = max vertex id of the SCC` (the
   * root's id — a canonical, engine-replayable representative).
@@ -109,101 +110,88 @@ object StronglyConnectedComponents {
     */
   private[algorithms] def runDistributed(e0: DataFrame,
       maxFixpointIter: Int = 200): DataFrame = {
-    val spark = e0.sparkSession
-    // All loop checkpoints are LAZY: every one is materialized by the
-    // count that follows it (loop guards / changed-counts), so eager
-    // checkpoints only added one extra scheduled job per frame per
-    // round (r19 optimization round).
-    var remEdges = checkpointing.localCheckpointNoStats(e0, eager = false)
-    // Endpoints derive from the CHECKPOINTED edges with one generate —
-    // the union form re-ran e0's (arbitrarily expensive) lineage once
-    // per endpoint side.
-    var remaining = checkpointing.localCheckpointNoStats(
-      remEdges.select(explode(array(col("src"), col("dst"))).as("id"))
-        .distinct(), eager = false)
-    var assigned: DataFrame = null
+    // Every loop frame is a lazy stats-free checkpoint; all three loops run
+    // on the loop driver (`checkpointing.loop`, which states the round rule).
+    def ckpt(df: DataFrame): DataFrame = checkpointing.localCheckpointNoStats(df, eager = false)
+    val edges0 = ckpt(e0)
+    // Endpoints derive from the CHECKPOINTED edges with one generate — the
+    // union form re-ran e0's (arbitrarily expensive) lineage once per
+    // endpoint side.
+    val remaining0 = ckpt(
+      edges0.select(explode(array(col("src"), col("dst"))).as("id")).distinct())
+    val assigned0 = ckpt(remaining0.select(col("id"), col("id").as("scc_id")).limit(0))
 
-    var guard = 0
-    while (remaining.count() > 0) {
-      guard += 1
-      require(guard <= 10000, "scc: outer peel failed to converge")
-
-      // 1. Forward max-color fixpoint.
-      var colors = checkpointing.localCheckpointNoStats(
-        remaining.select(col("id"), col("id").as("color")), eager = false)
-      var changed = 1L
-      var it = 0
-      while (changed > 0) {
-        it += 1
-        require(it <= maxFixpointIter,
-          s"scc: forward fixpoint exceeded $maxFixpointIter rounds")
-        val pushed = remEdges.join(colors, remEdges("src") === colors("id"))
-          .groupBy(col("dst").as("id")).agg(max("color").as("in_color"))
-        // The changed flag is computed IN the round's projection and read
-        // back off the checkpoint: the old shape re-joined next against
-        // colors to diff them — a full vertex-set join per round that the
-        // one-column flag replaces with a count over already-materialized
-        // rows (colors only ever grow, so "changed" = in_color won).
-        // LAZY: the changed-count below materializes the checkpoint in
-        // the SAME job — an eager checkpoint scheduled a separate job
-        // per round first (2 jobs/round -> 1, r19 optimization round).
-        val next = checkpointing.localCheckpointNoStats(
-          colors.join(pushed, Seq("id"), "left")
-            .select(col("id"),
-              greatest(col("color"), coalesce(col("in_color"), lit(Long.MinValue)))
-                .as("color"),
-              (coalesce(col("in_color"), lit(Long.MinValue)) > col("color"))
-                .as("chg")),
-          eager = false)
-        changed = next.filter(col("chg")).count()
-        colors = next.select("id", "color")
-      }
-
-      // 2. Backward walk from roots inside each color class.
-      var reached = checkpointing.localCheckpointNoStats(
-        colors.filter(col("id") === col("color")).select("id", "color"),
-        eager = false)
-      // Reverse edges restricted to same-color endpoints — CHECKPOINTED
-      // once per outer round: the backward fixpoint scans it every
-      // iteration, and re-deriving the double color join per step would
-      // multiply the round's most expensive plan by the walk depth.
-      val sameColor = checkpointing.localCheckpointNoStats(remEdges
-        .join(colors.withColumnRenamed("id", "src"), Seq("src"))
-        .withColumnRenamed("color", "src_color")
-        .join(colors.withColumnRenamed("id", "dst")
-          .withColumnRenamed("color", "dst_color"), Seq("dst"))
-        .filter(col("src_color") === col("dst_color"))
-        .select(col("src"), col("dst"), col("src_color").as("ecolor")),
-        eager = false)
-      changed = 1L
-      it = 0
-      while (changed > 0) {
-        it += 1
-        require(it <= maxFixpointIter,
-          s"scc: backward fixpoint exceeded $maxFixpointIter rounds")
-        val step = sameColor
-          .join(reached, sameColor("dst") === reached("id")
-            && sameColor("ecolor") === reached("color"))
-          .select(col("src").as("id"), col("ecolor").as("color")).distinct()
-        val next = checkpointing.localCheckpointNoStats(
-          reached.unionAll(step).distinct(), eager = false)
-        changed = next.count() - reached.count()
-        reached = next
-      }
-
-      // 3. Peel: reached(id, color) is the union of the roots' SCCs.
-      val sccs = reached.select(col("id"), col("color").as("scc_id"))
-      assigned = if (assigned == null) sccs
-        else checkpointing.localCheckpointNoStats(assigned.unionAll(sccs),
-          eager = false)
-      remaining = checkpointing.localCheckpointNoStats(
-        remaining.join(sccs, Seq("id"), "left_anti"), eager = false)
-      remEdges = checkpointing.localCheckpointNoStats(
-        remEdges
-          .join(sccs.withColumnRenamed("id", "src"), Seq("src"), "left_anti")
-          .join(sccs.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti")
-          .select("src", "dst"), eager = false)
-    }
-    assigned
+    // Round 0 counts the vertices; the state is (remaining edges,
+    // remaining vertices, assigned `[id, scc_id]`).
+    val init = Step((edges0, remaining0, assigned0), Seq(remaining0))
+    checkpointing.loop(init, 10000, "scc: outer peel") {
+      case ((remEdges, remaining, assigned), _) =>
+        val colors = forward(remEdges, remaining, maxFixpointIter)
+        // Reverse edges restricted to same-color endpoints — checkpointed
+        // once per outer round: the backward fixpoint scans it every round,
+        // and re-deriving the double color join per step would multiply the
+        // round's most expensive plan by the walk depth.
+        val sameColor = ckpt(remEdges
+          .join(colors.select(col("id").as("src"), col("color").as("src_color")), Seq("src"))
+          .join(colors.select(col("id").as("dst"), col("color").as("dst_color")), Seq("dst"))
+          .filter(col("src_color") === col("dst_color"))
+          .select(col("src"), col("dst"), col("src_color").as("ecolor")))
+        val reached = backward(sameColor,
+          ckpt(colors.filter(col("id") === col("color")).select("id", "color")),
+          maxFixpointIter)
+        // Peel: reached(id, color) is the union of the roots' SCCs.
+        val sccs = reached.select(col("id"), col("color").as("scc_id"))
+        val nextRemaining = ckpt(remaining.join(sccs, Seq("id"), "left_anti"))
+        val nextEdges = ckpt(remEdges
+          .join(sccs.select(col("id").as("src")), Seq("src"), "left_anti")
+          .join(sccs.select(col("id").as("dst")), Seq("dst"), "left_anti")
+          .select("src", "dst"))
+        val nextAssigned = ckpt(assigned.unionAll(sccs))
+        Step((nextEdges, nextRemaining, nextAssigned),
+          Seq(nextRemaining, nextEdges, nextAssigned),
+          scratch = Seq(colors, sameColor, reached))
+    }(_.counts.head == 0).keep(_._3)
   }
+
+  /** FORWARD max-color fixpoint: `[id, color, chg]`, `color` the largest
+    * id that reaches `id`. The changed flag is computed IN the round's
+    * projection and counted off the checkpoint: colors only ever grow, so
+    * "changed" is "in_color won", and no join against the previous round
+    * is needed to diff them.
+    */
+  private def forward(remEdges: DataFrame, remaining: DataFrame, maxRounds: Int): DataFrame = {
+    val init = checkpointing.localCheckpointNoStats(
+      remaining.select(col("id"), col("id").as("color")), eager = false)
+    checkpointing.loop(Step(init, Nil), maxRounds, "scc: forward fixpoint") { (colors, _) =>
+      val pushed = remEdges.join(colors, remEdges("src") === colors("id"))
+        .groupBy(col("dst").as("id")).agg(max("color").as("in_color"))
+      val inColor = coalesce(col("in_color"), lit(Long.MinValue))
+      val next = checkpointing.localCheckpointNoStats(
+        colors.join(pushed, Seq("id"), "left")
+          .select(col("id"), greatest(col("color"), inColor).as("color"),
+            (inColor > col("color")).as("chg")),
+        eager = false)
+      Step(next, Seq(next.filter(col("chg"))))
+    }(_.counts == Seq(0L)).state
+  }
+
+  /** BACKWARD walk from the color roots over same-color reverse edges, to
+    * a fixpoint: `[id, color, fresh]`. The root's color class ∩ its
+    * backward-reachable set is exactly the root's SCC. A round keeps the
+    * rows it reached before and flags the ones it adds, so its one count
+    * is the rows it added.
+    */
+  private def backward(sameColor: DataFrame, roots: DataFrame, maxRounds: Int): DataFrame =
+    checkpointing.loop(Step(roots, Nil), maxRounds, "scc: backward fixpoint") { (reached, _) =>
+      val known = reached.select("id", "color")
+      val added = sameColor
+        .join(known, sameColor("dst") === known("id") && sameColor("ecolor") === known("color"))
+        .select(col("src").as("id"), col("ecolor").as("color")).distinct()
+        .join(known, Seq("id", "color"), "left_anti")
+      val next = checkpointing.localCheckpointNoStats(
+        known.withColumn("fresh", lit(false))
+          .unionAll(added.withColumn("fresh", lit(true))),
+        eager = false)
+      Step(next, Seq(next.filter(col("fresh"))))
+    }(_.counts == Seq(0L)).state
 }

@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.checkpointing.Step
 
 /** GraphFrames-style breadth-first search with MATERIALIZED paths — the
   * "how are these two entities connected" query ([[Motifs]] finds fixed
@@ -17,8 +18,7 @@ import org.apache.spark.sql.functions._
   * shortcut to a shorter walk reaching a target before L), so plain
   * iterative edge-join expansion with NO visited-set bookkeeping is
   * exact — which is precisely what keeps each level ONE equi-join of the
-  * frontier against the edge table (Catalyst broadcast/shuffle hash join,
-  * frontier side usually the small one). Level 0 (a vertex matching both
+  * frontier against the edge table. Level 0 (a vertex matching both
   * predicates) returns `[from, to]` with identical structs, as
   * GraphFrames does.
   *
@@ -28,8 +28,9 @@ import org.apache.spark.sql.functions._
   * expansion. Frontier width can grow multiplicatively on dense graphs
   * (inherent to all-shortest-PATHS output; use
   * [[graft.algorithms.ShortestPaths]] for distances-only at
-  * state-per-vertex cost). Each level's frontier is lineage-truncated so
-  * the join tree never deepens past one level.
+  * state-per-vertex cost). Levels run on the loop driver
+  * (`checkpointing.loop`, which states the round rule), so the join tree
+  * never deepens past one level.
   */
 object Bfs {
   private val checkpointing = org.apache.spark.sql.graft.checkpointing
@@ -38,60 +39,57 @@ object Bfs {
       maxPathLength: Int = 10, edgeFilter: Option[Column] = None): DataFrame = {
     require(maxPathLength >= 0 && maxPathLength <= 20,
       s"maxPathLength must be in [0, 20], got $maxPathLength")
-    val spark = g.vertices.sparkSession
-    val vStruct = g.vertices.select(col(GraphFrame.ID).as("__bfs_id"),
-      struct(g.vertices.columns.map(col).toIndexedSeq: _*).as("__bfs_v"))
+    val vertexStruct = struct(g.vertices.columns.map(col).toIndexedSeq: _*)
     val fromV = g.vertices.filter(fromExpr)
-      .select(col(GraphFrame.ID).as("__bfs_id"),
-        struct(g.vertices.columns.map(col).toIndexedSeq: _*).as("from"))
+      .select(col(GraphFrame.ID).as("__bfs_id"), vertexStruct.as("from"))
     val toIds = g.vertices.filter(toExpr)
       .select(col(GraphFrame.ID).as("__bfs_to"))
-    val e = edgeFilter.map(g.edges.filter).getOrElse(g.edges)
 
     // Level 0: a from-vertex that is itself a to-vertex.
     val level0 = fromV.join(toIds, col("__bfs_id") === col("__bfs_to"))
       .select(col("from"), col("from").as("to"))
     if (level0.limit(1).count() > 0) return level0
 
-    // frontier: [from, e0, v1, ..., __bfs_last]; expand one edge hop per
-    // level, stop at the first level that reaches a to-vertex.
-    var frontier = fromV.select(col("from"), col("__bfs_id").as("__bfs_last"))
-    var level = 0
-    while (level < maxPathLength) {
-      level += 1
-      val hop = e.select(col(GraphFrame.SRC).as("__bfs_src"),
-        col(GraphFrame.DST).as("__bfs_dst"),
-        struct(e.columns.map(col).toIndexedSeq: _*).as(s"e${level - 1}"))
-      val (expanded, rows) = checkpointing.localCheckpointCounted(
-        frontier.join(hop, col("__bfs_last") === col("__bfs_src"))
+    // A vertex carries its "is a to-vertex" flag, so a level's paths that
+    // arrived are a filter of the level, not a join.
+    val vStruct = g.vertices.select(col(GraphFrame.ID).as("__bfs_id"),
+      vertexStruct.as("__bfs_v"), coalesce(toExpr, lit(false)).as("__bfs_hit"))
+    val e = edgeFilter.map(g.edges.filter).getOrElse(g.edges)
+
+    // frontier: [from, e0, v1, ..., __bfs_last, __bfs_hit]; each level
+    // expands one edge hop into an EAGER checkpoint (its exact row count
+    // lets the next level's join broadcast a small frontier; as lazy static
+    // levels the search ran 1.8x slower at `ScaleBench 262144 1048576 bfs`,
+    // SCALE_RECORD.md). The driver counts the paths and the paths that
+    // reached a to-vertex. The search stops at the first level that reaches
+    // one, or when the frontier dies.
+    val frontier0 = fromV.select(col("from"), col("__bfs_id").as("__bfs_last"))
+    val searched = checkpointing.loop(Step(frontier0, Nil), maxPathLength, "bfs") {
+      (frontier, previous) =>
+        val level = previous.round + 1
+        val hop = e.select(col(GraphFrame.SRC).as("__bfs_src"),
+          col(GraphFrame.DST).as("__bfs_dst"),
+          struct(e.columns.map(col).toIndexedSeq: _*).as(s"e${level - 1}"))
+        val (expanded, _) = checkpointing.localCheckpointCounted(frontier.drop("__bfs_hit")
+          .join(hop, col("__bfs_last") === col("__bfs_src"))
           .join(vStruct.withColumnRenamed("__bfs_v", s"v$level"),
-            col("__bfs_dst") === vStruct("__bfs_id"))
+            col("__bfs_dst") === col("__bfs_id"))
           .drop("__bfs_last", "__bfs_src", "__bfs_id")
           .withColumnRenamed("__bfs_dst", "__bfs_last"))
-      // The level before is superseded now that this one is stored (level
-      // 1 expanded the from-vertices, which are no checkpoint).
-      if (level > 1) checkpointing.release(frontier)
-      frontier = expanded
-      if (rows == 0) { // frontier died: no path at all
-        checkpointing.release(expanded)
-        return level0.limit(0)
-      }
-      // The checkpoint's count answered "frontier died?"; ONE probe
-      // answers "target reached?". On deep searches the per-level
-      // scheduling floor is the dominant cost (the g23b lesson).
-      val arrived = expanded
-        .join(toIds, col("__bfs_last") === col("__bfs_to"), "left_semi")
-      if (arrived.limit(1).count() > 0) {
-        // Rename the terminal vertex struct to `to` and order columns
-        // from, e0, v1, ..., e_{L-1}, to.
-        val mids = (1 until level).map(i => Seq(col(s"e${i - 1}"), col(s"v$i")))
-          .flatten
-        return arrived.select(
-          (col("from") +: mids :+ col(s"e${level - 1}")
-            :+ col(s"v$level").as("to")): _*)
-      }
+        Step(expanded, Seq(expanded, expanded.filter(col("__bfs_hit"))))
+    } { r => r.round >= maxPathLength || r.counts.headOption.contains(0L) ||
+      r.counts.lift(1).exists(_ > 0) }
+    val level = searched.iterations
+    if (searched.rounds.lastOption.exists(_.counts(1) > 0)) {
+      // Rename the terminal vertex struct to `to` and order columns
+      // from, e0, v1, ..., e_{L-1}, to.
+      val mids = (1 until level).flatMap(i => Seq(col(s"e${i - 1}"), col(s"v$i")))
+      searched.state.filter(col("__bfs_hit")).select(
+        (col("from") +: mids :+ col(s"e${level - 1}") :+ col(s"v$level").as("to")): _*)
+    } else {
+      // No path: the frontier died or the depth ran out.
+      checkpointing.release(searched.state)
+      level0.limit(0)
     }
-    if (level > 0) checkpointing.release(frontier)
-    level0.limit(0) // depth exhausted: empty frame with the level-0 schema
   }
 }

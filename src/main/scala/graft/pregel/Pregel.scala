@@ -2,11 +2,16 @@ package graft.pregel
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.checkpointing
+import org.apache.spark.sql.graft.checkpointing.{RoundStat, Step}
 
 import graft.graph.GraphFrame
 
-/** Result of a Pregel run: final vertex state + iterations executed. */
-case class PregelResult(vertices: DataFrame, iterations: Int)
+/** Result of a Pregel run: final vertex state, iterations executed and
+  * one [[RoundStat]] per distributed round (its count: the active vertices
+  * in voting mode, otherwise the state's rows; empty on a driver-side path).
+  */
+case class PregelResult(vertices: DataFrame, iterations: Int, rounds: Seq[RoundStat] = Nil)
 
 object MessageDirection extends Enumeration {
   val SrcToDst, DstToSrc, Bidirectional = Value
@@ -42,11 +47,8 @@ object MessageDirection extends Enumeration {
   *     co-partitioned vertex state). A declared layout is the only way to
   *     avoid those exchanges: the stats-free state leaves are never
   *     broadcast, so without it both joins re-shuffle the state.
-  *   - Every checkpoint in the loop is LAZY: built from a static plan, it
-  *     schedules nothing, and the round's one count runs it, so each round
-  *     is exactly ONE Spark job (the activity count in voting mode, a plain
-  *     count of the new checkpoint in fixed-iteration mode), after which
-  *     the previous state is released.
+  *   - Rounds run on the loop driver (`checkpointing.loop`, which states
+  *     the round rule): one job per round.
   *   - Messages of the same target direction are packed into ONE projection
   *     (a column per message name) instead of the reference's
   *     per-message-struct `union_by_name` workaround (`pregel.rs:441-464`);
@@ -155,7 +157,7 @@ class Pregel(graph: GraphFrame) extends Serializable {
           "checkpoint eviction would delete source data")
       spark.sparkContext.setCheckpointDir(dir)
     }
-    val shufflePartitions = org.apache.spark.sql.graft.checkpointing.shufflePartitions(spark)
+    val shufflePartitions = checkpointing.shufflePartitions(spark)
     // Local checkpoints DECLARE their id-partitioning (made true by the
     // repartition right before, which the planner drops when the round's
     // message-delivery join already produced it), so the state⋈edges and
@@ -170,17 +172,17 @@ class Pregel(graph: GraphFrame) extends Serializable {
     // localCheckpointHashPartitioned already builds its LogicalRDD fresh.
     def ckpt(df: DataFrame): DataFrame =
       if (resolvedReliableDir.isDefined)
-        org.apache.spark.sql.graft.checkpointing.dropLeafStats(df.checkpoint(eager = false))
+        checkpointing.dropLeafStats(df.checkpoint(eager = false))
       else
-        org.apache.spark.sql.graft.checkpointing.localCheckpointHashPartitioned(
+        checkpointing.localCheckpointHashPartitioned(
           df.repartition(shufflePartitions, col(ID)), Seq(ID), shufflePartitions, eager = false)
 
     // ---- init state: vertex columns applied sequentially (later init
     // expressions may reference earlier ones), then voting + participation.
-    var state = graph.vertices
-    vertexCols.foreach(vc => state = state.withColumn(vc.name, vc.init))
-    votingCol.foreach(ac => state = state.withColumn(ac, lit(true)))
-    participation.foreach(p => state = state.withColumn(p.name, p.init))
+    var init = graph.vertices
+    vertexCols.foreach(vc => init = init.withColumn(vc.name, vc.init))
+    votingCol.foreach(ac => init = init.withColumn(ac, lit(true)))
+    participation.foreach(p => init = init.withColumn(p.name, p.init))
 
     // ---- loop-invariant edges: project with edge prefixes, co-partition by
     // the join key once, sort within partitions, checkpoint. At cluster
@@ -193,7 +195,7 @@ class Pregel(graph: GraphFrame) extends Serializable {
     val edgeSrc = s"${EDGE_P}_${GraphFrame.SRC}"
     val edgesProjected = graph.edges
       .select(edgeCols.map(n => col(n).as(s"${EDGE_P}_$n")): _*)
-    val edges = org.apache.spark.sql.graft.checkpointing.localCheckpointHashPartitioned(
+    val edges = checkpointing.localCheckpointHashPartitioned(
       if (edgesPrePartitioned) edgesProjected
       else edgesProjected.repartition(shufflePartitions, col(edgeSrc)),
       Seq(edgeSrc), shufflePartitions, eager = false)
@@ -208,17 +210,13 @@ class Pregel(graph: GraphFrame) extends Serializable {
     // vertex property columns are visible to messages in iteration 1 only —
     // reference semantics (`pregel.rs:266-270`, `440-499`). Lazy like every
     // round's checkpoint: the first round's action materializes it.
-    state = ckpt(state)
+    val state0 = ckpt(init)
 
     val dstTargeted = msgs.filter(m => m.direction != MessageDirection.DstToSrc)
     val srcTargeted = msgs.filter(m => m.direction != MessageDirection.SrcToDst)
 
-    var iteration = 0
     val limit = maxIter.getOrElse(Int.MaxValue)
-    var converged = false
-    while (iteration < limit && !converged) {
-      iteration += 1
-
+    val looped = checkpointing.loop(Step(state0, Nil), limit, "pregel") { (state, _) =>
       val srcProjection = state.columns.toSeq.map(n => col(n).as(s"${SRC_P}_$n"))
       val srcState = (participation, useDestState) match {
         case (Some(p), false) => state.filter(col(p.name)).select(srcProjection: _*)
@@ -300,28 +298,17 @@ class Pregel(graph: GraphFrame) extends Serializable {
         .join(aggregated.withColumnRenamed(ID, AM_ID), col(ID) === col(AM_ID), "left")
         .drop(AM_ID)
 
-      // LAZY checkpoint: its static plan runs as stages of the round's one
-      // action below, which materializes it before the previous state is
-      // released.
-      val previous = state
-      state = ckpt(withMessages.select(updateCols: _*))
-
       // The round's ONE job: the active count in voting mode, otherwise a
-      // plain count that only materializes the checkpoint.
-      val counted = votingCol.fold(state)(ac => state.filter(col(ac)))
-      val active = org.apache.spark.sql.graft.checkpointing.roundCounts(counted).head
-      if (votingCol.isDefined && active == 0) converged = true
-      // By here the new checkpoint is materialized. Release is the REAL
-      // one: localCheckpoint blocks belong to the RDD and plain
-      // Dataset.unpersist never reaches them (CacheManager no-op).
-      org.apache.spark.sql.graft.checkpointing.release(previous)
-    }
+      // plain count that only materializes the new state.
+      val next = ckpt(withMessages.select(updateCols: _*))
+      Step(next, Seq(votingCol.fold(next)(ac => next.filter(col(ac)))))
+    } { r => r.round >= limit || (votingCol.isDefined && r.counts == Seq(0L)) }
 
-    org.apache.spark.sql.graft.checkpointing.release(edges)
+    checkpointing.release(edges)
     val result =
-      if (includeDebugColumns) state
-      else state.select((vertexCols.map(vc => col(vc.name)) :+ col(ID)): _*)
-    PregelResult(result, iteration)
+      if (includeDebugColumns) looped.state
+      else looped.state.select((vertexCols.map(vc => col(vc.name)) :+ col(ID)): _*)
+    PregelResult(result, looped.iterations, looped.rounds)
   }
 }
 

@@ -156,12 +156,96 @@ object checkpointing {
     bounds.zip(bounds.tail).map { case (from, until) => perPartition.slice(from, until).sum }
   }
 
+  /** One loop round's record: its number (0 is the initial state), the
+    * counts of the frames it counted and its wall time. Every number is
+    * one the driver already holds: recording it runs no job.
+    */
+  final case class RoundStat(round: Int, counts: Seq[Long], wallMs: Long)
+
+  /** What a round built: the next loop state, the frames its one job
+    * counts, and the scratch checkpoints it made on the way. The counted
+    * frames must read every frame of `next`, so that the count
+    * materializes the whole new state.
+    */
+  final case class Step[S](next: S, count: Seq[DataFrame], scratch: Seq[DataFrame] = Nil)
+
+  /** The checkpointed frames a loop state holds: one frame, or a pair or
+    * triple of them.
+    */
+  final class Frames[S](val of: S => Seq[DataFrame])
+  object Frames {
+    implicit val one: Frames[DataFrame] = new Frames(Seq(_))
+    implicit val two: Frames[(DataFrame, DataFrame)] = new Frames(s => Seq(s._1, s._2))
+    implicit val three: Frames[(DataFrame, DataFrame, DataFrame)] =
+      new Frames(s => Seq(s._1, s._2, s._3))
+  }
+
+  /** A finished loop: its last state, the rounds it ran after the initial
+    * state, and one [[RoundStat]] per counted round.
+    */
+  final case class Looped[S](state: S, iterations: Int, rounds: Seq[RoundStat]) {
+    def last: RoundStat = rounds.last
+
+    /** The one frame of the last state the caller goes on reading; the
+      * state's other frames are released.
+      */
+    def keep(pick: S => DataFrame)(implicit frames: Frames[S]): DataFrame = {
+      val kept = pick(state)
+      frames.of(state).filterNot(_ eq kept).foreach(release)
+      kept
+    }
+  }
+
+  /** The round driver every iterative loop runs on. A round is:
+    *   1. `step(state, previous round)` builds the next state from LAZY
+    *      checkpoints, which run nothing when built;
+    *   2. ONE non-adaptive job counts the frames the step names
+    *      ([[roundCounts]]), running every checkpoint of the round and its
+    *      shuffles as stages of that job;
+    *   3. only then are the superseded state and the round's scratch
+    *      released. The order is a correctness condition: a released
+    *      local checkpoint cannot be recomputed, and before the count the
+    *      new state is still a plan that reads the old one. After it, at
+    *      most two state block sets are live.
+    * Without the per-round action the unmaterialized checkpoints would
+    * chain across all rounds into one job whose task graph grows with the
+    * round count.
+    *
+    * `init.count` (when non-empty) is counted as round 0, releasing
+    * `init.scratch` after it. `stop` is asked after round 0 and after every
+    * round; a loop that would run round `maxRounds + 1` fails, naming
+    * `what`. A frame the next state carries over is never released.
+    */
+  def loop[S](init: Step[S], maxRounds: Int, what: String)(step: (S, RoundStat) => Step[S])(
+      stop: RoundStat => Boolean)(implicit frames: Frames[S]): Looped[S] = {
+    def finish(round: Int, started: Long, held: S, s: Step[S]): RoundStat = {
+      val counts = if (s.count.isEmpty) Nil else roundCounts(s.count: _*)
+      val kept = frames.of(s.next)
+      (frames.of(held) ++ s.scratch).filterNot(f => kept.exists(_ eq f)).foreach(release)
+      RoundStat(round, counts, (System.nanoTime() - started) / 1000000)
+    }
+    require(init.count.nonEmpty || init.scratch.isEmpty,
+      s"$what: initial scratch can only be released after a round-0 count")
+    var last = finish(0, System.nanoTime(), init.next, init)
+    val rounds = Vector.newBuilder[RoundStat]
+    if (init.count.nonEmpty) rounds += last
+    var state = init.next
+    while (!stop(last)) {
+      val round = last.round + 1
+      require(round <= maxRounds, s"$what exceeded $maxRounds rounds")
+      val started = System.nanoTime()
+      val s = step(state, last)
+      require(s.count.nonEmpty, s"$what: a round must count its new state")
+      last = finish(round, started, state, s)
+      rounds += last
+      state = s.next
+    }
+    Looped(state, last.round, rounds.result())
+  }
+
   def localCheckpointHashPartitioned(
-      df: DataFrame, keys: Seq[String], numParts: Int, eager: Boolean,
-      sortWithinPartitions: Boolean = true): DataFrame = {
-    val sorted =
-      if (sortWithinPartitions) df.sortWithinPartitions(keys.map(col): _*) else df
-    val qe = execution(sorted)
+      df: DataFrame, keys: Seq[String], numParts: Int, eager: Boolean): DataFrame = {
+    val qe = execution(df.sortWithinPartitions(keys.map(col): _*))
     var rdd = checkpointRows(qe, eager)
     val rows = if (rdd.getNumPartitions == 0) {
       // A provably-empty frame can plan to a zero-partition scan (AQE's
@@ -189,9 +273,8 @@ object checkpointing {
     val keyAttrs = keys.map(k =>
       output.find(_.name == k).getOrElse(
         throw new IllegalArgumentException(s"key column '$k' not in ${output.map(_.name)}")))
-    val ordering: Seq[SortOrder] =
-      if (sortWithinPartitions) keyAttrs.map(a => SortOrder(a, Ascending)) else Nil
-    ofRdd(qe, rdd, HashPartitioning(keyAttrs, numParts), ordering, rows, exact = true)
+    ofRdd(qe, rdd, HashPartitioning(keyAttrs, numParts),
+      keyAttrs.map(a => SortOrder(a, Ascending)), rows, exact = true)
   }
 
   /** A LAZY checkpoint with no statistics: loop state (see the object
