@@ -85,7 +85,7 @@ class Hits(graph: GraphFrame) {
         .join(hub.withColumnRenamed(ID, "__h_id"), col(ID) === col("__h_id"), "left")
         .select(col(ID), col("auth"), guarded("__new_hub", "__nh_cnt", "hub").as("hub")))
       Step(next, Seq(next), scratch = Seq(withAuth))
-    }(_.round == iters).state
+    }(_ => false).state
     if (!normalize) state
     else {
       // One global aggregate; the 1-row norm frame broadcast-joins back

@@ -105,7 +105,7 @@ class HyperBall(graph: GraphFrame) {
     checkpointing.loop(Step(initState(), Nil), r, "hyperball") { (state, _) =>
       val next = checkpointing.localCheckpointNoStats(mergeRound(state, edges), eager = false)
       Step(next, Seq(next))
-    }(_.round == r).state
+    }(_ => false).state
   }
 
   /** The NEIGHBORHOOD FUNCTION and effective diameter — HyperANF's

@@ -64,8 +64,10 @@ object KTruss {
     * An exact count does not compound (see `checkpointing`). Eager, so the
     * enumeration joins plan adaptively: as lazy static rounds the peels
     * ran 3.3x slower at `ScaleBench 262144 1048576 ktruss` (SCALE_RECORD.md).
+    * The loop driver records the counts, so a round runs no counting job.
     */
-  private def ckpt(df: DataFrame): DataFrame = checkpointing.localCheckpointCounted(df)._1
+  private def counted(df: DataFrame): (DataFrame, Long) = checkpointing.localCheckpointCounted(df)
+  private def ckpt(df: DataFrame): DataFrame = counted(df)._1
 
   /** Canonical undirected simple edges `[a, b]`, a < b. */
   private def canonical(edges: DataFrame): DataFrame =
@@ -76,10 +78,10 @@ object KTruss {
     * degree-oriented Schank-Wagner enumeration (wedges expand only from
     * the (degree, id)-smaller endpoint, so wedge volume is O(m^1.5)
     * regardless of skew). Returns `[a, b, support]` covering EVERY edge of
-    * `cur` (zero-support edges included), and the oriented-edge checkpoint
-    * it read, the caller's to release.
+    * `cur` (zero-support edges included) with its row count, and the
+    * oriented-edge checkpoint it read, the caller's to release.
     */
-  private def triangleSupport(cur: DataFrame): (DataFrame, DataFrame) = {
+  private def triangleSupport(cur: DataFrame): (DataFrame, Long, DataFrame) = {
     val sym = cur.select(col("a").as("u"), col("b").as("v"))
       .unionAll(cur.select(col("b").as("u"), col("a").as("v")))
     val deg = sym.groupBy(col("u").as("__kt_v")).agg(count(lit(1)).as("__kt_d"))
@@ -102,10 +104,9 @@ object KTruss {
       .unionAll(tris.select(least(col("x"), col("z")).as("a"), greatest(col("x"), col("z")).as("b")))
       .unionAll(tris.select(least(col("y"), col("z")).as("a"), greatest(col("y"), col("z")).as("b")))
       .groupBy("a", "b").agg(count(lit(1)).as("support"))
-    val out = cur.join(credits, Seq("a", "b"), "left")
-      .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support"))
-      .transform(ckpt)
-    (out, oriented)
+    val (out, n) = counted(cur.join(credits, Seq("a", "b"), "left")
+      .select(col("a"), col("b"), coalesce(col("support"), lit(0L)).as("support")))
+    (out, n, oriented)
   }
 
   /** The surviving edges `[src, dst, support]` of a support table. */
@@ -114,8 +115,8 @@ object KTruss {
 
   /** Incremental-support peel (default). Rounds run on the loop driver
     * (`checkpointing.loop`), which releases them. The state is `sup` with
-    * its split into removed edges and survivors, which the driver counts
-    * together; round 0 splits the seed enumeration.
+    * its split into removed edges and survivors, whose counts the split's
+    * checkpoints hold; round 0 splits the seed enumeration.
     */
   def run(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
@@ -123,12 +124,12 @@ object KTruss {
     // Loop invariant: `sup` holds the support of every edge of the current
     // graph, measured IN the current graph.
     def split(sup: DataFrame, scratch: Seq[DataFrame]): Step[(DataFrame, DataFrame, DataFrame)] = {
-      val removed = sup.filter(col("support") < k - 2).select("a", "b").transform(ckpt)
-      val survivors = sup.filter(col("support") >= k - 2).transform(ckpt)
-      Step((sup, removed, survivors), Seq(removed, survivors), scratch)
+      val (removed, removedCount) = counted(sup.filter(col("support") < k - 2).select("a", "b"))
+      val (survivors, survivorCount) = counted(sup.filter(col("support") >= k - 2))
+      Step((sup, removed, survivors), Nil, scratch, counted = Seq(removedCount, survivorCount))
     }
     val cur0 = canonical(edges).transform(ckpt)
-    val (sup0, oriented0) = triangleSupport(cur0)
+    val (sup0, _, oriented0) = triangleSupport(cur0)
     val peeled = checkpointing.loop(split(sup0, Seq(cur0, oriented0)), maxRounds - 1, "ktruss") {
       case ((sup, removed, survivors), previous) =>
         val Seq(removedCount, survivorCount) = previous.counts
@@ -141,7 +142,7 @@ object KTruss {
           // at 8.4 M edges peeling to 1512. Recount from scratch and let
           // later (gradual) rounds take the incremental path.
           val surEdges = survivors.select("a", "b").transform(ckpt)
-          val (next, oriented) = triangleSupport(surEdges)
+          val (next, _, oriented) = triangleSupport(surEdges)
           split(next, Seq(surEdges, oriented))
         } else {
           // Triangles of the PRE-removal graph touching >= 1 removed edge:
@@ -185,7 +186,7 @@ object KTruss {
               (col("support") - coalesce(col("loss"), lit(0L))).as("support"))
             .transform(ckpt), Nil)
         }
-    } { r => r.counts.head == 0 || r.round + 1 >= maxRounds }
+    }(_.counts.head == 0)
     result(peeled.keep(_._3))
   }
 
@@ -193,22 +194,22 @@ object KTruss {
     * scratch each round. Same results as [[run]]; per-round cost is the
     * whole graph's triangle enumeration — the comparison arm for the
     * ScaleBench deep-fixpoint row. The state is the surviving edges and
-    * their support table; the driver counts the survivors and the edges a
-    * round removed, and the peel is stable when it removed none.
+    * the support table they were cut from; a round's count is the edges it
+    * removed, and the peel is stable when it removed none. Round 0
+    * enumerates the canonical edges.
     */
   def runReenumerate(edges: DataFrame, k: Int, maxRounds: Int): DataFrame = {
     require(k >= 2, s"k must be >= 2, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    // The state is (current edges, their support): round 0 has no support
-    // yet, and the first round enumerates the canonical edges.
+    def enumerate(cur: DataFrame, scratch: Seq[DataFrame]): Step[(DataFrame, DataFrame)] = {
+      val (supported, n, oriented) = triangleSupport(cur)
+      val (next, kept) = counted(supported.filter(col("support") >= k - 2).select("a", "b"))
+      Step((next, supported), Nil, scratch :+ oriented, counted = Seq(n - kept))
+    }
     val cur0 = canonical(edges).transform(ckpt)
-    val peeled = checkpointing.loop(Step((cur0, cur0), Nil), maxRounds, "ktruss") {
-      case ((cur, _), _) =>
-        val (supported, oriented) = triangleSupport(cur)
-        val next = supported.filter(col("support") >= k - 2).select("a", "b").transform(ckpt)
-        Step((next, supported), Seq(next, supported.filter(col("support") < k - 2)),
-          scratch = Seq(oriented))
-    } { r => r.round >= maxRounds || r.counts.lift(1).contains(0L) }
+    val peeled = checkpointing.loop(enumerate(cur0, Seq(cur0)), maxRounds - 1, "ktruss") {
+      case ((cur, _), _) => enumerate(cur, Nil)
+    }(_.counts.head == 0)
     result(peeled.keep(_._2).filter(col("support") >= k - 2))
   }
 }

@@ -81,6 +81,6 @@ class KatzCentrality(graph: GraphFrame) {
         .select(col(ID),
           (lit(1000000L) + expr(s"__kz_g div $aDen")).as("katz")))
       Step(next, Seq(next))
-    }(_.round == iters).state
+    }(_ => false).state
   }
 }

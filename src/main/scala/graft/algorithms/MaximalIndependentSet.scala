@@ -367,10 +367,7 @@ class MaximalIndependentSet(graph: GraphFrame) {
         // member delta.
         Step((nextEdges, nextVertices), Seq(nextEdges, nextVertices, newMembers),
           scratch = Seq(msgs, probs, joinedMis, removed))
-    } { r => r.counts match {
-      case Seq(eLeft, vLeft, _) => eLeft == 0 || cutover(eLeft, vLeft)
-      case _ => false
-    } }
+    } { r => r.counts(0) == 0 || cutover(r.counts(0), r.counts(1)) }
     val (edges, verticesLeft) = looped.state
     val Seq(eLeft, vLeft, _) = looped.last.counts
     var iteration = looped.iterations

@@ -35,6 +35,9 @@ import org.apache.spark.sql.graft.checkpointing.Step
   */
 object StronglyConnectedComponents {
 
+  /** Every loop frame is a lazy stats-free checkpoint. */
+  private def ckpt(df: DataFrame): DataFrame = checkpointing.localCheckpointNoStats(df, eager = false)
+
   /** Hybrid entry point, matching every other iterative algorithm here:
     * at or below `smallGraphThreshold` edges the graph is collected and
     * decomposed with an ITERATIVE driver Tarjan (exact, one pass, no
@@ -110,9 +113,9 @@ object StronglyConnectedComponents {
     */
   private[algorithms] def runDistributed(e0: DataFrame,
       maxFixpointIter: Int = 200): DataFrame = {
-    // Every loop frame is a lazy stats-free checkpoint; all three loops run
-    // on the loop driver (`checkpointing.loop`, which states the round rule).
-    def ckpt(df: DataFrame): DataFrame = checkpointing.localCheckpointNoStats(df, eager = false)
+    // All three loops run on the loop driver (`checkpointing.loop`, which
+    // states the round rule).
+    val parts = checkpointing.shufflePartitions(e0.sparkSession)
     val edges0 = ckpt(e0)
     // Endpoints derive from the CHECKPOINTED edges with one generate — the
     // union form re-ran e0's (arbitrarily expensive) lineage once per
@@ -138,7 +141,7 @@ object StronglyConnectedComponents {
           .select(col("src"), col("dst"), col("src_color").as("ecolor")))
         val reached = backward(sameColor,
           ckpt(colors.filter(col("id") === col("color")).select("id", "color")),
-          maxFixpointIter)
+          maxFixpointIter, parts)
         // Peel: reached(id, color) is the union of the roots' SCCs.
         val sccs = reached.select(col("id"), col("color").as("scc_id"))
         val nextRemaining = ckpt(remaining.join(sccs, Seq("id"), "left_anti"))
@@ -146,11 +149,13 @@ object StronglyConnectedComponents {
           .join(sccs.select(col("id").as("src")), Seq("src"), "left_anti")
           .join(sccs.select(col("id").as("dst")), Seq("dst"), "left_anti")
           .select("src", "dst"))
-        val nextAssigned = ckpt(assigned.unionAll(sccs))
+        // A union's partitions are its inputs' together: coalescing keeps the
+        // assigned frame, which every round counts, at the shuffle width.
+        val nextAssigned = ckpt(assigned.unionAll(sccs).coalesce(parts))
         Step((nextEdges, nextRemaining, nextAssigned),
           Seq(nextRemaining, nextEdges, nextAssigned),
           scratch = Seq(colors, sameColor, reached))
-    }(_.counts.head == 0).keep(_._3)
+    }(_.counts.head == 0).converged.keep(_._3)
   }
 
   /** FORWARD max-color fixpoint: `[id, color, chg]`, `color` the largest
@@ -160,38 +165,35 @@ object StronglyConnectedComponents {
     * is needed to diff them.
     */
   private def forward(remEdges: DataFrame, remaining: DataFrame, maxRounds: Int): DataFrame = {
-    val init = checkpointing.localCheckpointNoStats(
-      remaining.select(col("id"), col("id").as("color")), eager = false)
+    val init = ckpt(remaining.select(col("id"), col("id").as("color")))
     checkpointing.loop(Step(init, Nil), maxRounds, "scc: forward fixpoint") { (colors, _) =>
       val pushed = remEdges.join(colors, remEdges("src") === colors("id"))
         .groupBy(col("dst").as("id")).agg(max("color").as("in_color"))
       val inColor = coalesce(col("in_color"), lit(Long.MinValue))
-      val next = checkpointing.localCheckpointNoStats(
-        colors.join(pushed, Seq("id"), "left")
-          .select(col("id"), greatest(col("color"), inColor).as("color"),
-            (inColor > col("color")).as("chg")),
-        eager = false)
+      val next = ckpt(colors.join(pushed, Seq("id"), "left")
+        .select(col("id"), greatest(col("color"), inColor).as("color"),
+          (inColor > col("color")).as("chg")))
       Step(next, Seq(next.filter(col("chg"))))
-    }(_.counts == Seq(0L)).state
+    }(_.counts.head == 0).converged.state
   }
 
   /** BACKWARD walk from the color roots over same-color reverse edges, to
     * a fixpoint: `[id, color, fresh]`. The root's color class ∩ its
     * backward-reachable set is exactly the root's SCC. A round keeps the
     * rows it reached before and flags the ones it adds, so its one count
-    * is the rows it added.
+    * is the rows it added; coalescing the union to `parts` keeps the state
+    * from widening by one shuffle width per round.
     */
-  private def backward(sameColor: DataFrame, roots: DataFrame, maxRounds: Int): DataFrame =
+  private def backward(sameColor: DataFrame, roots: DataFrame, maxRounds: Int,
+      parts: Int): DataFrame =
     checkpointing.loop(Step(roots, Nil), maxRounds, "scc: backward fixpoint") { (reached, _) =>
       val known = reached.select("id", "color")
       val added = sameColor
         .join(known, sameColor("dst") === known("id") && sameColor("ecolor") === known("color"))
         .select(col("src").as("id"), col("ecolor").as("color")).distinct()
         .join(known, Seq("id", "color"), "left_anti")
-      val next = checkpointing.localCheckpointNoStats(
-        known.withColumn("fresh", lit(false))
-          .unionAll(added.withColumn("fresh", lit(true))),
-        eager = false)
+      val next = ckpt(known.withColumn("fresh", lit(false))
+        .unionAll(added.withColumn("fresh", lit(true))).coalesce(parts))
       Step(next, Seq(next.filter(col("fresh"))))
-    }(_.counts == Seq(0L)).state
+    }(_.counts.head == 0).converged.state
 }

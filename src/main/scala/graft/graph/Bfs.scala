@@ -60,8 +60,9 @@ object Bfs {
     // expands one edge hop into an EAGER checkpoint (its exact row count
     // lets the next level's join broadcast a small frontier; as lazy static
     // levels the search ran 1.8x slower at `ScaleBench 262144 1048576 bfs`,
-    // SCALE_RECORD.md). The driver counts the paths and the paths that
-    // reached a to-vertex. The search stops at the first level that reaches
+    // SCALE_RECORD.md). The level's counts are its paths, which the
+    // checkpoint counted, and the paths that reached a to-vertex, the
+    // driver's one job. The search stops at the first level that reaches
     // one, or when the frontier dies.
     val frontier0 = fromV.select(col("from"), col("__bfs_id").as("__bfs_last"))
     val searched = checkpointing.loop(Step(frontier0, Nil), maxPathLength, "bfs") {
@@ -70,15 +71,14 @@ object Bfs {
         val hop = e.select(col(GraphFrame.SRC).as("__bfs_src"),
           col(GraphFrame.DST).as("__bfs_dst"),
           struct(e.columns.map(col).toIndexedSeq: _*).as(s"e${level - 1}"))
-        val (expanded, _) = checkpointing.localCheckpointCounted(frontier.drop("__bfs_hit")
+        val (expanded, paths) = checkpointing.localCheckpointCounted(frontier.drop("__bfs_hit")
           .join(hop, col("__bfs_last") === col("__bfs_src"))
           .join(vStruct.withColumnRenamed("__bfs_v", s"v$level"),
             col("__bfs_dst") === col("__bfs_id"))
           .drop("__bfs_last", "__bfs_src", "__bfs_id")
           .withColumnRenamed("__bfs_dst", "__bfs_last"))
-        Step(expanded, Seq(expanded, expanded.filter(col("__bfs_hit"))))
-    } { r => r.round >= maxPathLength || r.counts.headOption.contains(0L) ||
-      r.counts.lift(1).exists(_ > 0) }
+        Step(expanded, Seq(expanded.filter(col("__bfs_hit"))), counted = Seq(paths))
+    } { r => r.counts(0) == 0 || r.counts(1) > 0 }
     val level = searched.iterations
     if (searched.rounds.lastOption.exists(_.counts(1) > 0)) {
       // Rename the terminal vertex struct to `to` and order columns

@@ -302,7 +302,7 @@ class Pregel(graph: GraphFrame) extends Serializable {
       // plain count that only materializes the new state.
       val next = ckpt(withMessages.select(updateCols: _*))
       Step(next, Seq(votingCol.fold(next)(ac => next.filter(col(ac)))))
-    } { r => r.round >= limit || (votingCol.isDefined && r.counts == Seq(0L)) }
+    } { r => votingCol.isDefined && r.counts.head == 0 }
 
     checkpointing.release(edges)
     val result =

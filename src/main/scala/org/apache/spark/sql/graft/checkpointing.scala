@@ -163,11 +163,14 @@ object checkpointing {
   final case class RoundStat(round: Int, counts: Seq[Long], wallMs: Long)
 
   /** What a round built: the next loop state, the frames its one job
-    * counts, and the scratch checkpoints it made on the way. The counted
-    * frames must read every frame of `next`, so that the count
-    * materializes the whole new state.
+    * counts, the scratch checkpoints it made on the way, and any counts it
+    * already holds (an eager checkpoint's row count), which come first in
+    * the round's counts and cost no job. Frames whose count the step holds
+    * are materialized already; the counted frames must read every other
+    * frame of `next`, so that the count materializes the whole new state.
     */
-  final case class Step[S](next: S, count: Seq[DataFrame], scratch: Seq[DataFrame] = Nil)
+  final case class Step[S](next: S, count: Seq[DataFrame], scratch: Seq[DataFrame] = Nil,
+      counted: Seq[Long] = Nil)
 
   /** The checkpointed frames a loop state holds: one frame, or a pair or
     * triple of them.
@@ -181,10 +184,17 @@ object checkpointing {
   }
 
   /** A finished loop: its last state, the rounds it ran after the initial
-    * state, and one [[RoundStat]] per counted round.
+    * state, one [[RoundStat]] per counted round, and whether `stop` ended
+    * it (`stopped`) rather than the round cap.
     */
-  final case class Looped[S](state: S, iterations: Int, rounds: Seq[RoundStat]) {
+  final case class Looped[S](state: S, iterations: Int, rounds: Seq[RoundStat],
+      stopped: Boolean, what: String) {
     def last: RoundStat = rounds.last
+
+    /** This loop, which must have reached its fixpoint: one cut by the
+      * round cap fails here, naming the loop.
+      */
+    def converged: Looped[S] = { require(stopped, s"$what exceeded $iterations rounds"); this }
 
     /** The one frame of the last state the caller goes on reading; the
       * state's other frames are released.
@@ -197,11 +207,13 @@ object checkpointing {
   }
 
   /** The round driver every iterative loop runs on. A round is:
-    *   1. `step(state, previous round)` builds the next state from LAZY
-    *      checkpoints, which run nothing when built;
+    *   1. `step(state, previous round)` builds the next state, from LAZY
+    *      checkpoints, which run nothing when built, or from eager ones
+    *      whose counts it passes on;
     *   2. ONE non-adaptive job counts the frames the step names
-    *      ([[roundCounts]]), running every checkpoint of the round and its
-    *      shuffles as stages of that job;
+    *      ([[roundCounts]]), running every lazy checkpoint of the round and
+    *      its shuffles as stages of that job. A step that names no frames
+    *      (its eager checkpoints ran and counted themselves) runs none;
     *   3. only then are the superseded state and the round's scratch
     *      released. The order is a correctness condition: a released
     *      local checkpoint cannot be recomputed, and before the count the
@@ -211,36 +223,40 @@ object checkpointing {
     * chain across all rounds into one job whose task graph grows with the
     * round count.
     *
-    * `init.count` (when non-empty) is counted as round 0, releasing
-    * `init.scratch` after it. `stop` is asked after round 0 and after every
-    * round; a loop that would run round `maxRounds + 1` fails, naming
-    * `what`. A frame the next state carries over is never released.
+    * Round 0 is the initial state; it is counted when `init` names counts,
+    * and `init.scratch` is released after that count. `stop` is asked after
+    * every counted round, so its `counts` are the step's. The loop ends
+    * when `stop` holds or after `maxRounds` rounds, whichever is first; a
+    * loop that must reach its fixpoint asks [[Looped.converged]], which
+    * fails at the cap naming `what`. A frame the next state carries over is
+    * never released.
     */
   def loop[S](init: Step[S], maxRounds: Int, what: String)(step: (S, RoundStat) => Step[S])(
       stop: RoundStat => Boolean)(implicit frames: Frames[S]): Looped[S] = {
     def finish(round: Int, started: Long, held: S, s: Step[S]): RoundStat = {
-      val counts = if (s.count.isEmpty) Nil else roundCounts(s.count: _*)
+      val counts = s.counted ++ (if (s.count.isEmpty) Nil else roundCounts(s.count: _*))
       val kept = frames.of(s.next)
       (frames.of(held) ++ s.scratch).filterNot(f => kept.exists(_ eq f)).foreach(release)
       RoundStat(round, counts, (System.nanoTime() - started) / 1000000)
     }
-    require(init.count.nonEmpty || init.scratch.isEmpty,
+    val counted = init.count.nonEmpty || init.counted.nonEmpty
+    require(counted || init.scratch.isEmpty,
       s"$what: initial scratch can only be released after a round-0 count")
     var last = finish(0, System.nanoTime(), init.next, init)
     val rounds = Vector.newBuilder[RoundStat]
-    if (init.count.nonEmpty) rounds += last
+    if (counted) rounds += last
+    var stopped = counted && stop(last)
     var state = init.next
-    while (!stop(last)) {
-      val round = last.round + 1
-      require(round <= maxRounds, s"$what exceeded $maxRounds rounds")
+    while (!stopped && last.round < maxRounds) {
       val started = System.nanoTime()
       val s = step(state, last)
-      require(s.count.nonEmpty, s"$what: a round must count its new state")
-      last = finish(round, started, state, s)
+      require(s.count.nonEmpty || s.counted.nonEmpty, s"$what: a round must count its new state")
+      last = finish(last.round + 1, started, state, s)
       rounds += last
       state = s.next
+      stopped = stop(last)
     }
-    Looped(state, last.round, rounds.result())
+    Looped(state, last.round, rounds.result(), stopped, what)
   }
 
   def localCheckpointHashPartitioned(

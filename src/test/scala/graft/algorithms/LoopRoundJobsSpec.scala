@@ -82,4 +82,13 @@ class LoopRoundJobsSpec extends AnyFunSuite with SparkTestHarness {
     assertSccJobs("mixed", tail(4) ++ chorded(5).map { case (s, d) => (s + 30, d + 30) } ++
       Seq((33L, 2L), (3L, 31L)))
   }
+
+  test("scc: a fixpoint cut by its round cap fails, naming the loop") {
+    // Color 21 takes five forward rounds to reach the end of the tail; the
+    // cap allows 3.
+    val es = Seq((20L, 21L), (21L, 20L), (21L, 1L)) ++ (1 until 5).map(i => (i.toLong, i + 1L))
+    val e = intercept[IllegalArgumentException](
+      StronglyConnectedComponents.runDistributed(frame(es), maxFixpointIter = 3))
+    assert(e.getMessage.contains("scc: forward fixpoint exceeded 3 rounds"), e.getMessage)
+  }
 }
