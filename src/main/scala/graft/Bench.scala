@@ -118,19 +118,11 @@ object Bench {
     // meaningless as a belt, and the host_suspect guard cannot catch
     // the clobber because a subset total is faster, not slower.
     val subset = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val board = subset match {
-      case Some(names) =>
-        val unknown = names -- SparkEntry.queries.keySet
-        require(unknown.isEmpty,
-          s"SPARK_GRAFT_QUERIES names unknown gates: ${unknown.mkString(", ")}")
-        SparkEntry.queries.view.filterKeys(names).toMap
-      case None => SparkEntry.queries
-    }
+    val board = graft.gates.Gates.listed(subset)
     // (name, single-shot sec, steady sec, error). A throwing query must not
     // masquerade as a fast one: its timing is still recorded but flagged in
     // "errors"; later reps are skipped once a query errors.
-    val results = board.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = board.map { case graft.gates.Gate(name, fn, _) =>
       var err: Option[String] = None
       val times = (1 to reps).flatMap { _ =>
         if (err.isDefined) None

@@ -1,15 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: each gate's result → parquet, plus
+  * oracle_sql.json (`SparkEntry.oracleSql`), for the driver's DuckDB
+  * compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    // Optional third arg: comma-separated query names (dev loop only; the
+    // Optional third arg: comma-separated gate names (dev loop only; the
     // driver always runs the full surface with two args).
-    val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
+    val gates = graft.gates.Gates.listed(args.lift(2))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkDefaults(SparkSession.builder()
       .master(s"local[$cpus]")
@@ -21,9 +22,7 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    gates.foreach { case graft.gates.Gate(name, fn, _) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

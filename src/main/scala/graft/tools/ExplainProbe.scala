@@ -1,7 +1,7 @@
 package graft.tools
 import org.apache.spark.sql.SparkSession
 
-/** Plan-audit handle: print the executed plan of named SparkEntry queries
+/** Plan-audit handle: print the executed plan of named gates
   * (default sf0.001) so operator plan shapes can be inspected without
   * writing a throwaway main. Usage:
   * `runMain graft.tools.ExplainProbe q03_join_inner_agg [more names...]`;
@@ -10,6 +10,8 @@ import org.apache.spark.sql.SparkSession
 object ExplainProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    val gates = graft.gates.Gates.select(
+      if (args.nonEmpty) args.toSeq else Seq("q01_groupby_agg"))
     // Same engine defaults + partition parameterization as Bench/Verify,
     // so dumped plans show the shapes the bench actually runs (a probe
     // session without SparkDefaults showed pre-optimization join
@@ -21,8 +23,7 @@ object ExplainProbe {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Profile.applyConfOverrides(spark)
-    val names = if (args.nonEmpty) args.toSeq else Seq("q01_groupby_agg")
-    names.foreach { n =>
+    gates.foreach { case graft.gates.Gate(n, run, _) =>
       // Operators that eagerly materialize inside CacheScope.scoped
       // (link prediction, the dedup pair builders) hide their real plan
       // behind the checkpoint — explaining the returned frame shows one
@@ -35,7 +36,7 @@ object ExplainProbe {
           org.apache.spark.sql.execution.FormattedMode))
       }
       try {
-        val df = graft.SparkEntry.queries(n)(spark, sfDir)
+        val df = run(spark, sfDir)
         println(s"===== $n (formatted) =====")
         println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))

@@ -2,10 +2,10 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.SparkEntry
+import graft.gates.Gates
 
 /** Ad-hoc per-query profiler: `runMain graft.tools.Profile q1 q2 ...` times
-  * each named [[SparkEntry.queries]] entry `SPARK_GRAFT_REPS` times (default
+  * each named gate of [[Gates]] `SPARK_GRAFT_REPS` times (default
   * 2) against `SPARK_GRAFT_SF_DIR`, printing per-rep wall seconds — the
   * inner loop for chasing a single query's regression without paying a full
   * bench sweep. `SPARK_GRAFT_EXPLAIN=1` additionally dumps the formatted
@@ -31,6 +31,7 @@ object Profile {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt
     val explain = sys.env.get("SPARK_GRAFT_EXPLAIN").contains("1")
+    val gates = Gates.select(args.toSeq)
     val spark = graft.SparkDefaults(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus))
@@ -40,9 +41,7 @@ object Profile {
       sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
     applyConfOverrides(spark)
     spark.range(1000000L).selectExpr("sum(id)").collect()
-    args.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query '$name'; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(", ")}"))
+    gates.foreach { case graft.gates.Gate(name, fn, _) =>
       if (explain) fn(spark, sfDir).explain("formatted")
       // Materialize EVERY output column exactly as Bench does — a bare
       // .count() lets Catalyst prune columns (and sometimes whole

@@ -23,8 +23,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Normalization replaces expression ids (`#123`, `#123L`), plan,
   * query-stage and codegen-stage ids, bracketed bare numbers and object
   * hash codes with `N`, random UUIDs and data-file names, epoch-millisecond
-  * timestamps (`T`) and temporary directories (`/TMP`), and drops lambda
-  * class numbers; `aliases` renames columns a change spelled differently.
+  * timestamps (`T`) and temporary directories (`/TMP`), drops lambda
+  * class numbers and sorts a file index's root paths; `aliases` renames
+  * columns a change spelled differently.
   * What stays can still differ between two runs: when both sides of a join
   * are equally small, adaptive execution picks the build side by which
   * finished first.
@@ -33,7 +34,7 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * plans as RDDs and appear only as the `Scan ExistingRDD` leaves that
   * later queries read.
   *
-  * `main` dumps the plans of `SparkEntry` gates, one file per gate plus
+  * `main` dumps the plans of the registry's gates, one file per gate plus
   * the dropped-hint count of each:
   * {{{
   * sbt "Test/runMain org.apache.spark.sql.graft.PlanCapture <sfDir> <outDir> [gate,...]"
@@ -54,9 +55,16 @@ object PlanCapture {
     "\\b\\d{13}\\b".r -> "T",
     "/[\\w.-]*\\d{9,}[\\w.-]*".r -> "/TMP")
 
+  /** A file index prints its root paths in listing order, which varies
+    * between runs; `normalize` sorts them.
+    */
+  private val rootPaths = "(InMemoryFileIndex\\(\\d+ paths\\)\\[)([^\\]]*)\\]".r
+
   def normalize(plan: String, aliases: Map[String, String] = Map.empty): String = {
     val ids = rules.foldLeft(plan) { case (s, (re, to)) => re.replaceAllIn(s, to) }
-    aliases.foldLeft(ids) { case (s, (from, to)) => s.replace(from, to) }
+    val paths = rootPaths.replaceAllIn(ids, m => Regex.quoteReplacement(
+      m.group(1) + m.group(2).split(", ").sorted.mkString(", ") + "]"))
+    aliases.foldLeft(paths) { case (s, (from, to)) => s.replace(from, to) }
   }
 
   /** `body`'s result and the normalized executed plans of the queries it
@@ -118,22 +126,25 @@ object PlanCapture {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = Paths.get(args(1))
-    val only: Option[Set[String]] = args.lift(2).map(_.split(',').toSet)
+    val gates = graft.gates.Gates.listed(args.lift(2))
     // Verify's session, with fixed paths so that both sides of a diff
     // print the same file locations, written as `<data>` and `<tmp>`.
+    // Spark cuts scan metadata (`DataFilters`, `PushedFilters`, ...) at
+    // `maxMetadataStringLength` before `normalize` replaces expression
+    // ids, so at the default width the cut moves with the ids' digit
+    // count; unbounded, normalization sees the whole string.
     val tmp = sys.props("java.io.tmpdir")
     val spark = graft.SparkDefaults(SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.shuffle.partitions", "4"))
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.maxMetadataStringLength", Int.MaxValue.toString)
       .config("spark.sql.warehouse.dir", s"$tmp/graft-plan-capture-warehouse")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(outDir)
-    val hints = graft.SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
+    val hints = gates.map { case graft.gates.Gate(name, fn, _) =>
         val (_, dropped) = droppedHints {
           val (_, ps) = plans(spark, Map(sfDir -> "<data>", tmp -> "<tmp>")) {
             try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
